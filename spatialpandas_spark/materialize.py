@@ -1,60 +1,42 @@
-"""Shared-branch materialization with a scale-appropriate strategy knob.
+"""The one way to pin an intermediate that more than one plan reads.
 
-Several operators compute an intermediate once and read it from MULTIPLE
-DataFrame branches of the same query (self-joins over signatures, probe
-chains, span metadata). Spark's AQE stage cache does not recognize
-re-resolved subtrees (fresh expression ids) as equal, so without an
-explicit materialization every branch re-runs the full subtree — measured
-in round 14 as a 2-4x recompute of Arrow signature passes.
+Spark re-runs a DataFrame's whole lineage for every branch and every
+action that reads it, and the AQE stage cache does not match re-resolved
+subtrees. Operators pin such intermediates with :func:`materialize`, and
+each call site states whether the pin is eager:
 
-Two mechanisms exist, with opposite trade-offs (optimization guide §5;
-round-14 VERDICT "What's wrong" #4):
+- ``eager=False`` — several branches of one query share one computation
+  of an expensive subtree (signature passes, probe sets, span metadata).
+  Nothing runs until the caller's action.
+- ``eager=True`` — the pinned rows must exist before the next plan is
+  built: fork points whose consumers must all see ONE partition layout
+  (sampled range exchanges, ``monotonically_increasing_id``), and
+  iterative loops whose lineage would otherwise grow every round.
 
-- ``localCheckpoint(eager=False)``: truncates lineage into one shared RDD
-  node; blocks live on executor block managers only. Cheapest locally and
-  its RDD is cleaned up by the ContextCleaner when the query is garbage
-  collected — no cache-manager leak across repeated calls. Hazard at
-  cluster scale: an executor loss mid-query makes the blocks
-  unrecoverable (no lineage to recompute from), failing the job; lazy
-  checkpoints are additionally fragile under speculative re-execution.
-- ``persist(StorageLevel.MEMORY_AND_DISK)``: the logical-plan cache routes
-  every branch through one InMemoryRelation while KEEPING lineage, so an
-  executor loss recomputes only the lost partitions. The right default on
-  a real cluster. Cost: cached plans are held by the session's
-  CacheManager until ``unpersist()`` — for query-internal intermediates
-  (which the caller cannot unpersist) a long-lived session accumulates
-  entries, so local bench/test loops keep the checkpoint default.
+The session picks the checkpoint kind; no option does:
 
-``SPARK_GRAFT_MATERIALIZE`` selects the strategy (``checkpoint`` locally —
-the default, matching the bench contract — ``persist`` for cluster
-deployments). Both pin the subtree to ONE materialization serving all
-branches; plan-shape tests assert that property, not the mechanism.
-
-Why the default must stay ``checkpoint`` for benchmarking: the
-CacheManager matches cached relations by LOGICAL PLAN equality, so with
-``persist`` a second invocation that rebuilds the same query in the same
-session silently reads the first invocation's cached data instead of
-recomputing. In production that cross-query reuse is a feature; in a
-timed benchmark it is result caching across runs (the r15 env-A/B read
-0.47x on b8 under persist for exactly this reason — runs 2..n skipped
-the signature compute entirely — so that number is disqualified, not a
-win). ``localCheckpoint`` creates a fresh RDD per call and can never
-alias a previous invocation's results.
+- **No checkpoint dir** (local runs, tests, bench): a local checkpoint.
+  Blocks live unreplicated on the executors, so losing an executor fails
+  the job instead of recomputing. Each call pins a fresh RDD, so no
+  later query can read a stale copy.
+- **``sc.setCheckpointDir(...)`` set** (cluster deployments): a reliable
+  checkpoint written to that directory, which survives executor loss.
+  Cost: Spark writes it by recomputing the unpersisted RDD in a second
+  job, and a lazy pin may compute it once per reading branch in the
+  first action (later actions read the files).
+  ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` reclaims the
+  files once the pinned frame is garbage collected.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
-def materialize_branches(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` so every DataFrame branch that reads the result
-    shares one computation of its subtree (strategy per module docstring)."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "checkpoint")
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint(eager=False)
+def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Pin ``df`` so every reader shares one materialization (module
+    docstring: reliable checkpoint if the session has a checkpoint dir,
+    local checkpoint otherwise)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -75,7 +75,7 @@ from spatialpandas_spark.operators.dedup import word_shingles
 from spatialpandas_spark.operators.sampling import sample_hash
 from spatialpandas_spark.operators.sketch import kmv_sketch
 
-from spatialpandas_spark.materialize import materialize_branches
+from spatialpandas_spark.materialize import materialize
 
 _SIDECAR = "_decon_index.json"
 
@@ -239,7 +239,7 @@ def append_to_decon_index(bench: DataFrame, path: str) -> None:
     fresh = (
         _grouped_shingles(bench, p["text_col"], p["n"], groups)
         .join(store, groups + ["s"], "left_anti")
-        .transform(materialize_branches)  # consumed by bloom AND append
+        .transform(materialize, eager=False)  # consumed by bloom AND append
     )
     m, bk = p["bloom"]["m"], p["bloom"]["k"]
     new_words = build_bloom_words(
@@ -291,7 +291,8 @@ def rebuild_decon_index(
     base = path.rstrip("/")
     tmp = f"{base}.rebuild.tmp"
     groups = p["group_cols"]
-    store = spark.read.parquet(f"{base}/shingles").transform(materialize_branches)  # consumed by count, bloom build, and the staged write
+    # consumed by count, bloom build, and the staged write
+    store = materialize(spark.read.parquet(f"{base}/shingles"), eager=False)
     n_before = store.count()  # distinct per (groups, s) by invariant
     nsh = store.select("s").distinct().count()
     fpp = p["bloom"]["fpp"] if fpp is None else fpp
@@ -386,7 +387,7 @@ def screen_against_index(
     p = load_decon_params(path)
     groups = p["group_cols"]
     tc = text_col or p["text_col"]
-    bsk = probe_set(spark, path).transform(materialize_branches)
+    bsk = probe_set(spark, path).transform(materialize, eager=False)
     grams = docs.select(
         F.explode(word_shingles(F.col(tc), p["n"])).alias("s")
     )

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from spatialpandas_spark.functions.measures import _seq0
 
-from spatialpandas_spark.materialize import materialize_branches
+from spatialpandas_spark.materialize import materialize
 
 
 def content_hash(*cols: Column) -> Column:
@@ -206,12 +206,12 @@ def minhash_lsh_pairs(
     # AQE stage cache never recognizes the MapInPandas subtrees as equal
     # (measured round-14: the old repartition-as-materialization shape ran
     # the full shingle+signature pass once per branch — 2x, and 4x under
-    # the payload-light banding below). A lazy localCheckpoint pins the
+    # the payload-light banding below). A lazy checkpoint pins the
     # signatures to ONE shared RDD lineage node, so the corpus is scanned
     # and signatures computed exactly once however many branches read them.
     sigd = minhash_signatures_arrow(
         df, id_col, text_col, shingle_n, num_hashes
-    ).transform(materialize_branches)
+    ).transform(materialize, eager=False)
 
     # payload-light banding (round-14, guide §8): the band self-join and
     # the pair dedup only DECIDE which id pairs are candidates, so they
@@ -223,7 +223,7 @@ def minhash_lsh_pairs(
     # scale, shuffle at corpus scale). Unlike the RP-signature table in
     # embedding_near_dup_pairs — whose post-Arrow estimate round 13
     # proved non-scale-tracking, hence its merge pins — the lazy
-    # localCheckpoint here inherits the PRE-checkpoint plan's stats,
+    # checkpoint here inherits the PRE-checkpoint plan's stats,
     # which track the parquet scan: measured 27,878 B at sf0.01 vs
     # 254,814 B at sf0.1 (exactly 10x, round 15), crossing the 10 MB
     # auto-broadcast threshold around sf~4 — so the strategy flips to
@@ -391,7 +391,7 @@ def simhash_pairs(
     sd = _ensure_parallelism(df).select(
         F.col(id_col).alias("__id"),
         simhash_bits(F.col(text_col), bits).alias("__sh"),
-    ).transform(materialize_branches)
+    ).transform(materialize, eager=False)
     banded = sd.select(
         "__id",
         F.explode(

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from spatialpandas_spark.functions.measures import _seq0
 from spatialpandas_spark.operators.dedup import minhash_signatures_arrow
 
-from spatialpandas_spark.materialize import materialize_branches
+from spatialpandas_spark.materialize import materialize
 
 _SIDECAR = "_minhash_index.json"
 
@@ -234,7 +234,7 @@ def dedup_against_index(
     # once WITHOUT a separate up-front checkpoint job (the kernel is a
     # pure function of the batch text, so there is no stamped-id
     # determinism hazard here, unlike the sjoin rowid fork)
-    sigs = _signatures(new_docs, p).transform(materialize_branches)
+    sigs = _signatures(new_docs, p).transform(materialize, eager=False)
     probe = _band_rows(
         sigs, p["bands"], p["num_hashes"], p["n_buckets"], with_sig=True
     )

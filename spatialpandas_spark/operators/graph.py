@@ -11,9 +11,9 @@ Beyond" (SoCC'14) — the published shuffle-friendly CC: every iteration is
 two groupBy-min + join rounds over the edge list (no vertex-program
 framework, no driver-side graph), and converges in O(log n) iterations on
 any graph (star contraction at least halves tree heights each round).
-Each iteration's result is ``localCheckpoint``-ed so the lineage does not
-grow with the iteration count — the standard Spark iterative-algorithm
-discipline (same shape GraphFrames uses for its CC).
+Each iteration's result is pinned eagerly (``materialize``) so the
+lineage does not grow with the iteration count — the standard Spark
+iterative-algorithm discipline (same shape GraphFrames uses for its CC).
 
 At 100 TB the edge list (near-dup pairs) is orders of magnitude smaller
 than the corpus; each round shuffles only the shrinking edge set, keyed
@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spatialpandas_spark.materialize import materialize
 
 
 def connected_components(
@@ -60,7 +62,7 @@ def connected_components(
         # materialize once: every path below reads the edge set at least
         # twice (count + collect, or iterate), and upstream is typically
         # an expensive pair pipeline (LSH) that must not recompute
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
 
     if driver_threshold > 0:
@@ -105,7 +107,7 @@ def connected_components(
         e = (
             small.where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
 
         # convergence: the star-edge set is a fixpoint of both operations.
@@ -181,7 +183,7 @@ def pagerank(
     ``1/out_degree`` are precomputed and checkpointed ONCE before the
     loop, not re-derived per round), one ``groupBy(dst)`` sum, one
     1-row dangling-mass aggregate broadcast back — the published
-    MapReduce PageRank shape. The rank frame is ``localCheckpoint``-ed
+    MapReduce PageRank shape. The rank frame is pinned eagerly
     every round so lineage stays O(1) in the iteration count, same
     discipline as :func:`connected_components`. Returns
     ``(node, rank)``.
@@ -198,7 +200,7 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -209,15 +211,15 @@ def pagerank(
     e_w = (
         e.join(out_deg, "src")
         .select("src", "dst", (F.lit(1.0) / F.col("__deg")).alias("__w"))
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
     dangling_nodes = (
         nodes.join(out_deg, nodes["node"] == out_deg["src"], "left_anti")
-        .localCheckpoint(eager=True)
+        .transform(materialize, eager=True)
     )
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes)).localCheckpoint(
-        eager=True
+    ranks = materialize(
+        nodes.withColumn("rank", F.lit(1.0 / n_nodes)), eager=True
     )
     for _ in range(iters):
         dangling = dangling_nodes.join(ranks, "node", "inner").agg(
@@ -246,6 +248,6 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
     return ranks

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spatialpandas_spark.materialize import materialize_branches
+from spatialpandas_spark.materialize import materialize
 
 
 def estimate_knn_cell_size(
@@ -281,10 +281,10 @@ def sjoin_knn(
         # every round's bucketing, the residual sweep (round-14 profile:
         # b16 executed the corpus scan+project subtree 4x) — so pin each
         # to one lazily materialized RDD. The radius-covering path reads
-        # each side exactly once (round 0 only), where a persist would
+        # each side exactly once (round 0 only), where a pin would
         # be pure overhead.
-        l0 = l0.transform(materialize_branches)
-        r0 = r0.transform(materialize_branches)
+        l0 = materialize(l0, eager=False)
+        r0 = materialize(r0, eager=False)
     if radius_covers:
         n_right = None
         if cell_size is None:
@@ -381,12 +381,6 @@ def sjoin_knn(
     # resolution in ONE more join round. Rows with < k candidates
     # (isolated) have no bound and quad-step (+2 levels); the residual
     # brute-force sweep usually absorbs them first.
-    import os
-    import time as _time
-
-    _dbg = bool(os.environ.get("SPARK_GRAFT_KNN_DEBUG"))
-    _t0 = _time.time()
-
     unresolved = l0.withColumn("__lvl", F.lit(0))
     results = []
     rounds = 0
@@ -456,7 +450,7 @@ def sjoin_knn(
                 (F.col("__lvl") >= max_lvl)
                 | ((F.col("__n") >= k) & (F.col("__maxd2") <= wrow * wrow)),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize, eager=True)
         )
         results.append(
             ranked.filter(F.col("__ok")).select("__lid", "__rid", "__d2", "__rk")
@@ -503,18 +497,13 @@ def sjoin_knn(
             )
             .drop("__n", "__maxd2")
         )
-        unresolved = nxt.localCheckpoint(eager=True)
+        unresolved = materialize(nxt, eager=True)
         # ONE job yields the unresolved count, the minimum level, and the
         # next round's active level list (previously: an agg job here
         # plus a distinct-collect job at the next loop top)
         lvl_rows = unresolved.groupBy("__lvl").count().collect()
         cnt = sum(r["count"] for r in lvl_rows)
         active = sorted(r["__lvl"] for r in lvl_rows)
-        if _dbg:
-            print(
-                f"[knn] round {rounds} lvls={active} unresolved={cnt} "
-                f"t={_time.time() - _t0:.2f}s"
-            )
         if cnt == 0:
             break
         # residual switch: once the unresolved set is small, one vectorized
@@ -531,11 +520,6 @@ def sjoin_knn(
                 n_right = r0.count()
             degenerate = cell_size * (2 ** min(active)) >= extent / 4
             if cnt * n_right <= residual_bf_budget or degenerate:
-                if _dbg:
-                    print(
-                        f"[knn] residual brute-force n={cnt} "
-                        f"t={_time.time() - _t0:.2f}s"
-                    )
                 res_rows = unresolved.collect()
                 r_sweep = r0
                 if max_radius is not None:

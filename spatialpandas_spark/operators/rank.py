@@ -13,10 +13,10 @@ layout (ref ``dask.py:177-205``) — is:
    prefix offsets with a triangular self-join — never a single-partition
    exchange — and broadcast back.
 
-The ranked frame is ``localCheckpoint``-ed at the fork point: the rank
-branch and the count/offset branch BOTH consume the materialized
-partitioning, so the partition ids they see are identical by
-construction. This is load-bearing, not an optimization —
+The ranked frame is pinned at the fork point (``materialize(...,
+eager=True)``): the rank branch and the count/offset branch BOTH consume
+the materialized partitioning, so the partition ids they see are
+identical by construction. This is load-bearing, not an optimization —
 ``repartitionByRange`` picks its split points by reservoir sampling
 with a per-execution seed, so if Catalyst re-executes the exchange for
 each branch (exchange REUSE is an optimizer choice, and a cached or
@@ -25,20 +25,14 @@ partition assignments and the offsets silently corrupt the ranks.
 Caught by the round-6 seqpack crossover study on a cached input;
 regression-tested in tests/test_shards.py.
 
-The fault-tolerance / eagerness trade (documented deliberately):
-``localCheckpoint(eager=True)`` pins the partition assignment by
-materializing the frame to UNREPLICATED executor-local storage at
-DataFrame-construction time. Two consequences for long-running
-production jobs: (a) losing an executor (failure or dynamic-allocation
-decommission) fails the job instead of recomputing, because the
-truncated lineage cannot be replayed; (b) every ``with_rank`` /
-``with_running_sum`` call triggers an eager job even in otherwise lazy
-pipelines. For clusters where that matters, pass
-``checkpoint='reliable'`` to use a replicated HDFS/object-store
-checkpoint (requires ``sc.setCheckpointDir``) — slower to write, but
-survives executor loss and keeps the same single-assignment guarantee.
-The default stays 'local': on a healthy cluster it is one in-memory
-materialization of data that was about to shuffle anyway.
+Fault tolerance follows the session's checkpoint-dir rule
+(:mod:`spatialpandas_spark.materialize`): without a checkpoint dir the
+pin is a local checkpoint, so losing an executor fails the job rather
+than recomputing; with ``sc.setCheckpointDir`` set it is a reliable
+checkpoint that survives executor loss and keeps the same
+single-assignment guarantee. Either way every ``with_rank`` /
+``with_running_sum`` call runs one eager job, even in otherwise lazy
+pipelines.
 """
 
 from __future__ import annotations
@@ -47,20 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _pin(df: DataFrame, checkpoint: str) -> DataFrame:
-    """Materialize the fork point (module docstring: load-bearing).
-
-    'local' = unreplicated executor-local blocks, eager, fast; 'reliable'
-    = replicated checkpoint dir (``sc.setCheckpointDir`` must be set),
-    survives executor loss."""
-    if checkpoint == "local":
-        return df.localCheckpoint(eager=True)
-    if checkpoint == "reliable":
-        return df.checkpoint(eager=True)
-    raise ValueError(
-        f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-    )
+from spatialpandas_spark.materialize import materialize
 
 
 def with_rank(
@@ -68,17 +49,12 @@ def with_rank(
     order_cols: list,
     rank_col: str = "rk",
     npartitions: int | None = None,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Add a global 1-based rank by ``order_cols`` (ties broken by the full
     column list — pass a unique tiebreaker last for determinism).
 
     Scales: the only data-sized movement is the range shuffle; offsets are
     computed on an ``npartitions``-row table and broadcast.
-
-    ``checkpoint``: 'local' (default — fast, eager, unreplicated) or
-    'reliable' (replicated, survives executor loss; see module docstring
-    for the trade).
     """
     spark = df.sparkSession
     n = npartitions or spark.sparkContext.defaultParallelism
@@ -90,8 +66,9 @@ def with_rank(
     w_local = Window.partitionBy("__pid").orderBy(*cols)
     # materialize at the fork: both consumers must observe ONE partition
     # assignment (see module docstring — range sampling is per-execution)
-    local = _pin(ranged.withColumn("__lrk", F.row_number().over(w_local)),
-                 checkpoint)
+    local = materialize(
+        ranged.withColumn("__lrk", F.row_number().over(w_local)), eager=True
+    )
 
     counts = local.groupBy("__pid").agg(F.count("*").alias("__cnt"))
     # prefix-sum via triangular join on the tiny counts table: offset(p) =
@@ -121,14 +98,12 @@ def with_running_sum(
     value_col: str,
     out_col: str = "running_sum",
     npartitions: int | None = None,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Add an inclusive global running sum of ``value_col`` ordered by
     ``order_cols`` (pass a unique tiebreaker last for determinism) — the
     same two-phase shape as ``with_rank``: range shuffle, partition-local
     window, tiny per-partition totals -> broadcast prefix offsets. No
-    single-task window anywhere in the plan. ``checkpoint``: 'local' or
-    'reliable' (see module docstring for the fault-tolerance trade)."""
+    single-task window anywhere in the plan."""
     spark = df.sparkSession
     n = npartitions or spark.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
@@ -142,9 +117,9 @@ def with_running_sum(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # materialize at the fork — same reasoning as with_rank
-    local = _pin(
+    local = materialize(
         ranged.withColumn("__lsum", F.sum(F.col(value_col)).over(w_local)),
-        checkpoint,
+        eager=True,
     )
 
     totals = local.groupBy("__pid").agg(F.sum(F.col(value_col)).alias("__tot"))

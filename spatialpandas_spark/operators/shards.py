@@ -233,12 +233,12 @@ def materialize_token_sequences(
     without an explicit materialization the whole upstream (for the
     training gates: the corpus BPE encode and the epoch-mix union; r15
     plan dump showed the MapInPandas encode once per branch) runs twice.
-    ``materialize_branches`` pins it to one computation; only the three
+    ``materialize`` pins it to one computation; only the three
     consumed columns are materialized (§2.3 project early)."""
-    from spatialpandas_spark.materialize import materialize_branches
+    from spatialpandas_spark.materialize import materialize
 
-    tokens = materialize_branches(
-        tokens.select(id_col, weight_col, tokens_col)
+    tokens = materialize(
+        tokens.select(id_col, weight_col, tokens_col), eager=False
     )
     layout = pack_token_sequences(
         tokens.select(id_col, weight_col),

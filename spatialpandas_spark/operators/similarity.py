@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spatialpandas_spark.materialize import materialize_branches
+from spatialpandas_spark.materialize import materialize
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -691,7 +691,7 @@ def embedding_near_dup_pairs(
             F.col(vec_col).cast("array<double>").alias("__v"),
         ).filter(F.col("__v").isNotNull()),
         planes,
-    ).transform(materialize_branches)
+    ).transform(materialize, eager=False)
     # payload-light banding (guide §8): the band self-join and pair dedup
     # decide WHICH id pairs are candidates, so they carry (id, band key)
     # only; the dim-wide vectors move once, in the attach joins below.

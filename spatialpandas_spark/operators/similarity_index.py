@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spatialpandas_spark.materialize import materialize
 from spatialpandas_spark.operators.similarity import (
     _centroids,
     _centroid_sims,
@@ -449,8 +450,8 @@ def _query_ivfpq_distributed(
     # checkpoint: the probe frame feeds BOTH the distinct-bucket collect
     # and the bucket equi-join — without it the Arrow assignment pass
     # over the (by definition oversized) query frame runs twice
-    probes = q_sel.mapInPandas(assign_probes, probe_schema).localCheckpoint(
-        eager=True
+    probes = materialize(
+        q_sel.mapInPandas(assign_probes, probe_schema), eager=True
     )
     # distinct probed buckets: bounded by n_centroids — tiny, safe collect
     buckets = sorted(
@@ -859,8 +860,8 @@ def _query_ivfsq8_distributed(
                 }
             )
 
-    probes = q_sel.mapInPandas(assign_probes, probe_schema).localCheckpoint(
-        eager=True
+    probes = materialize(
+        q_sel.mapInPandas(assign_probes, probe_schema), eager=True
     )
     buckets = sorted(
         r["bucket"] for r in probes.select("bucket").distinct().collect()

@@ -37,6 +37,7 @@ from spatialpandas_spark.functions.predicates import (
     st_point_in_polygon,
     st_point_in_multipolygon,
 )
+from spatialpandas_spark.materialize import materialize
 
 _SUPPORTED_HOW = ("inner", "left", "right")
 
@@ -361,11 +362,12 @@ def _grid_join(
         # pack_partitions output) the two executions could stamp DIFFERENT
         # ids and the recovery would silently emit matched rows as missing
         # (or drop unmatched ones). Same bug class as the round-6 rank
-        # fork (operators/rank.py module docstring); one in-memory
+        # fork (operators/rank.py module docstring); one
         # materialization of a side that was about to shuffle anyway.
-        pid = preserved.withColumn(
-            "__rowid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
+        pid = materialize(
+            preserved.withColumn("__rowid", F.monotonically_increasing_id()),
+            eager=True,
+        )
         inner = _grid_join(
             pid if how == "left" else left,
             pid if how == "right" else right,

@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 from spatialpandas_spark.operators.dedup import word_shingles
 from spatialpandas_spark.operators.sampling import sample_hash
 
-from spatialpandas_spark.materialize import materialize_branches
+from spatialpandas_spark.materialize import materialize
 
 #: size of the sample_hash space: 15 hex chars = 60 bits.
 HSPACE = 1 << 60
@@ -62,7 +62,6 @@ def kmv_sketch(
     k: int = 256,
     group_cols: list[str] | None = None,
     seed: int = 42,
-    oversample: int = 8,
     prefilter: bool = True,
 ) -> DataFrame:
     """Bottom-``k`` sketch of the distinct ``key`` values (per group).
@@ -77,9 +76,7 @@ def kmv_sketch(
     ``prefilter=True`` is the at-scale path (map-side partial bottom-k
     in the scan stage, see module docstring); ``prefilter=False`` ranks
     the full distinct hash set — same result, used by tests as the
-    oracle twin. ``oversample`` is accepted for compatibility (the
-    HLL-threshold design it tuned was replaced by the exact map-side
-    partial in round 14).
+    oracle twin.
     """
     if k <= 0:
         raise ValueError("k must be positive")
@@ -245,13 +242,13 @@ def kmv_overlap(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
     side's size.
 
     Each input is consumed three times (union, membership flags,
-    summary); a lazy local checkpoint pins the ≤ k-row sketch so a
+    summary); a lazy ``materialize`` pins the ≤ k-row sketch so a
     sketch built from a corpus scan runs that scan ONCE, not three
     times. (Purely a recompute saver: the sketch is a deterministic
     function of the key set, so this is not in the fork-determinism
     class rank.py pins.)"""
-    a = a.transform(materialize_branches)
-    b = b.transform(materialize_branches)
+    a = a.transform(materialize, eager=False)
+    b = b.transform(materialize, eager=False)
     u = kmv_union(a, b, k)
     flagged = (
         u.join(
@@ -475,7 +472,7 @@ def containment_probe(
         k=k,
         seed=seed,
         group_cols=groups,
-    ).transform(materialize_branches)  # consumed twice (probe set + join)
+    ).transform(materialize, eager=False)  # consumed twice (probe set + join)
 
     grams = corpus_docs.select(
         F.explode(word_shingles(F.col(text_col), n)).alias("s")
@@ -551,7 +548,7 @@ def corpus_overlap(
     sk = shingle_sketch(
         ga.unionByName(gb), text_col, n=n, k=k, seed=seed,
         group_cols=["__side"],
-    ).transform(materialize_branches)
+    ).transform(materialize, eager=False)
     return kmv_overlap(
         sk.filter(F.col("__side") == 0).drop("__side"),
         sk.filter(F.col("__side") == 1).drop("__side"),

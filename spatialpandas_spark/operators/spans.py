@@ -220,7 +220,7 @@ def remove_duplicate_spans(
         raise ValueError("align must be 'fixed' or 'content'")
     if min_span_tokens < 1:
         raise ValueError("min_span_tokens must be >= 1")
-    from spatialpandas_spark.materialize import materialize_branches
+    from spatialpandas_spark.materialize import materialize
 
     # Decide removals on METADATA rows — (id, span_id, token range,
     # 16-byte hash[, countable flag]) — then rebuild each document's text
@@ -264,7 +264,7 @@ def remove_duplicate_spans(
                 F.size(F.split(F.col("span"), " ")) >= F.lit(min_span_tokens)
             ).alias("__ok")
         )
-    meta = materialize_branches(rows.select(*meta_cols))
+    meta = materialize(rows.select(*meta_cols), eager=False)
     countable = meta.filter("__ok") if min_span_tokens > 1 else meta
     if keep == "none":
         flagged = (

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spatialpandas_spark.materialize import materialize
 from spatialpandas_spark.operators.dedup_index import (
     append_to_minhash_index,
     dedup_against_index,
@@ -114,7 +115,7 @@ def ingest_batch(
     )
     # the survivor set is consumed three times (append x2 + return);
     # checkpoint so the probe plan runs once
-    survivors = survivors.localCheckpoint(eager=True)
+    survivors = materialize(survivors, eager=True)
     append_to_minhash_index(survivors, index_path)
     if output_path is not None:
         _write_output(survivors, output_path, batch_id)
@@ -242,7 +243,7 @@ def embedding_ingest_batch(
         .select(F.col("qid").alias(id_col))
         .distinct()
     )
-    surv = surv.join(dups, id_col, "left_anti").localCheckpoint(eager=True)
+    surv = materialize(surv.join(dups, id_col, "left_anti"), eager=True)
     append_to_ivfpq_index(surv, index_path, corpus_id=id_col, corpus_vec=vec_col)
     if output_path is not None:
         _write_output(surv, output_path, batch_id)

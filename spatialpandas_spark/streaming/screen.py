@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spatialpandas_spark.materialize import materialize
 from spatialpandas_spark.operators.contamination_index import (
     load_decon_params,
     probe_set,
@@ -119,7 +120,7 @@ def screen_batch(
     p = load_decon_params(index_path)
     tc = text_col or p["text_col"]
     groups = p["group_cols"]
-    bsk = probe_set(spark, index_path).localCheckpoint(eager=False)
+    bsk = materialize(probe_set(spark, index_path), eager=False)
     probes = F.broadcast(bsk.select("h").distinct())
     hits = (
         batch.select(

@@ -29,18 +29,53 @@ def _slow_tier() -> set:
         return set()
 
 
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    slow = _slow_tier()
-    if not slow:
-        return
-    marker = pytest.mark.skip(
-        reason="slow tier (tests/slow_tier.txt); SPARK_GRAFT_FULL_TESTS=1 runs it"
+_SLOW_REASON = "slow tier (tests/slow_tier.txt); SPARK_GRAFT_FULL_TESTS=1 runs it"
+
+
+def _check_slow_tier(config, items, slow: set) -> None:
+    """Fail collection when a slow-tier nodeid names a test that no longer
+    exists (renamed, moved or deleted) in a file this run collected in
+    full — otherwise the stale entry silently drops that test from the
+    slow tier. Files selected by ``file::test`` arguments are not
+    checked: they are collected only in part."""
+    root = config.invocation_params.dir
+    partial = {
+        (root / a.split("::", 1)[0]).resolve() for a in config.args if "::" in a
+    }
+    files = {
+        it.nodeid.split("::", 1)[0] for it in items if it.path not in partial
+    }
+    ids = {it.nodeid for it in items}
+    stale = sorted(
+        n for n in slow if n.split("::", 1)[0] in files and n not in ids
     )
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tier.txt names tests that were not collected:\n  "
+            + "\n  ".join(stale)
+        )
+
+
+# tryfirst: check and mark before -k/-m/--deselect drop items
+@pytest.hookimpl(tryfirst=True)
+def pytest_collection_modifyitems(config, items):
+    slow = _slow_tier()
+    _check_slow_tier(config, items, slow)
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS") or not slow:
+        return
+    marker = pytest.mark.skip(reason=_SLOW_REASON)
     for item in items:
         if item.nodeid in slow:
             item.add_marker(marker)
+
+
+def pytest_terminal_summary(terminalreporter):
+    n = sum(
+        _SLOW_REASON in str(r.longrepr)
+        for r in terminalreporter.stats.get("skipped", [])
+    )
+    if n:
+        terminalreporter.write_line(f"{n} tests skipped: {_SLOW_REASON}")
 
 
 @pytest.fixture(scope="session")

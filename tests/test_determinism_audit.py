@@ -11,7 +11,7 @@ silently corrupting anything that correlates the branches.
 Audited sites (round 7, full-package grep):
 
 - ``operators/rank.py`` with_rank / with_running_sum — two consumers
-  (local ranks + per-partition counts). PINNED round 6 (localCheckpoint
+  (local ranks + per-partition counts). PINNED round 6 (``materialize``
   at the fork); regression test ``test_shards.py``
   ``test_running_sum_fork_consistency_on_cached_input``.
 - ``operators/sjoin.py`` outer grid join — the ``__rowid``-stamped
@@ -29,7 +29,10 @@ Audited sites (round 7, full-package grep):
   order, layout-independent by construction.
 
 The allowlist test makes any NEW layout-dependent call site fail review
-until it is either pinned or consciously added here.
+until it is either pinned or consciously added here. It also holds the
+package to ONE pinning mechanism: ``localCheckpoint`` / ``checkpoint`` /
+``persist`` calls may appear only inside ``materialize.py``, so a direct
+pin elsewhere fails until it goes through ``materialize``.
 """
 
 import pathlib
@@ -44,7 +47,7 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "spatialpandas_spark"
 # reviewed call sites: relative path -> expected count of each marker
 ALLOWED = {
     "repartitionByRange": {
-        "operators/rank.py": 2,       # pinned (localCheckpoint at fork)
+        "operators/rank.py": 2,       # pinned (materialize at fork)
         "operators/pack.py": 1,       # single consumer
     },
     "monotonically_increasing_id": {
@@ -54,6 +57,10 @@ ALLOWED = {
         "operators/rank.py": 2,       # downstream of the pinned fork
         "operators/pack.py": 1,       # partition_bounds (documented)
     },
+    # one pinning mechanism: every pin goes through materialize()
+    "localCheckpoint": {"materialize.py": 1},
+    "checkpoint": {"materialize.py": 1},
+    "persist": {},
 }
 
 
@@ -73,8 +80,9 @@ def _count_sites(marker: str) -> dict:
 def test_layout_dependent_sites_are_reviewed(marker):
     """Every layout-dependent call site in the package is on the reviewed
     allowlist. A new site must be audited for the fork-point bug class
-    (pin it with localCheckpoint, or prove single-consumer) and then
-    added here with a comment."""
+    (pin it with `materialize`, or prove single-consumer) and then
+    added here with a comment. Pins themselves (localCheckpoint,
+    checkpoint, persist) are allowed only inside materialize.py."""
     assert _count_sites(marker) == ALLOWED[marker], (
         f"unreviewed {marker} call site — audit for the sampled-exchange "
         "fork bug class (see module docstring) before allowlisting"

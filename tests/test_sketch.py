@@ -5,12 +5,12 @@ Evidence shape matches the rest of the dedup family:
 - the ``prefilter=False`` path IS the exact bottom-k over the full
   distinct hash set — verified bit-for-bit against a pure-Python twin
   (hashlib md5-prefix, sort, take k), grouped and ungrouped;
-- ``prefilter=True`` (the HLL-thresholded at-scale path) must equal the
-  unfiltered path EXACTLY — the module's central "exact by
+- ``prefilter=True`` (the map-side partial bottom-k at-scale path) must
+  equal the unfiltered path EXACTLY — the module's central "exact by
   construction" claim;
-- the safety-net branch is forced (tiny oversample so the threshold
-  starves groups, including the zero-survivor regime the round-7 ADVICE
-  flagged) and must still be exact;
+- the regimes that starved the old HLL-threshold prefilter (k close to
+  the distinct count; a tiny group beside a giant one, the zero-survivor
+  shape the round-7 ADVICE flagged) must still be exact;
 - the exact-set regime (< k distinct values): the sketch IS the set and
   the estimator returns the true count;
 - estimator accuracy on a known-cardinality set is within the published
@@ -113,31 +113,27 @@ def test_prefilter_invariant_to_partitioning_and_duplicates(spark):
 
 
 def test_safety_net_starved_threshold_still_exact(spark):
-    """oversample=1 with k close to the distinct count makes the HLL
-    threshold under-keep routinely -> the recompute branch must fire and
-    the result must still be the exact bottom-k."""
+    """k close to the distinct count (the regime where the retired
+    HLL-threshold prefilter under-kept): every partition's partial
+    bottom-k must together still contain the exact global bottom-k."""
     keys = [f"x{i}" for i in range(3000)]
     df = spark.createDataFrame([(x,) for x in keys], "s string")
-    got = _rows(kmv_sketch(df, "s", k=256, oversample=1), "rank", "h")
+    got = _rows(kmv_sketch(df, "s", k=256), "rank", "h")
     assert got == _py_sketch(keys, 256)
 
 
 def test_safety_net_zero_survivor_group(spark):
-    """The round-7 ADVICE hole: a group whose active threshold filters
-    out EVERY row must be recomputed, not silently dropped. Force it by
-    monkeypatching the HLL estimate path indirectly: a group whose hash
-    values all sit far above the threshold the estimator picks. We
-    construct it adversarially — one giant group (drives a real
-    threshold) and verify via oversample so small the net must cover
-    starved groups; then assert no group is missing."""
+    """The round-7 ADVICE hole: a small group beside a giant one must
+    not be dropped or truncated. The giant group fills every partition's
+    partial bottom-k; the tiny group (fewer than k distinct keys) must
+    still come back as its exact set, and the giant group as its exact
+    bottom-k."""
     # group 'big' has 4000 distinct keys; group 'tiny' has 30 distinct
     # keys, below k -> its sketch is its exact set and MUST be present.
     rows = [("big", f"b{i}") for i in range(4000)]
     rows += [("tiny", f"t{i}") for i in range(30)]
     df = spark.createDataFrame(rows, "src string, s string")
-    out = kmv_sketch(
-        df, "s", k=64, group_cols=["src"], oversample=1
-    )
+    out = kmv_sketch(df, "s", k=64, group_cols=["src"])
     got = {g: sorted((r, h) for gg, r, h in _rows(out, "src", "rank", "h") if gg == g)
            for g in ("big", "tiny")}
     assert got["big"] == _py_sketch([s for g, s in rows if g == "big"], 64)
