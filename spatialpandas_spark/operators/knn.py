@@ -24,6 +24,18 @@ neighbor distance) plus one re-bucketing pass over the right side. The
 per-left candidate ranking uses a window keyed by left id over
 neighborhood-bounded candidates — never the whole corpus.
 
+Round shape: the candidate join plus one placeholder row per unresolved
+left (so a left with an empty neighborhood still reaches the window) is
+ranked, and the same window yields each left's resolve verdict and next
+level. A non-final round runs exactly one Spark job, the eager pin of
+that ranked frame; the unresolved count and the next active levels are
+read from an ``Observation`` of that job, the round's results and the
+next unresolved set are filters on the pinned frame. The final round
+(every row at the last level, where each resolves or is cut off) pins
+nothing: its results stay lazy for the caller's action, so a
+radius-covering call launches no job at all. Level choices, round
+counts and the residual switch are logged at DEBUG.
+
 Out-of-distribution queries (far from every corpus point) are the
 level-doubling plan's bad case: by the time the cell width reaches
 their isolation distance, a 3x3 neighborhood IS the whole corpus, and
@@ -40,13 +52,16 @@ no candidate shuffle.
 
 from __future__ import annotations
 
+import logging
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spatialpandas_spark.materialize import materialize
+
+log = logging.getLogger(__name__)
 
 
 def estimate_knn_cell_size(
@@ -115,16 +130,18 @@ def estimate_knn_cell_size(
     return max(r_full, 1e-12)
 
 
-def _residual_bruteforce(r0: DataFrame, rows, k: int) -> DataFrame:
+def _residual_bruteforce(r0: DataFrame, rows, k: int, lid_type) -> DataFrame:
     """Exact top-k for a small collected residual query set: one Arrow
     pass over the corpus, per-partition partial top-k (numpy), survivors
     ranked by a window over at most n_partitions * n_queries * k rows.
 
     ``rows`` are collected (__lid, __lx, __ly) Rows — bounded by the
-    caller's residual threshold. Distance arithmetic matches the grid
-    path op-for-op ((lx-rx)*(lx-rx) + (ly-ry)*(ly-ry)), elementwise IEEE
-    double sub/mul/add, so ``dist2`` is bit-identical whichever path
-    resolves a row."""
+    caller's residual threshold — and ``lid_type`` is their ``__lid``
+    Spark type, so the sweep's output unions with the grid path's
+    without widening or a failed Arrow conversion. Distance arithmetic
+    matches the grid path op-for-op ((lx-rx)*(lx-rx) + (ly-ry)*(ly-ry)),
+    elementwise IEEE double sub/mul/add, so ``dist2`` is bit-identical
+    whichever path resolves a row."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -136,7 +153,7 @@ def _residual_bruteforce(r0: DataFrame, rows, k: int) -> DataFrame:
     ly = np.asarray([r["__ly"] for r in rows], dtype=np.float64)
     schema = StructType(
         [
-            StructField("__lid", _lid_spark_type(rows)),
+            StructField("__lid", lid_type),
             StructField("__rid", r0.schema["__rid"].dataType),
             StructField("__d2", DoubleType()),
         ]
@@ -192,17 +209,6 @@ def _residual_bruteforce(r0: DataFrame, rows, k: int) -> DataFrame:
     )
 
 
-def _lid_spark_type(rows):
-    from pyspark.sql.types import DoubleType, LongType, StringType
-
-    v = rows[0]["__lid"]
-    if isinstance(v, bool) or isinstance(v, int):
-        return LongType()
-    if isinstance(v, float):
-        return DoubleType()
-    return StringType()
-
-
 def sjoin_knn(
     left: DataFrame,
     right: DataFrame,
@@ -236,7 +242,9 @@ def sjoin_knn(
     extent; with it, sparse-region queries cost a constant number of
     rounds regardless of how empty their neighborhood is. Exactness is
     unchanged: candidates beyond the radius are filtered, candidates
-    within it are guaranteed found."""
+    within it are guaranteed found.
+
+    Right rows with a null ``right_id`` are ignored."""
     if k <= 0:
         raise ValueError("k must be positive")
     if max_radius is not None and not max_radius > 0:
@@ -247,11 +255,13 @@ def sjoin_knn(
         F.col(left_geom)["x"].alias("__lx"),
         F.col(left_geom)["y"].alias("__ly"),
     )
+    # a null __rid marks a left row's no-candidate placeholder in the
+    # level loop, so right rows without an id take no part
     r0 = right.select(
         F.col(right_id).alias("__rid"),
         F.col(right_geom)["x"].alias("__rx"),
         F.col(right_geom)["y"].alias("__ry"),
-    )
+    ).filter(F.col("__rid").isNotNull())
 
     # ONE agg job yields the corpus count (feeds the cell-size estimator
     # and the residual-budget check) AND, when the level loop will need
@@ -275,6 +285,7 @@ def sjoin_knn(
     radius_covers = max_radius is not None and (
         cell_size is None or cell_size >= max_radius
     )
+    cell_source = "given"
     if not radius_covers:
         # the narrow (id, x, y) projections are read several times per
         # call — the statistics aggregation, the estimator's sample,
@@ -297,6 +308,7 @@ def sjoin_knn(
             # (measured on b27: 19k queries x 600k corpus, 8.9 s ->
             # 3.1 s, identical output).
             cell_size = float(max_radius)
+            cell_source = "max_radius"
     else:
         need_lb = extent is None
         sides = r0.select(
@@ -333,6 +345,7 @@ def sjoin_knn(
             # sample reads the checkpointed projection (struct rebuilt so
             # the estimator's x/y field access resolves), not the caller's
             # subtree a third time.
+            cell_source = "estimated"
             cell_size = 2.5 * estimate_knn_cell_size(
                 r0.select(
                     F.struct(
@@ -370,6 +383,10 @@ def sjoin_knn(
     max_lvl = max(0, math.ceil(math.log2(extent / cell_size)) + 1)
     if cutoff_lvl is not None:
         max_lvl = min(max_lvl, cutoff_lvl)
+    log.debug(
+        "sjoin_knn: cell_size=%r (%s), max_lvl=%d, cutoff_lvl=%s",
+        cell_size, cell_source, max_lvl, cutoff_lvl,
+    )
 
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     # every row carries its OWN grid level. Round 0 runs everyone at
@@ -385,8 +402,13 @@ def sjoin_knn(
     results = []
     rounds = 0
     active = [0]
+    n_residual = 0
     while True:
         rounds += 1
+        # every row of a round at level >= max_lvl resolves (or, with an
+        # empty neighborhood at the radius-covering level, is dropped), so
+        # the final round computes no next level and pins nothing
+        final = min(active) >= max_lvl
         # right side bucketed once per ACTIVE level (few), level in the key
         rj = r0.select(
             "__rid", "__rx", "__ry",
@@ -426,86 +448,95 @@ def sjoin_knn(
         ddy = F.col("__ly") - F.col("__ry")
         d2 = ddx * ddx + ddy * ddy
         cand = lj.join(rj, "__cell").select(
-            "__lid", "__lvl", "__rid", d2.alias("__d2")
+            "__lid", "__lx", "__ly", "__lvl", "__rid", d2.alias("__d2")
         )
+        if not final:
+            # one placeholder row per unresolved lid (null __rid/__d2) so
+            # a lid whose 3x3 neighborhood is empty still reaches the
+            # window and gets its next level there. The candidate join
+            # stays INNER: a left join would force the corpus to be the
+            # build side, and AQE could no longer broadcast the tiny
+            # late-round unresolved set.
+            cand = cand.unionByName(unresolved, allowMissingColumns=True)
         wnd = Window.partitionBy("__lid").orderBy(
-            F.col("__d2").asc(), F.col("__rid").asc()
+            F.col("__d2").asc_nulls_last(), F.col("__rid").asc_nulls_last()
         )
-        # ONE heavy job per round: materialize the per-row top-k survivors
-        # (<= |unresolved| * k rows — tiny) WITH the resolve verdict
-        # precomputed as window aggregates over the same partitioning the
-        # ranking window already shuffled by — the resolve test costs no
-        # extra exchange, and every downstream consumer (kept results,
-        # next unresolved set) is a plain filter on this checkpoint
-        # instead of a groupBy + join re-evaluated per consumer.
-        wrow = F.lit(float(cell_size)) * F.pow(F.lit(2.0), F.col("__lvl").cast("double"))
+        # the per-row top-k survivors (<= |unresolved| * k rows — tiny)
+        # carry the resolve verdict and the next level as window
+        # aggregates over the partitioning the ranking window already
+        # shuffled by: no extra exchange, and both the kept results and
+        # the next unresolved set are plain filters on this one frame.
+        # A placeholder is kept only at rank 1, i.e. for a lid with no
+        # candidate at all (__n = 0).
         agg_w = Window.partitionBy("__lid")
         ranked = (
             cand.withColumn("__rk", F.row_number().over(wnd))
-            .filter(F.col("__rk") <= k)
-            .withColumn("__n", F.count("*").over(agg_w))
+            .filter(
+                (F.col("__rk") <= k)
+                & (F.col("__rid").isNotNull() | (F.col("__rk") == 1))
+            )
+            .withColumn("__n", F.count("__rid").over(agg_w))
             .withColumn("__maxd2", F.max("__d2").over(agg_w))
             .withColumn(
                 "__ok",
                 (F.col("__lvl") >= max_lvl)
-                | ((F.col("__n") >= k) & (F.col("__maxd2") <= wrow * wrow)),
+                | ((F.col("__n") >= k) & (F.col("__maxd2") <= wexpr * wexpr)),
             )
-            .transform(materialize, eager=True)
         )
+        if not final:
+            # the next level, on each unresolved lid's rank-1 row only
+            # (null on resolved rows, so its count is the unresolved
+            # count): jump — bounded rows go straight to their resolving
+            # level, unbounded (isolated, __n < k) rows quad-step; clamp
+            # to max_lvl. A lid with an empty neighborhood at level >=
+            # max_lvl is __ok: at the radius-covering level it provably
+            # has no neighbor within the radius, so it is dropped instead
+            # of carried into another round or a residual sweep whose
+            # matches the radius filter discards (round-14: on b27 this
+            # removes the whole residual job chain).
+            nxt = F.least(
+                F.lit(max_lvl),
+                F.when(
+                    (F.col("__n") >= k) & (F.col("__maxd2") > 0),
+                    F.greatest(
+                        F.ceil(F.log2(F.sqrt("__maxd2") / F.lit(float(cell_size)))),
+                        F.lit(1),
+                    ),
+                ).otherwise(F.lit(2 * rounds)),
+            ).cast("int")
+            # ONE job per non-final round: the eager pin. The unresolved
+            # count and the next round's active levels ride along on an
+            # observation of that same job.
+            obs = Observation()
+            ranked = materialize(
+                ranked.withColumn(
+                    "__next", F.when((F.col("__rk") == 1) & ~F.col("__ok"), nxt)
+                ).observe(
+                    obs,
+                    F.count("__next").alias("cnt"),
+                    F.collect_set("__next").alias("active"),
+                ),
+                eager=True,
+            )
         results.append(
-            ranked.filter(F.col("__ok")).select("__lid", "__rid", "__d2", "__rk")
-        )
-        # the next unresolved set: one representative ranked row per lid
-        # carries (__n, __maxd2, __ok) — LEFT join so rows with an EMPTY
-        # 3x3 neighborhood (absent from ranked entirely) stay unresolved
-        # instead of vanishing; null __ok means "no candidates yet"
-        info = ranked.filter(F.col("__rk") == 1).select(
-            "__lid", "__n", "__maxd2", "__ok"
-        )
-        nxt = (
-            unresolved.join(info, "__lid", "left")
-            .filter(~F.coalesce(F.col("__ok"), F.lit(False)))
-            .drop("__ok")
-        )
-        if cutoff_lvl is not None:
-            # a row whose 3x3 neighborhood at cell width >= max_radius
-            # was EMPTY (no ranked candidates: __n null) provably has no
-            # neighbor within the radius — drop it NOW instead of
-            # carrying it into another round or a residual corpus sweep
-            # whose matches the radius filter must discard anyway
-            # (round-14: on b27 this removes the entire residual
-            # brute-force job chain — collect, cell semi-join, Arrow
-            # sweep, ranking window)
-            nxt = nxt.filter(
-                ~(F.col("__n").isNull() & (F.col("__lvl") >= F.lit(cutoff_lvl)))
+            ranked.filter(F.col("__ok") & F.col("__rid").isNotNull()).select(
+                "__lid", "__rid", "__d2", "__rk"
             )
-        nxt = (
-            # jump: bounded rows go straight to their resolving level,
-            # unbounded (isolated) rows quad-step; clamp to max_lvl
-            nxt.withColumn(
-                "__lvl",
-                F.least(
-                    F.lit(max_lvl),
-                    F.when(
-                        (F.col("__n") >= k) & (F.col("__maxd2") > 0),
-                        F.greatest(
-                            F.ceil(F.log2(F.sqrt("__maxd2") / F.lit(float(cell_size)))),
-                            F.lit(1),
-                        ),
-                    ).otherwise(F.lit(2 * rounds)),
-                ).cast("int"),
-            )
-            .drop("__n", "__maxd2")
         )
-        unresolved = materialize(nxt, eager=True)
-        # ONE job yields the unresolved count, the minimum level, and the
-        # next round's active level list (previously: an agg job here
-        # plus a distinct-collect job at the next loop top)
-        lvl_rows = unresolved.groupBy("__lvl").count().collect()
-        cnt = sum(r["count"] for r in lvl_rows)
-        active = sorted(r["__lvl"] for r in lvl_rows)
+        if final:
+            log.debug("sjoin_knn round %d: levels %s, final", rounds, active)
+            break
+        observed = obs.get
+        cnt = observed["cnt"]
+        log.debug(
+            "sjoin_knn round %d: levels %s, %d unresolved", rounds, active, cnt
+        )
         if cnt == 0:
             break
+        active = sorted(observed["active"])
+        unresolved = ranked.filter(F.col("__next").isNotNull()).select(
+            "__lid", "__lx", "__ly", F.col("__next").alias("__lvl")
+        )
         # residual switch: once the unresolved set is small, one vectorized
         # corpus sweep beats joining at levels so wide that 3x3 covers
         # everything (candidates = residual x corpus through shuffle+window).
@@ -551,8 +582,17 @@ def sjoin_knn(
                         & (F.floor(F.col("__ry") / F.lit(w)) == F.col("__ccy")),
                         "leftsemi",
                     )
-                results.append(_residual_bruteforce(r_sweep, res_rows, k))
+                results.append(
+                    _residual_bruteforce(
+                        r_sweep, res_rows, k, unresolved.schema["__lid"].dataType
+                    )
+                )
+                n_residual = len(res_rows)
                 break
+    log.debug(
+        "sjoin_knn: %d rounds, residual sweep %s", rounds,
+        f"on {n_residual} rows" if n_residual else "not run",
+    )
 
     out = results[0]
     for r in results[1:]:

@@ -7,8 +7,11 @@ test session through the public API, so this runs in a subprocess with
 its own ``local[2]`` session: the same operators run first in local
 mode, then again after ``setCheckpointDir``, and the results must match
 exactly. Covered pins: the eager fork pin of ``with_rank``, the eager
-per-iteration pins of ``connected_components`` and the lazy pins of
-``corpus_overlap`` (``kmv_sketch`` underneath).
+per-iteration pins of ``connected_components``, the lazy pins of
+``corpus_overlap`` (``kmv_sketch`` underneath) and the per-round eager
+pins of a multi-round ``sjoin_knn``. A reliable checkpoint recomputes
+the pinned RDD to write it, so the kNN run also checks that the counts
+its rounds observe during the pin (logged at DEBUG) do not double.
 """
 
 import json
@@ -20,11 +23,15 @@ import sys
 REPO = pathlib.Path(__file__).resolve().parents[1]
 
 _SCRIPT = r"""
-import json, pathlib, random, sys
+import json, logging, pathlib, random, sys
+from pyspark.sql import functions as F
+from spatialpandas_spark import st_point
 from spatialpandas_spark.session import get_spark
 from spatialpandas_spark.operators.graph import connected_components
+from spatialpandas_spark.operators.knn import sjoin_knn
 from spatialpandas_spark.operators.rank import with_rank
 from spatialpandas_spark.operators.sketch import corpus_overlap
+from tests.test_knn import multi_round_points
 
 spark = get_spark(app_name="reliable-materialize", master="local[2]",
                   shuffle_partitions=4)
@@ -48,6 +55,22 @@ docs_a = spark.createDataFrame(
 docs_b = spark.createDataFrame(
     [(" ".join(rng.choices(words[100:], k=30)),) for _ in range(80)], "text string"
 )
+knn_l, knn_r = (
+    spark.createDataFrame(p, f"{c} long, x double, y double").select(
+        c, st_point(F.col("x"), F.col("y")).alias("geom")
+    )
+    for p, c in zip(multi_round_points(), ("lid", "rid"))
+)
+knn_log = []
+
+
+class _Keep(logging.Handler):
+    def emit(self, record):
+        knn_log.append(record.getMessage())
+
+
+logging.getLogger("spatialpandas_spark.operators.knn").setLevel(logging.DEBUG)
+logging.getLogger("spatialpandas_spark.operators.knn").addHandler(_Keep())
 
 
 def n_ckpt():
@@ -66,6 +89,11 @@ def run():
     ov = corpus_overlap(docs_a, docs_b, n=2, k=64)
     out["overlap"] = [sorted(r.asDict().items()) for r in ov.collect()]
     out["n_overlap"] = n_ckpt()
+    knn_log.clear()
+    kn = sjoin_knn(knn_l, knn_r, k=3, cell_size=0.25, residual_bf_rows=2)
+    out["knn"] = sorted(list(r) for r in kn.collect())
+    out["knn_log"] = list(knn_log)
+    out["n_knn"] = n_ckpt()
     return out
 
 
@@ -93,8 +121,21 @@ def test_reliable_checkpoint_mode_matches_local(tmp_path):
     assert reliable["cc"] == local["cc"]
     assert len({c for _, c in local["cc"]}) == 13
     assert reliable["overlap"] == local["overlap"]
+    assert reliable["knn"] == local["knn"]
+    assert len(local["knn"]) == 23 * 3
+    # three pinned rounds, then the residual sweep; equal logs mean equal
+    # observed unresolved counts in both modes
+    assert [m for m in local["knn_log"] if "unresolved" in m] == [
+        "sjoin_knn round 1: levels [0], 18 unresolved",
+        "sjoin_knn round 2: levels [1, 2], 5 unresolved",
+        "sjoin_knn round 3: levels [4], 2 unresolved",
+    ]
+    assert reliable["knn_log"] == local["knn_log"]
     # no checkpoint dir: nothing written; with one, every operator's pins
     # wrote reliable checkpoints under it
     assert local["n_overlap"] == 0
-    assert 0 < reliable["n_rank"] < reliable["n_cc"] < reliable["n_overlap"]
+    assert (
+        0 < reliable["n_rank"] < reliable["n_cc"] < reliable["n_overlap"]
+        < reliable["n_knn"]
+    )
     assert any(p.is_file() for p in ckpt.rglob("rdd-*/part-*"))
