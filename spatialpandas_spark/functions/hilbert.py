@@ -31,8 +31,9 @@ def _data2coord(vals: np.ndarray, lo: float, hi: float, side: int) -> np.ndarray
         hi = lo + 1.0
     with np.errstate(invalid="ignore"):
         res = ((vals - lo) * (side / (hi - lo)))
-        res = np.where(np.isfinite(res), res, 0.0).astype(np.int64)
-    return np.clip(res, 0, side - 1)
+        res = np.where(np.isfinite(res), res, 0.0)
+    # clip before the cast: a centre ~2**63 cells out would cast to INT64_MIN
+    return np.clip(res, 0, side - 1).astype(np.int64)
 
 
 def hilbert_xy2d(p: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:

@@ -58,6 +58,14 @@ def get_spark(
         # only the Python file:line, which would point into this
         # package's own operator modules.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Fork Python workers from the package's daemon: each task's
+        # importlib.invalidate_caches() otherwise re-parses the pyspark, py4j
+        # and spark-core archive indexes (~70 ms per Arrow/pandas task,
+        # whatever its rows; see _pyworker.py and docs/SCALE.md "Kernels:
+        # three tiers").
+        # Executors must be able to import spatialpandas_spark, as every
+        # UDF in the package already requires.
+        .config("spark.python.daemon.module", "spatialpandas_spark._pyworker")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # Events-pipeline session contract (see sources/events.py): the

@@ -99,3 +99,24 @@ def test_udf_on_spark(spark):
     rows = df.withColumn("h", udf(F.col("x"), F.col("y"))).collect()
     hs = sorted(r["h"] for r in rows)
     assert hs == list(range(64))
+
+
+def test_far_out_centres_clip_to_the_near_grid_edge():
+    """A centre far beyond ``total_bounds`` (a stray ``1e30``) clamps to the
+    grid edge on its own side; it must not overflow the int64 cast. NaN and
+    +-inf still map to cell 0."""
+    import warnings
+
+    from spatialpandas_spark.functions.hilbert import _data2coord
+
+    side = 1 << 4
+    vals = np.array([1e30, -1e30, 2.0, 0.5, np.nan, np.inf, -np.inf])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = _data2coord(vals, 0.0, 1.0, side)
+    assert got.tolist() == [side - 1, 0, side - 1, side // 2, 0, 0, 0]
+    far = hilbert_from_centers(
+        np.array([1e30, -1e30]), np.array([1e30, -1e30]), (0.0, 0.0, 1.0, 1.0), p=4
+    )
+    edge = hilbert_xy2d(4, np.array([side - 1, 0]), np.array([side - 1, 0]))
+    assert far.tolist() == edge.tolist()
