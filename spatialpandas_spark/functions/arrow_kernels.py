@@ -413,79 +413,3 @@ def cx_filter_arrow(
 
     refined = maybe.mapInArrow(run, maybe.schema)
     return covered.unionByName(refined)
-
-
-# ------------------------------------------------------- sjoin refinement
-def point_in_polygon_pairs_mask(
-    px: np.ndarray, py: np.ndarray, poly: pa.Array, multi: bool
-) -> np.ndarray:
-    """Vectorized even-odd ray cast for PAIR batches: row i asks whether
-    point (px[i], py[i]) lies in poly[i]. Twin of
-    ``predicates.st_point_in_polygon`` (same crossing rule, holes subtract
-    by parity; multipolygon = any constituent polygon odd)."""
-    n = len(px)
-    nesting = 3 if multi else 2
-    values, levels = _decompose(poly, nesting)
-    xs, ys = values[0::2], values[1::2]
-    npts = len(xs)
-    if multi:
-        ring_offs = levels[2] // 2
-        poly_of_ring = np.repeat(
-            np.arange(len(levels[1]) - 1), np.diff(levels[1])
-        )
-        pair_of_poly = np.repeat(np.arange(n), np.diff(levels[0]))
-    else:
-        ring_offs = levels[1] // 2
-        poly_of_ring = np.repeat(np.arange(n), np.diff(levels[0]))
-        pair_of_poly = np.arange(n)
-
-    nrings = len(ring_offs) - 1
-    pt_ring = np.repeat(np.arange(nrings), np.diff(ring_offs))
-    out = np.zeros(n, dtype=bool)
-    if npts > 1:
-        same_ring = pt_ring[:-1] == pt_ring[1:]
-        seg_poly = poly_of_ring[pt_ring[:-1]]
-        seg_pair = pair_of_poly[seg_poly]
-        qx, qy = px[seg_pair], py[seg_pair]
-        sx0, sy0 = xs[:-1], ys[:-1]
-        sx1, sy1 = xs[1:], ys[1:]
-        straddles = (sy0 > qy) != (sy1 > qy)
-        cross = (sx1 - sx0) * (qy - sy0) - (qx - sx0) * (sy1 - sy0)
-        crossed = straddles & ((cross > 0) == (sy1 > sy0)) & same_ring
-        crossings = np.bincount(seg_poly[crossed], minlength=len(pair_of_poly))
-        poly_odd = (crossings % 2).astype(bool)
-        out = np.bincount(pair_of_poly[poly_odd], minlength=n).astype(bool)
-    if poly.null_count:
-        out &= ~np.asarray(poly.is_null())
-    return out
-
-
-def refine_point_in_polygon_pairs(
-    pairs: DataFrame, point_col: str, poly_col: str, poly_type: str
-) -> DataFrame:
-    """Filter candidate-pair rows (point struct vs polygon) to exact
-    intersections via one Arrow pass per batch — the vectorized stage a
-    bbox-only join composes with (used by ``sjoin(refine='arrow')``)."""
-    if poly_type not in ("polygon", "multipolygon"):
-        raise ValueError(f"unsupported poly_type {poly_type!r}")
-    names = pairs.schema.fieldNames()
-    pi, gi = names.index(point_col), names.index(poly_col)
-    multi = poly_type == "multipolygon"
-
-    def run(batches):
-        for batch in batches:
-            pt = batch.column(pi)
-            px = np.asarray(pt.field("x"), dtype=np.float64)
-            py = np.asarray(pt.field("y"), dtype=np.float64)
-            mask = point_in_polygon_pairs_mask(px, py, batch.column(gi), multi)
-            if pt.null_count:
-                mask &= ~np.asarray(pt.is_null())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(i).filter(pa.array(mask))
-                    for i in range(batch.num_columns)
-                ],
-                schema=batch.schema,
-            )
-
-    return pairs.mapInArrow(run, pairs.schema)

@@ -26,17 +26,11 @@ Only ``op='intersects'`` exists, like the reference (``sjoin.py:64-70``).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.functions.measures import st_bounds
-from spatialpandas_spark.functions.predicates import (
-    bbox_overlap,
-    st_point_in_polygon,
-    st_point_in_multipolygon,
-)
+from spatialpandas_spark.functions.predicates import bbox_overlap
 from spatialpandas_spark.materialize import materialize
 
 _SUPPORTED_HOW = ("inner", "left", "right")
@@ -97,42 +91,23 @@ def sjoin(
     cell_size: float | None = None,
     left_bounds: str | None = "bounds",
     right_bounds: str | None = "bounds",
-    refine: str = "expr",
 ) -> DataFrame:
     """``strategy`` is ``"broadcast"`` (small dim side), ``"grid"``
-    (big x big, explode-to-cells hash equi-join; needs ``cell_size``),
-    or ``"auto"`` — pick broadcast when the build side's Catalyst size
-    estimate fits the session broadcast threshold, else grid with a
-    sampled cell-size estimate (no hand-tuning). Non-file frames carry
-    a huge default size estimate, so auto conservatively grids them —
-    the safe failure mode; pass ``strategy="broadcast"`` explicitly for
-    small in-memory frames.
+    (big x big, explode-to-cells hash equi-join; needs ``cell_size``,
+    used as given), or ``"auto"`` — pick broadcast when the build side's
+    Catalyst size estimate fits the session broadcast threshold, else
+    grid with a sampled cell-size estimate (no hand-tuning). Non-file
+    frames carry a huge default size estimate, so auto conservatively
+    grids them — the safe failure mode; pass ``strategy="broadcast"``
+    explicitly for small in-memory frames.
 
-    ``refine`` picks how the exact predicate evaluates: ``"expr"``
-    (default) folds it into the join condition as a JVM expression;
-    ``"arrow"`` joins on the bbox conjunct only and refines candidate
-    pairs with one vectorized Arrow pass (point×polygon inner joins).
-
-    Measured guidance: ``"expr"`` stays the default because the arrow
-    path materializes every bbox-candidate pair through Arrow — the
-    duplicated polygon payload costs more than the vectorized ray cast
-    saves at typical selectivities (wash at 600k×25 simple diamonds,
-    ~10% slower at 200-vertex polygons on local[32]). Its niche is
-    predicates far more expensive than payload transfer."""
+    The exact predicate is folded into the join condition behind the
+    bbox conjunct. Results do not depend on ``cell_size``: report-once
+    emits each intersecting pair from exactly one cell."""
     if op != "intersects":
         raise ValueError(f"Only op='intersects' is supported, got {op!r}")
     if how not in _SUPPORTED_HOW:
         raise ValueError(f"how must be one of {_SUPPORTED_HOW}, got {how!r}")
-    if refine not in ("expr", "arrow"):
-        raise ValueError(f"refine must be 'expr' or 'arrow', got {refine!r}")
-    if refine == "arrow" and not (
-        how == "inner"
-        and left_type == "point"
-        and right_type in ("polygon", "multipolygon")
-    ):
-        raise ValueError(
-            "refine='arrow' supports inner point×(multi)polygon joins"
-        )
 
     lcols, rcols = set(left.columns), set(right.columns)
     left, lb = _prepare(left, left_geom, left_type, "l", rcols, lsuffix, left_bounds)
@@ -158,29 +133,23 @@ def sjoin(
     # geometry columns may share a name across sides; qualify via DataFrame
     lgeom = left[left_geom]
     rgeom = right[right_geom]
-    cond = bbox_overlap(left[lb], right[rb])
-    if refine == "expr":
-        cond = cond & _exact_predicate(lgeom, left_type, rgeom, right_type)
+    cond = bbox_overlap(left[lb], right[rb]) & _exact_predicate(
+        lgeom, left_type, rgeom, right_type
+    )
 
     if strategy == "broadcast":
         # broadcast the side that is NOT preserved by an outer join
         if how == "right":
             joined = F.broadcast(left).join(right, cond, how)
-        elif how == "left":
-            joined = left.join(F.broadcast(right), cond, how)
         else:
             joined = left.join(F.broadcast(right), cond, how)
     elif strategy == "grid":
         if cell_size is None:
             raise ValueError("grid strategy requires cell_size")
-        cell_size = _refine_cell_size(left, lb, right, rb, float(cell_size))
-        joined = _grid_join(
-            left, right, lb, rb, cond, how, cell_size
-        )
+        joined = _grid_join(left, right, lb, rb, cond, how, cell_size)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    pt_name, poly_name = left_geom, right_geom
     if left_geom == right_geom:
         # keep both geometry columns by suffixing, like payload collisions;
         # positional rename (toDF) because both sides share the name
@@ -188,16 +157,6 @@ def sjoin(
             f"{c}_{lsuffix}" if c == left_geom else c for c in left.columns
         ] + [f"{c}_{rsuffix}" if c == right_geom else c for c in right.columns]
         joined = joined.toDF(*names)
-        pt_name = f"{left_geom}_{lsuffix}"
-        poly_name = f"{right_geom}_{rsuffix}"
-    if refine == "arrow":
-        from spatialpandas_spark.functions.arrow_kernels import (
-            refine_point_in_polygon_pairs,
-        )
-
-        joined = refine_point_in_polygon_pairs(
-            joined, pt_name, poly_name, right_type
-        )
     return joined.drop(lb, rb)
 
 
@@ -225,70 +184,6 @@ def _broadcast_threshold(spark) -> int:
         return int(raw) * mult
     except ValueError:  # pragma: no cover - malformed conf
         return 10 << 20
-
-
-def _sampled_geom_side(df: DataFrame, bcol: str, sample_n: int = 2048) -> float:
-    """Median bbox side from a bounded sample of a side's bounds column —
-    0.0 when degenerate (points) or empty. One limit() collect."""
-    rows = df.select(F.col(bcol).alias("b")).limit(sample_n).collect()
-    import numpy as np
-
-    b = [r["b"] for r in rows if r["b"] is not None]
-    if not b:
-        return 0.0
-    w = np.asarray([x["x1"] - x["x0"] for x in b], dtype=np.float64)
-    h = np.asarray([x["y1"] - x["y0"] for x in b], dtype=np.float64)
-    w, h = w[np.isfinite(w)], h[np.isfinite(h)]
-    return max(
-        float(np.median(w)) if len(w) else 0.0,
-        float(np.median(h)) if len(h) else 0.0,
-    )
-
-
-def _refine_cell_size(
-    left: DataFrame, lb: str, right: DataFrame, rb: str, given: float
-) -> float:
-    """Shrink a caller-provided grid cell when it is far coarser than the
-    geometries: candidate-pair volume grows ~quadratically with
-    cell/geometry-size ratio (every cell pairs all its residents), while
-    per-geometry cell duplication only grows once the cell drops BELOW
-    the geometry size. The r15 b11 profile measured the imbalance: at the
-    bench's cell=50 over ~4-unit diamonds the join evaluated ~10M
-    candidates (39 s CPU) for 26k matches.
-
-    The refined cell is the auto heuristic's 2x the larger side's median
-    bbox side — bounding duplication near (1/2 + 1)^2 ≈ 2-4 cells per
-    geometry on BOTH sides — applied only when it undercuts the caller's
-    value by >2x (hysteresis: a well-tuned caller hint is never churned).
-    Shrink-only: growing the cell trades bounded explode for quadratic
-    candidates, never worth it without caller knowledge. Results are
-    cell-size-invariant (the report-once dedup emits each intersecting
-    pair from exactly one cell for ANY cell size), so this is a physical
-    knob, not semantics; costs two bounded limit() collects.
-
-    Size-gated (the brief's scale-adaptive rule): the two sample jobs
-    cost a constant ~0.5-1 s of driver latency, and at MB-scale inputs
-    the probe stage they shrink is not the wall-clock bound — the r15
-    same-session interleave read cell-refined wall FLAT at sf0.1 (probe
-    CPU 39 s -> 5.7 s, wall 3.08 vs 3.08) and the sampled variant 0.85 s
-    WORSE. Refinement therefore engages only when a side's optimizer
-    size estimate crosses ``SPARK_GRAFT_SJOIN_REFINE_MIN_BYTES`` (default
-    256 MB — probe volume there amortizes the constant many times over;
-    non-file frames with unknown/huge estimates engage it, which is the
-    safe direction since their sampling cost tracks their real size)."""
-    import os
-
-    gate = int(
-        os.environ.get("SPARK_GRAFT_SJOIN_REFINE_MIN_BYTES", 256 << 20)
-    )
-    if max(_plan_size_bytes(left), _plan_size_bytes(right)) < gate:
-        return given
-    est = 2.0 * max(
-        _sampled_geom_side(left, lb), _sampled_geom_side(right, rb)
-    )
-    if est > 0.0 and est < given / 2.0:
-        return est
-    return given
 
 
 def _estimate_cell_size(right: DataFrame, rb: str, sample_n: int = 2048) -> float:

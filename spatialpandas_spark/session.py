@@ -39,18 +39,6 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
         )
-        # AQE coalescing targets BYTES, but Arrow kernel stages cost
-        # per-row compute orders of magnitude above their byte size; at
-        # the bench's MB-scale inputs the 1m default packs a whole
-        # heavy stage into 1-2 tasks (round-14 b25 profile: one 16 s
-        # task). Production keeps Spark's default (partitions there are
-        # GB-scale, the floor never binds); the local bench overrides
-        # DOWN via SPARK_GRAFT_MIN_PARTITION_SIZE, mirroring the
-        # SPARK_GRAFT_MAX_PARTITION_BYTES pattern above.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"),
-        )
         # PySpark's DataFrame call-site capture (on by default) costs
         # extra py4j round trips and a stack walk per F.* / DataFrame
         # call (4-core AMD EPYC VM: F.col 1.47 -> 0.19 ms, kNN's 9-offset

@@ -152,66 +152,48 @@ def test_grid_outer_joins_match_broadcast(spark):
         assert g.count() == b.count(), how
 
 
-def test_sjoin_arrow_refine_matches_expr(spark):
-    """refine='arrow' (bbox-only join + vectorized pair ray cast) equals
-    the expression path for point×polygon and point×multipolygon."""
-    import numpy as np
-
-    from spatialpandas_spark import sjoin, st_make_diamond, st_point
+def test_sjoin_point_multipolygon_matches_oracle(spark):
+    """Point × multipolygon through both strategies equals a plain-Python
+    diamond-membership oracle: a point is in a multipolygon when it lies
+    in either of its two disjoint diamonds (|x-cx| + |y-cy| <= r)."""
+    from spatialpandas_spark import st_make_diamond
 
     rng = np.random.default_rng(13)
-    pts = spark.createDataFrame(
-        [
-            (i, float(x), float(y))
-            for i, (x, y) in enumerate(rng.uniform(0, 100, (1500, 2)))
-        ],
-        "pid long, x double, y double",
-    ).select("pid", st_point(F.col("x"), F.col("y")).alias("geom"))
-    dias = spark.range(8).select(
-        F.col("id").alias("did"),
-        st_make_diamond(
-            (F.col("id") * 14 + 6).cast("double"),
-            (F.col("id") * 11 + 9).cast("double"),
-            F.lit(8.5),
+    pts_rows = [
+        (i, float(x), float(y))
+        for i, (x, y) in enumerate(rng.uniform(0, 100, (1500, 2)))
+    ]
+    pts = spark.createDataFrame(pts_rows, "pid long, x double, y double").select(
+        "pid", st_point(F.col("x"), F.col("y")).alias("geom")
+    )
+    # piece a lies in x < 45, piece b in x > 50: never overlapping
+    rad = 4.5
+    parts = [
+        (d, 5.0 + 5 * d, 10.0 + 11 * d, 55.0 + 5 * d, 90.0 - 11 * d)
+        for d in range(8)
+    ]
+    mp = spark.createDataFrame(
+        parts, "did long, ax double, ay double, bx double, by double"
+    ).select(
+        "did",
+        F.array(
+            st_make_diamond(F.col("ax"), F.col("ay"), F.lit(rad)),
+            st_make_diamond(F.col("bx"), F.col("by"), F.lit(rad)),
         ).alias("poly"),
     )
-    mp = dias.select(
-        "did", F.array(F.col("poly"), F.col("poly")).alias("poly")
-    )
-
-    def pairs(df):
-        return {(r["pid"], r["did"]) for r in df.select("pid", "did").collect()}
-
-    for right, rt in ((dias, "polygon"), (mp, "multipolygon")):
-        for strat, cs in (("broadcast", None), ("grid", 25.0)):
-            a = pairs(
-                sjoin(
-                    pts, right, left_geom="geom", right_geom="poly",
-                    left_type="point", right_type=rt,
-                    strategy=strat, cell_size=cs,
-                )
-            )
-            b = pairs(
-                sjoin(
-                    pts, right, left_geom="geom", right_geom="poly",
-                    left_type="point", right_type=rt,
-                    strategy=strat, cell_size=cs, refine="arrow",
-                )
-            )
-            assert a == b and a, (rt, strat)
-
-
-def test_sjoin_arrow_refine_rejects_unsupported(spark):
-    from spatialpandas_spark import sjoin, st_point
-
-    df = spark.range(2).select(
-        "id", st_point(F.col("id").cast("double"), F.lit(0.0)).alias("geom")
-    )
-    with pytest.raises(ValueError, match="refine='arrow'"):
-        sjoin(
-            df, df, left_geom="geom", right_geom="geom",
-            left_type="point", right_type="point", refine="arrow",
-        )
+    expect = {
+        (pid, did)
+        for pid, x, y in pts_rows
+        for did, ax, ay, bx, by in parts
+        if abs(x - ax) + abs(y - ay) <= rad or abs(x - bx) + abs(y - by) <= rad
+    }
+    assert expect
+    for strat, cs in (("broadcast", None), ("grid", 7.0)):
+        j = sjoin(pts, mp, left_geom="geom", right_geom="poly",
+                  left_type="point", right_type="multipolygon",
+                  strategy=strat, cell_size=cs)
+        got = {(r["pid"], r["did"]) for r in j.collect()}
+        assert got == expect, strat
 
 
 def test_auto_strategy_small_side_broadcasts(spark, fixtures, tmp_path):
@@ -269,34 +251,36 @@ def test_auto_grid_estimates_cell_size_for_points(spark, fixtures):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_grid_cell_refinement_gated_and_invariant(spark, fixtures, monkeypatch):
-    """r15: an oversized caller cell is refined from the bounds sample —
-    but only past the size gate (constant sampling cost must not tax
-    MB-scale known-size inputs; unknown estimates engage, the safe
-    direction) — and the result set is cell-size-invariant."""
+def test_grid_keeps_caller_cell_and_runs_no_job(spark, fixtures, monkeypatch):
+    """A caller's grid cell is used as given: even with a huge size
+    estimate the call samples nothing (it builds a plan and launches no
+    Spark job), and the result is the same for any cell size."""
     import importlib
 
     sjmod = importlib.import_module("spatialpandas_spark.operators.sjoin")
-
+    monkeypatch.setattr(sjmod, "_plan_size_bytes", lambda df: 1 << 40)
     left, right, pts, polys, expect = fixtures
 
-    def run():
-        j = sjoin(left, right, left_geom="geom", right_geom="geom",
-                  left_type="point", right_type="polygon",
-                  strategy="grid", cell_size=1000.0)
+    def run(cell_size):
+        return sjoin(left, right, left_geom="geom", right_geom="geom",
+                     left_type="point", right_type="polygon",
+                     strategy="grid", cell_size=cell_size)
+
+    def pairs(j):
         return {(r["pid"], r["gid"]) for r in j.collect()}
 
-    seen = []
-    orig = sjmod._sampled_geom_side
-    monkeypatch.setattr(
-        sjmod, "_sampled_geom_side",
-        lambda df, b, sample_n=2048: seen.append(1) or orig(df, b, sample_n),
-    )
-    # below the gate (known-small estimate): caller's cell stands, no jobs
-    monkeypatch.setattr(sjmod, "_plan_size_bytes", lambda df: 1 << 20)
-    assert run() == expect
-    assert not seen, "sampler must not run below the size gate"
-    # past the gate: the sampler runs, the cell shrinks, results identical
-    monkeypatch.setattr(sjmod, "_plan_size_bytes", lambda df: 1 << 40)
-    assert run() == expect
-    assert seen, "sampler must engage past the gate"
+    sc = spark.sparkContext
+    group = "sjoin-grid-caller-cell"
+    sc.setJobGroup(group, "grid sjoin with a caller cell")
+    try:
+        j = run(1000.0)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        got = pairs(j)
+        # the probe does see jobs once an action runs
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == expect
+    for cell_size in (20.0, 2.5):
+        assert pairs(run(cell_size)) == expect, cell_size
