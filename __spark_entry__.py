@@ -869,6 +869,7 @@ def q_streaming_sketch(spark, sf_dir):
     tests/test_streaming_sketch.py."""
     import tempfile
 
+    from spatialpandas_spark.materialize import materialize
     from spatialpandas_spark.streaming.sketch import load_sketch, sketch_batch
 
     import os
@@ -883,18 +884,17 @@ def q_streaming_sketch(spark, sf_dir):
     k = _STREAM_SKETCH_K
     out = None
     for i in range(3):
-        cur = (
+        # materialize NOW: the replay below rewrites the batch=1
+        # partition files this lazy read would otherwise list late
+        cur = materialize(
             sketch_batch(
                 spark,
                 docs.filter(F.col("doc_id") % 3 == i),
                 st,
                 k=k,
                 batch_id=i,
-            )
-            .select(F.lit(f"b{i}").alias("src"), "rank", "h")
-            # materialize NOW: the replay below rewrites the batch=1
-            # partition files this lazy read would otherwise list late
-            .localCheckpoint(eager=True)
+            ).select(F.lit(f"b{i}").alias("src"), "rank", "h"),
+            eager=True,
         )
         out = cur if out is None else out.unionByName(cur)
     # replay a middle batch: state must stay identical (exactly-once)
@@ -927,6 +927,7 @@ def q_screen_batch(spark, sf_dir):
     import os
     import tempfile
 
+    from spatialpandas_spark.materialize import materialize
     from spatialpandas_spark.operators.contamination_index import (
         build_decon_index,
     )
@@ -957,18 +958,21 @@ def q_screen_batch(spark, sf_dir):
 
     out = None
     for i in range(3):
-        cur = shape(
-            screen_batch(
-                spark,
-                corpus.filter(F.col("doc_id") % 3 == i),
-                ixp,
-                st,
-                batch_id=i,
+        # materialize NOW: the replay below rewrites the batch=1
+        # state partition a lazy summary read would list late
+        cur = materialize(
+            shape(
+                screen_batch(
+                    spark,
+                    corpus.filter(F.col("doc_id") % 3 == i),
+                    ixp,
+                    st,
+                    batch_id=i,
+                ),
+                f"b{i}",
             ),
-            f"b{i}",
-            # materialize NOW: the replay below rewrites the batch=1
-            # state partition a lazy summary read would list late
-        ).localCheckpoint(eager=True)
+            eager=True,
+        )
         out = cur if out is None else out.unionByName(cur)
     screen_batch(
         spark, corpus.filter(F.col("doc_id") % 3 == 1), ixp, st, batch_id=1
@@ -1086,14 +1090,16 @@ def q_containment_probe(spark, sf_dir):
     shingle-hash set — the probe is a pure function of the two shingle
     sets. Breadcrumbs: tests/test_sketch.py python twins +
     tests/test_corpus_frame.py screened-decontamination regression."""
+    from spatialpandas_spark.materialize import materialize
     from spatialpandas_spark.operators.sketch import containment_probe
 
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 17 == 0)
     train = d.filter(F.col("doc_id") % 17 != 0)
-    det = containment_probe(
-        train, bench, n=5, k=_PROBE_K, detail=True
-    ).localCheckpoint(eager=False)  # consumed twice (rows + summary)
+    det = materialize(  # consumed twice (rows + summary)
+        containment_probe(train, bench, n=5, k=_PROBE_K, detail=True),
+        eager=False,
+    )
     nul = F.lit(None)
     hits = det.select(
         F.lit("probe:hits").alias("src"),

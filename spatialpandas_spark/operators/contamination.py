@@ -57,6 +57,9 @@ def ngram_overlap(
     ``overlap = matched/total`` (0.0 for docs with no shingles). One
     broadcast join + one groupBy(doc) shuffle; the benchmark side must be
     broadcast-sized (true for every real eval suite).
+
+    Precondition (not checked): ``id_col`` is unique per row; rows sharing
+    an id are scored as one document.
     """
     bset = benchmark_shingles(bench, bench_text_col, n).withColumn(
         "__hit", F.lit(1)
@@ -276,7 +279,8 @@ def ngram_overlap_bloom(
        instead of a driver broadcast.
 
     The result is exact for ANY ``fpp``; the knob only trades candidate
-    volume against bloom bytes."""
+    volume against bloom bytes. Same unique-``id_col`` precondition as
+    :func:`ngram_overlap`."""
     bset = benchmark_shingles(bench, bench_text_col, n)
     # bounded: one integer. The count also sizes the bitmap.
     n_items = bset.count()
@@ -323,7 +327,8 @@ def decontaminate(
     so the removal is a broadcast anti-join — the corpus itself is never
     shuffled. ``method='bloom'`` scores overlap via
     :func:`ngram_overlap_bloom` (same exact values; use when the
-    benchmark shingle set exceeds broadcast size)."""
+    benchmark shingle set exceeds broadcast size). Precondition (not
+    checked): ``id_col`` is unique per row; removal is by id."""
     if method not in ("broadcast", "bloom"):
         raise ValueError(f"unknown decontamination method {method!r}")
     fn = ngram_overlap if method == "broadcast" else ngram_overlap_bloom

@@ -198,7 +198,10 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) whose signature-estimated
-    Jaccard >= threshold. rows = num_hashes // bands per band."""
+    Jaccard >= threshold. rows = num_hashes // bands per band.
+
+    Precondition (not checked): ``id_col`` is unique per row; rows sharing
+    an id are scored against each other's signatures."""
     rows = num_hashes // bands
     df = _ensure_parallelism(df)
     # ONE signature computation, materialized: every DataFrame branch of a
@@ -293,7 +296,8 @@ def ngram_jaccard_pairs(
     lsh_bands: int = 16,
 ) -> DataFrame:
     """Exact n-gram Jaccard over LSH-candidate pairs: LSH prunes the
-    O(n²) space, then exact |A∩B| / |A∪B| on the shingle sets decides."""
+    O(n²) space, then exact |A∩B| / |A∪B| on the shingle sets decides.
+    Precondition (not checked): ``id_col`` is unique per row."""
     cand = minhash_lsh_pairs(
         df, id_col, text_col, shingle_n, lsh_num_hashes, lsh_bands, threshold=0.0
     )
@@ -375,7 +379,8 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming, using the
     pigeonhole band trick (a pair within distance d must agree exactly on at
-    least one of d+1 bands) to avoid the O(n²) join."""
+    least one of d+1 bands) to avoid the O(n²) join. Precondition (not
+    checked): ``id_col`` is unique per row."""
     assert bands >= max_hamming + 1, "need bands > max_hamming for pigeonhole"
     band_bits = bits // bands
     # a doc with no shingles (null/empty/too-short text) has no content
@@ -461,7 +466,10 @@ def near_dup_clusters(
 
     Scale shape: the pair graph is tiny relative to the corpus; the only
     corpus-sized operations are the signature scan and one shuffle-join of
-    (doc_id -> component), which AQE typically plans as broadcast."""
+    (doc_id -> component), which AQE typically plans as broadcast.
+
+    Precondition (not checked): ``id_col`` is unique per row; a shared id
+    joins the clusters of both rows into one."""
     from spatialpandas_spark.operators.graph import connected_components
 
     pairs = minhash_lsh_pairs(
@@ -519,7 +527,8 @@ def dedup_near(
     Survivor selection needs only the component table (a row survives
     iff it is absent from the pair graph or is its own component
     representative), so the cluster-size aggregation+join of
-    ``near_dup_clusters`` is skipped (round-14)."""
+    ``near_dup_clusters`` is skipped (round-14). Same unique-``id_col``
+    precondition as :func:`near_dup_clusters`."""
     from spatialpandas_spark.operators.graph import connected_components
 
     pairs = minhash_lsh_pairs(

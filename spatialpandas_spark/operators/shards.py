@@ -234,7 +234,10 @@ def materialize_token_sequences(
     training gates: the corpus BPE encode and the epoch-mix union; r15
     plan dump showed the MapInPandas encode once per branch) runs twice.
     ``materialize`` pins it to one computation; only the three
-    consumed columns are materialized (§2.3 project early)."""
+    consumed columns are materialized (§2.3 project early).
+
+    Precondition (not checked): ``id_col`` is unique per row; the layout
+    joins the token arrays on it."""
     from spatialpandas_spark.materialize import materialize
 
     tokens = materialize(

@@ -213,6 +213,13 @@ def remove_duplicate_spans(
     Returns one row per input document: ``(id_col, kept_spans,
     text_col)`` — documents whose every span was removed survive with
     ``kept_spans = 0`` and empty text.
+
+    Precondition: ``id_col`` is unique per row; null ids are exempt and
+    come back as ``(0, "")``. Removals are keyed by id, so rows sharing
+    one would get each other's removed ranges. The result raises
+    instead, naming the id, when two such rows both have spans or a
+    row's token count differs from its id's spans. One case goes
+    unseen: an empty row sharing an id when only ``kept_spans`` is read.
     """
     if keep not in ("none", "first"):
         raise ValueError("keep must be 'none' or 'first'")
@@ -297,16 +304,32 @@ def remove_duplicate_spans(
     # ranges per document (collect_list skips the NULLs of kept spans;
     # array_sort makes the nondeterministic collect order canonical —
     # ranges are disjoint, so sorting by __s is a total order)
+    removed = F.array_sort(
+        F.collect_list(
+            F.when(
+                rmflag,
+                F.struct(F.col("__s").alias("s"), F.col("__e").alias("e")),
+            )
+        )
+    )
+    # span ids are dense 0..n-1 per row in both align modes, so a group
+    # with more spans than max(span_id) + 1 is two rows sharing an id;
+    # max(__e) is the row's token count, checked against the token array
+    # in the rebuild. Both checks ride on existing work: no extra job.
+    shared = F.col(id_col).isNotNull() & (
+        F.count("*") != F.max("span_id") + 1
+    )
+    dup = F.raise_error(
+        F.concat(
+            F.lit(f"remove_duplicate_spans requires a unique {id_col}: "),
+            F.col(id_col).cast("string"),
+            F.lit(" names more than one row"),
+        )
+    )
     per_doc = marked.groupBy(id_col).agg(
         F.count("*").alias("__total"),
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    rmflag,
-                    F.struct(F.col("__s").alias("s"), F.col("__e").alias("e")),
-                )
-            )
-        ).alias("__rm"),
+        F.max("__e").alias("__n"),
+        F.when(shared, dup).otherwise(removed).alias("__rm"),
     )
 
     from spatialpandas_spark.functions.measures import let_
@@ -324,13 +347,15 @@ def remove_duplicate_spans(
             F.array(F.lit(0)), F.transform(rm, lambda r: r["e"])
         )
         ends = F.concat(F.transform(rm, lambda r: r["s"]), F.array(F.size(tv)))
-        return F.array_join(
-            F.flatten(
-                F.zip_with(
-                    starts, ends, lambda s, e: F.slice(tv, s + 1, e - s)
-                )
-            ),
-            " ",
+        return F.when(F.size(tv) != F.col("__n"), dup).otherwise(
+            F.array_join(
+                F.flatten(
+                    F.zip_with(
+                        starts, ends, lambda s, e: F.slice(tv, s + 1, e - s)
+                    )
+                ),
+                " ",
+            )
         )
 
     rebuilt = (

@@ -32,7 +32,8 @@ The allowlist test makes any NEW layout-dependent call site fail review
 until it is either pinned or consciously added here. It also holds the
 package to ONE pinning mechanism: ``localCheckpoint`` / ``checkpoint`` /
 ``persist`` calls may appear only inside ``materialize.py``, so a direct
-pin elsewhere fails until it goes through ``materialize``.
+pin elsewhere fails until it goes through ``materialize``. The gate file
+``__spark_entry__.py`` is held to the same rule.
 """
 
 import pathlib
@@ -43,6 +44,8 @@ import pytest
 from pyspark.sql import functions as F
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "spatialpandas_spark"
+ENTRY = PKG.parent / "__spark_entry__.py"
+PINS = ("localCheckpoint", "checkpoint", "persist")
 
 # reviewed call sites: relative path -> expected count of each marker
 ALLOWED = {
@@ -64,15 +67,16 @@ ALLOWED = {
 }
 
 
-def _count_sites(marker: str) -> dict:
+def _count_sites(marker: str, paths=None) -> dict:
     got = {}
-    for path in sorted(PKG.rglob("*.py")):
+    for path in paths or sorted(PKG.rglob("*.py")):
         text = path.read_text()
         # strip comments so prose mentions don't count as call sites
         code = "\n".join(ln.split("#", 1)[0] for ln in text.splitlines())
         n = len(re.findall(rf"\b{marker}\s*\(", code))
         if n:
-            got[str(path.relative_to(PKG))] = n
+            rel = path.relative_to(PKG.parent if path == ENTRY else PKG)
+            got[str(rel)] = n
     return got
 
 
@@ -87,6 +91,12 @@ def test_layout_dependent_sites_are_reviewed(marker):
         f"unreviewed {marker} call site — audit for the sampled-exchange "
         "fork bug class (see module docstring) before allowlisting"
     )
+
+
+def test_gate_file_pins_go_through_materialize():
+    """The gate file pins its intermediates with `materialize` too, so a
+    checkpoint dir set on the session reaches every pin the gates run."""
+    assert {m: _count_sites(m, [ENTRY]) for m in PINS} == {m: {} for m in PINS}
 
 
 def test_outer_grid_join_fork_consistency_on_cached_range_input(spark):

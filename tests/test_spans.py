@@ -356,3 +356,47 @@ def test_guard_rejects_bad_param(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     with pytest.raises(ValueError):
         remove_duplicate_spans(df, min_span_tokens=0)
+
+
+@pytest.mark.parametrize("align", ["fixed", "content"])
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # both rows of id 1 have spans: the other row's ranges would be
+        # cut from "x y z"
+        [(1, "a b c d e f"), (1, "x y z"), (2, "a b c q r s")],
+        # the empty row of id 1 has no spans but would get the other
+        # row's ranges sliced out of its empty token array
+        [(1, "a b c d e f"), (1, ""), (2, "a b c q r s")],
+    ],
+    ids=["two-spanned-rows", "empty-row"],
+)
+def test_shared_id_raises_naming_the_precondition(spark, rows, align):
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = remove_duplicate_spans(df, window=3, min_count=2, align=align)
+    with pytest.raises(Exception, match="requires a unique doc_id: 1 names"):
+        out.collect()
+
+
+def test_null_ids_are_not_a_shared_id(spark):
+    """Null-id rows still count toward occurrences ("a b c" repeats)
+    and come back as (0, "")."""
+    rows = [(None, "a b c d e f"), (None, "x y z"), (2, "a b c q r s")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r["doc_id"] is None, r["kept_spans"], r["text"])
+        for r in remove_duplicate_spans(df, window=3, min_count=2).collect()
+    )
+    assert got == [(False, 1, "q r s"), (True, 0, ""), (True, 0, "")]
+
+
+def test_shared_id_raises_when_only_kept_spans_is_read(spark):
+    """A count-only read prunes the text rebuild, so the span-count check
+    alone must catch the shared id."""
+    from pyspark.sql import functions as F
+
+    rows = [(1, "a b c"), (1, "x y z"), (2, "a b c q r s")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = remove_duplicate_spans(df, window=3, min_count=2)
+    with pytest.raises(Exception, match="requires a unique doc_id: 1 names"):
+        out.agg(F.sum("kept_spans")).collect()
