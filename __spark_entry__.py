@@ -2926,7 +2926,7 @@ def q_ann_pq_exact(spark, sf_dir):
     encode -> ADC code scan -> exact-cosine rerank returns exactly the
     brute-force top-k, and the oracle is the plain brute-force SQL
     replay over the reduced corpus. Lossy-setting recall is pytest +
-    study evidence (tools/pq_study.py, BASELINE.md round-4 notes)."""
+    study evidence (BASELINE.md round-4 notes, PQ study)."""
     from spatialpandas_spark.operators.pq import pq_encode, pq_topk, train_pq
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
@@ -3045,7 +3045,7 @@ def q_ann_ivf_topk(spark, sf_dir):
       at n_probe=4/16 sits near the scan fraction (~0.64) — the
       information-theoretic bound for ANY partition index on
       structureless vectors, not an implementation gap (measured curve:
-      tools/ivf_recall_study.py, BASELINE.md).
+      BASELINE.md round-4 IVF recall study).
     - 'clustered': the deterministic clustered twin (_clustered_vecs) —
       driver-verified recall@5 = 1.0 at the same 4/16 setting, the
       regime real embedding corpora live in.

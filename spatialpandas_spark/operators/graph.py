@@ -188,7 +188,7 @@ def pagerank(
     discipline as :func:`connected_components`. Returns
     ``(node, rank)``.
 
-    Honest local-scale note (tools/crossover_pagerank.py): the
+    Honest local-scale note (BASELINE.md round 4, PageRank crossover): the
     per-iteration job floor (~2 s at local[32]) means a single-node
     numpy twin wins below ~10^8 edges; the marginal per-edge slope is
     what this formulation buys — use it when the edge list exceeds one

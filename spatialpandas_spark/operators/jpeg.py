@@ -89,10 +89,11 @@ class _BitReader:
     Hot-path design: ``_ensure`` refills a bounded integer accumulator a
     byte at a time; ``_decode_block`` consumes whole bit-groups from a
     LOCAL copy of that state with shifts/masks — no per-bit Python call
-    chain (measured ~2x on codec_study JPEG throughput vs the read_bit
-    formulation). Semantics match the per-bit version exactly: a real
-    marker supplies 1-padding per T.81 (legitimate end-of-scan fill);
-    running off the end of the data with NO marker raises."""
+    chain (measured ~2x JPEG throughput vs the read_bit formulation in
+    the round-4 codec study; BASELINE.md round 4). Semantics match the
+    per-bit version exactly: a real marker supplies 1-padding per T.81
+    (legitimate end-of-scan fill); running off the end of the data with
+    NO marker raises."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data

@@ -64,33 +64,9 @@ LANGS = [
     "th", "tr", "uk", "und", "ur", "vi", "zh",
 ]
 
-#: round-13 sibling-expansion experiment (VERDICT r12 "What's missing
-#: #1"): the four excluded languages were attacked with FIVE measured
-#: configurations (tools/langid_sibling_sweep.py, BASELINE.md round
-#: 13) — three joint 43-class retrains (each traded one sibling's
-#: recall for another's: id 0.04-0.72, hr 0.30-0.94) and a two-stage
-#: design (coarse untouched + binary contrastive refiners, with and
-#: without a confidence gate). The two-stage diagnosis was decisive:
-#: for cs/sk and hr/sr the binary's per-gram gap on REAL old-sibling
-#: prose EXCEEDS its gap on real new-sibling prose (cs old-gaps all
-#: >= 0.025 vs sk new-gaps from 0.014), i.e. NO threshold separates
-#: them — synthetic vocab-draw training cannot represent the real
-#: prose these pairs differ in. The four stay honestly excluded;
-#: their seed vocabularies below, this pair table, and the sealed
-#: 42-language reserve slice C are the ready-made starting kit for a
-#: future round with real contrastive training prose.
-#:
-#: ROUND-14 UPDATE: that lever was pulled for da/no — 170 authored
-#: PARALLEL contrastive prose pairs (tools/langid_dano_prose.py),
-#: upweight sweep, and a top-2 routing fix
-#: (tools/langid_dano_pilot.py). Real prose moved the pair from the
-#: r13 synthetic ceiling (dev 0.5) to 0.83 fresh-battery recall at
-#: <= 2 damage flips — confirming the r13 root cause from the other
-#: side — but the ship bar (>= 0.90) stays out of reach: the residual
-#: misses are sentences whose da/no surface forms genuinely coincide.
-#: Still honestly excluded; the next lever is a higher-capacity
-#: refiner over the same prose, not more prose (BASELINE.md round 14).
-SIBLING_PAIRS = {"da": "no", "cs": "sk", "id": "ms", "hr": "sr"}
+#: no/sk/ms/sr are excluded: synthetic vocab-draw training cannot separate
+#: them from da/cs/id/hr, and real da/no prose reached 0.83 recall, short
+#: of the 0.90 bar (BASELINE.md rounds 13-14, sibling experiments).
 
 #: noise alphabet for the 'und' class (uniform letter soup + digits —
 #: natural languages have highly non-uniform gram distributions)
@@ -516,10 +492,8 @@ _VOCAB = {
     # the Latin/Cyrillic/Arabic-script additions carry full
     # function-word + parallel-content blocks; the too-close siblings
     # (no vs da, sk vs cs, sr-Latin vs hr, ms vs id) are deliberately
-    # EXCLUDED in round 12 as beyond the 4096-bucket ceiling; round 13
-    # attacked them with five measured configurations and they remain
-    # honestly excluded — see SIBLING_PAIRS above for the evidence
-    # trail (their candidate seed vocabularies close this table).
+    # EXCLUDED in round 12 as beyond the 4096-bucket ceiling; they stay
+    # excluded (see the comment under LANGS).
     "da": """og i at det til er som af for ikke der jeg du hun
         ham hende hans hendes hvor eller hvad skal selv her alle vil
         kunne ind når være dog noget ville jo deres ned denne kom mod
@@ -749,84 +723,6 @@ _VOCAB = {
         ይመጣል ይላል ያያል ያደርጋል ይሄዳል ይሰጣል አዲስ አሮጌ ጥሩ ትልቅ ትንሽ
         የመጀመሪያ የመጨረሻ እያንዳንዱ የት መቼ ለምን ማን ምን ያ ይህ አንድ ሁለት የእሱ
         የእኔ የአንተ የእኛ ወደ ከ በ እስከ እንደ ስለ""",
-    # --- round-13 sibling-candidate seed vocabularies (NOT coarse
-    # classes — see SIBLING_PAIRS for the measured expansion attempt
-    # and why the four stay excluded). Kept as the starting kit for a
-    # future round: each block leans hard on the CONTRASTIVE forms
-    # that separate it from its near-sibling:
-    # no vs da: etter/efter, nå/nu, hva/hvad, språk/sprog, -sjon/-tion,
-    #   kj-/skj- clusters, sa/sagde, uke/uge, vei/vej, mellom/mellem;
-    # sk vs cs: som/jsem, sa/se, ako/jak, čo/co, keď/když, ľ/ô/ä
-    #   diacritics, -ou/-ú endings, veľmi/velmi;
-    # ms vs id: kerana/karena, boleh/bisa, mahu/mau, wang/uang,
-    #   kereta/mobil, pejabat/kantor, sahaja/saja, comel, awak;
-    # sr (Latin, ekavian) vs hr (ijekavian): lepo/lijepo, mleko/
-    #   mlijeko, dete/dijete, vreme/vrijeme, reka/rijeka, šta/što,
-    #   takođe/također, voz/vlak, hleb/kruh, nedelja/tjedan.
-    "no": """av nå etter mellom uten vann arbeid alltid barn hus dag sak
-        form øyeblikk spørsmål historie politikk samfunn utdanning
-        opplysninger utvikling gjennom igjen først sist hverandre hva
-        litt grønn høy onsdag høsten våren kvelden uken gaten veien
-        skogen kjøkkenet rommet sa fikk gikk løp leste snakket tenkte
-        visste leser hender tenner eple sesong lenge ferdig vekk søker
-        kjøper løper møter bursdag innenfor utenfor kanskje nettopp
-        dessuten verken helgen melk kjøtt grønnsaker blått hvitt
-        nøkkel været sjøen øynene klær bøker treet språk regjering år
-        tid liv by land informasjon situasjon stasjon avis gutt jente
-        bonde øy fjell fjord bekk elv skip båt fly tog bil sykkel
-        penger pris butikk marked legen sykehuset fotball laget
-        datamaskinen skjermen feilen vitenskap studentene oppgaven
-        forsøket oppdaget bestemor våknet trøtte sinte redde bygde
-        reddet ny nytt god stor liten og i at det til er som for ikke
-        en den jeg du hun vi de har var fra kan skal eller så her der
-        når mange mennesker verden alle noe andre kom går se få vil
-        mye""",
-    "sk": """sa som ako čo bol bola bolo byť sme ste sú pre pri pred medzi
-        alebo keď ešte len tiež veľmi veľa viac ľudia mesto krajina
-        práca deti dom svet deň veci vec príklad okamih miesto
-        história spoločnosť vzdelanie informácie situácia vzťah môže
-        chcel prišiel povedal videl veľký prvý posledný ktorý ktorá
-        ktoré kedy prečo kto ja ty mňa teba jeho jej ich vás čože nič
-        niečo všetko niekto nikto teraz zajtra týždeň mesiac jeseň
-        ulica cesta kuchyňa izba povedala dostal išiel bežal jedol
-        čítal písal hovoril myslel vedel učiteľ číta ruky zuby jablko
-        sezóna dlho hotový najbližšie preč hľadá kupuje beží stretáva
-        narodeniny možno čoskoro hneď práve inak totiž teda preto
-        okrem bežný víkend chlieb mlieko maslo mäso zelenina červené
-        žlté modré biele kľúč počasie jazero oči oblečenie knihy strom
-        jazyk lekár nemocnica srdce futbal mužstvo zápas stroj počítač
-        obrazovka telefón batéria chyba funguje minúty sekundy výskum
-        veda univerzita profesor študenti úloha teória dokázal objavil
-        rodina otec brat babka dieťa bábätko spal zobudil unavení
-        šťastní nahnevaní vystrašení raňajky obed čakal drží prejsť
-        postavil zachránil""",
-    "ms": """awak boleh mesti kerana selepas bandar kerajaan kanak perkara
-        soalan maklumat keadaan mahu nak hendak sahaja macam ialah
-        wang pejabat cikgu universiti kajian sains penyelidikan bukti
-        menemui emak datuk comel tingkap senarai warganegara doktor
-        hospital skrin bateri minit ralat filem muzik televisyen
-        stesen teksi bas polis pasport lesen projek kelab perlawanan
-        bahawa antarabangsa seronok penat esok kelak sekejap sikit
-        basikal motosikal lori tandas kahwin isteri makcik pakcik
-        budak seluar kasut pening ubat tuala almari cawan pinggan sudu
-        kicap ais syiling cukai dewan tadika darjah encik puan cik
-        petang kelmarin kilang syarikat jabatan mesyuarat pelancong
-        percutian""",
-    "sr": """šta k pre posle ovde tamo vreme uvek deca svet primer mesto
-        istorija ekonomija hteo rekao video mali poslednji gde ko lepo
-        lepa mleko dete reka takođe voz hleb nedelja hiljada pozorište
-        fudbal porodica baba deda spavao probudio umorni srećni ljuti
-        uplašeni doručak ručak večera čekao drži proći sagradio spasao
-        jezik lekar bolnica srce utakmica mašina računar greška
-        sekunde istraživanje nauka univerzitet zadatak teorija ogled
-        dokazao otkrio veče mesec proleće leto šuma kuhinja prozor
-        rekla dobio išao trčao jeo čitao pisao govorio mislio znao
-        učitelj čita sezona dugo gotov najbliže daleko sreće rođendan
-        dole unutra napolju pozadi uskoro inače običan hleba mleka
-        maslac povrće crveno žuto plavo belo odeća cena prodavnica
-        pijaca i u je se na da za od su sa ne o a to po ali kao već
-        bio bila bilo biti smo ja ti on ona mi vi oni više godina
-        ljudi grad dan kuća posao danas""",
 }
 VOCAB = {k: v.split() for k, v in _VOCAB.items()}
 
@@ -834,17 +730,15 @@ VOCAB = {k: v.split() for k, v in _VOCAB.items()}
 _NO_SPACE = {"zh", "ja", "th"}
 
 
-def langid_corpus(per_lang: int = 400, salt: str = "train", langs=None):
+def langid_corpus(per_lang: int = 400, salt: str = "train"):
     """Deterministic labeled corpus: ``per_lang`` synthetic sentences
-    per language, words drawn from the seed vocabularies with a string
-    seed — ``salt`` separates train from held-out draws. Returns
-    ``list[(lang, text)]``. ``langs`` defaults to the coarse class set
-    ``LANGS``; the sibling binaries pass their own pair (the new
-    languages have vocabularies but are NOT coarse classes)."""
+    per language of ``LANGS``, words drawn from the seed vocabularies
+    with a string seed — ``salt`` separates train from held-out draws.
+    Returns ``list[(lang, text)]``."""
     import random
 
     rows = []
-    for lang in (LANGS if langs is None else langs):
+    for lang in LANGS:
         sep = "" if lang in _NO_SPACE else " "
         for i in range(per_lang):
             rng = random.Random(f"langid:{salt}:{lang}:{i}")

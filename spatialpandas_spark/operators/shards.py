@@ -236,8 +236,11 @@ def materialize_token_sequences(
     ``materialize`` pins it to one computation; only the three
     consumed columns are materialized (§2.3 project early).
 
-    Precondition (not checked): ``id_col`` is unique per row; the layout
-    joins the token arrays on it."""
+    Precondition: ``id_col`` is unique per row. The layout joins the
+    token arrays on it, so a shared id would attach every row's tokens
+    to each of its slices; a sequence holding a shared id raises,
+    naming it. Rows sharing an id that are all empty add no tokens and
+    pass."""
     from spatialpandas_spark.materialize import materialize
 
     tokens = materialize(
@@ -261,14 +264,29 @@ def materialize_token_sequences(
         seq_col,
         F.struct(F.col(id_col).alias("o"), sliced.alias("p")).alias("__sp"),
     )
+    # a row lands in a sequence at most once, so a repeated id in a
+    # group is the join fanning out over rows that share it; sorted
+    # slices put the repeats next to each other. No extra job.
+    ps = F.col("__ps")
+    ids = F.transform(ps, lambda s: s["o"])
+    repeated = F.filter(ids, lambda x, i: (i > 0) & (x == F.get(ids, i - 1)))
+    dup = F.raise_error(
+        F.concat(
+            F.lit(
+                f"materialize_token_sequences requires a unique {id_col}: "
+            ),
+            F.get(repeated, 0).cast("string"),
+            F.lit(" names more than one row"),
+        )
+    )
     return (
         parts.groupBy(seq_col)
         .agg(F.array_sort(F.collect_list("__sp")).alias("__ps"))
         .select(
             seq_col,
-            F.flatten(
-                F.transform(F.col("__ps"), lambda s: s["p"])
-            ).alias(tokens_col),
+            F.when(F.size(ps) != F.size(F.array_distinct(ids)), dup)
+            .otherwise(F.flatten(F.transform(ps, lambda s: s["p"])))
+            .alias(tokens_col),
         )
         .withColumn("n_tokens", F.size(F.col(tokens_col)))
     )

@@ -94,9 +94,9 @@ def brute_force_topk(
     # the probe set is small by contract; collecting it lets ONE Arrow pass
     # over the corpus compute all query sims per batch — no q x corpus pair
     # table, no interpreted per-row HOF fold (measured 7.3 s -> ~1 s at
-    # 1M x 8, tools/crossover_ann.py). The limit(n+1) bound makes the
-    # collect safe: an oversized query side costs one truncated fetch, not
-    # a driver OOM.
+    # 1M x 8, BASELINE.md round-3 ANN crossover). The limit(n+1) bound
+    # makes the collect safe: an oversized query side costs one truncated
+    # fetch, not a driver OOM.
     qrows = q_sel.limit(max_collected_queries + 1).collect()
     if len(qrows) > max_collected_queries:
         cand = c.crossJoin(q_sel).select("qid", "vec_id", "__qv", "__cv")
@@ -223,7 +223,7 @@ def bucket_assign_arrow(
     """Max-cosine centroid assignment as one Arrow pass (adds
     ``__bucket``). The interpreted per-row HOF fold costs
     O(n_centroids x dim) element evaluations per corpus row — measured
-    9-14x slower than brute force at 1M vectors (tools/crossover_ann.py);
+    9-14x slower than brute force at 1M vectors (BASELINE.md round 3);
     this kernel does the same math vectorized across each record batch
     while keeping the SEQUENTIAL dim fold, so bucket ids and sims stay
     bit-identical to the Catalyst expression and the SQL oracle
@@ -610,11 +610,11 @@ def ivf_topk(
     pass 0 for raw md5-sampled centroids (deterministic, exactly
     replayable in SQL — the correctness-gate path).
 
-    Recall expectations (measured, tools/ivf_recall_study.py): on data
-    with cluster structure recall@5 is ~1.0 at n_probe/n_centroids = 4/16;
-    on ISOTROPIC vectors (no structure, e.g. random Gaussians) recall for
-    ANY IVF/partition index is information-theoretically bounded near the
-    scan fraction — no centroid quality can beat it; raise n_probe or use
+    Recall expectations (measured, BASELINE.md round-4 IVF recall
+    study): on data with cluster structure recall@5 is ~1.0 at
+    n_probe/n_centroids = 4/16; on ISOTROPIC vectors (no structure, e.g.
+    random Gaussians) recall for ANY IVF/partition index is
+    information-theoretically bounded near the scan fraction — no centroid quality can beat it; raise n_probe or use
     brute_force_topk. Columns out: (qid, vec_id, sim, rank)."""
     cents = _centroids(corpus, corpus_id, corpus_vec, n_centroids)
     if kmeans_iters > 0:

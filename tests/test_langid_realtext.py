@@ -78,14 +78,14 @@ def test_real_text_no_und_leak():
 #: (n'oubliez, anunciou, estava, mañana/manhã, dell'anno, l'année)
 #: were removed from the vocab instead of allowlisted.
 _ALLOWED_OVERLAP = {
-    # r13 da/sv/nl broadening (tools/langid_bucket_sweep.py error
+    # r13 da/sv/nl broadening (BASELINE.md round 13: the error
     # analysis ran against the 1900-sentence holdout, NOT this dev
     # set): 'na'/'nieuwe' are top-50 Dutch function/adjective words in
     # the generic everyday block — same class as de 'neue' below.
     # r14 entries (window/morning/train/record/street... families):
     # the round-14 everyday-register contrastive blocks were authored
     # from per-sentence error analysis of the 1900-sentence HOLDOUT
-    # (tools/langid_r14_sweep.py), not this dev set; every listed
+    # (BASELINE.md round 14), not this dev set; every listed
     # token is a generic top-frequency everyday word, not a
     # distinctive eval content word.
     "en": {"children", "leaves", "morning", "record", "street",

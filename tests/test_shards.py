@@ -3,6 +3,7 @@
 import random
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.rank import with_running_sum
@@ -235,6 +236,47 @@ def test_materialize_token_sequences_reference(spark):
     assert got == exp
     last = max(exp)
     assert all(n == L for s, (_, n) in got.items() if s != last)
+
+
+_TOKENS_SCHEMA = "doc_id long, token_ids array<int>, n_tokens long"
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, [10, 11], 2), (1, [20, 21, 22], 3), (2, [30, 31], 2),
+         (3, [40], 1)],
+        [(1, [10, 11, 12], 3), (1, [], 0), (2, [20, 21], 2), (3, [30], 1)],
+    ],
+    ids=["two-token-rows", "empty-row"],
+)
+def test_materialize_token_sequences_shared_id_raises(spark, rows):
+    """The layout joins token arrays on the id, so a shared id fans out:
+    the seed emitted a 7-token sequence at seq_len 4 with tokens
+    repeated. It must raise instead, naming the id."""
+    from spatialpandas_spark.operators.shards import (
+        materialize_token_sequences,
+    )
+
+    df = spark.createDataFrame(rows, _TOKENS_SCHEMA)
+    with pytest.raises(Exception, match="requires a unique doc_id: 1 names"):
+        materialize_token_sequences(df, 4).collect()
+
+
+def test_materialize_token_sequences_shared_empty_ids_pass(spark):
+    """Rows sharing an id that are all empty add no tokens, so the
+    output is the plain concat-and-chunk of the other rows."""
+    from spatialpandas_spark.operators.shards import (
+        materialize_token_sequences,
+    )
+
+    rows = [(1, [], 0), (1, [], 0), (2, [20, 21, 22], 3), (3, [30, 31], 2)]
+    df = spark.createDataFrame(rows, _TOKENS_SCHEMA)
+    got = sorted(
+        (r["seq_id"], list(r["token_ids"]))
+        for r in materialize_token_sequences(df, 4).collect()
+    )
+    assert got == [(0, [20, 21, 22, 30]), (1, [31])]
 
 
 def test_materialize_token_sequences_no_single_partition_exchange(spark):

@@ -191,8 +191,8 @@ def test_ivf_default_kmeans_beats_raw_on_skewed_clusters(spark):
     """The kmeans_iters=2 DEFAULT must deliver recall@5 >= 0.9 at
     n_probe=4/16 on moderately-noisy skew-sized clusters — the regime
     where centroid quality matters (md5 sampling allocates centroids by
-    cluster mass; k-means re-balances). Measured in
-    tools/ivf_recall_study.py: raw 0.832 vs kmeans 0.952 (round-3 verdict
+    cluster mass; k-means re-balances). Measured in the BASELINE.md
+    round-4 IVF recall study: raw 0.832 vs kmeans 0.952 (round-3 verdict
     item 1: recall assertion tightened to the >=0.9 target)."""
     from spatialpandas_spark.operators.similarity import ivf_topk
 

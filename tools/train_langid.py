@@ -23,13 +23,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import numpy as np
 
 # round 13 (VERDICT r12 ask #3): 4096 -> 16384. The bucket sweep
-# (tools/langid_bucket_sweep.py) measured the frozen holdout at
+# (BASELINE.md round 13) measured the frozen holdout at
 # 4096: 0.9642 / 8192: 0.9684 / 16384: 0.9726, with the verdict's
 # named confusions dropping (pt .90->.94, cs .84->.92, bg .90->.92,
 # total confused 68->52); da/sv remained the residual (.82->.86) at
 # the bucket step — closed by the da/sv/nl vocabulary broadening in
 # this same round (final da recall .98; the family-sub-model
-# alternative was prototyped in tools/langid_family_sweep.py and
+# alternative was prototyped in round 13 (BASELINE.md) and
 # honestly not shipped — it regressed da).
 N_FEATURES = 16384
 ORDERS = (1, 2, 3)
@@ -46,7 +46,7 @@ PER_LANG_EVAL = 80
 # cross-script confusion floor holds with zero allowances). Serving
 # compares the order-equivalent integer form n*ki + 128*s — exact
 # dyadic (see operators/langid.margins_kernel). The round-14 config
-# sweep (tools/langid_r14_sweep.py) measured raw/serve-scaled/len-std
+# sweep (BASELINE.md round 14) measured raw/serve-scaled/len-std
 # at 0.9853 / 0.9868 / 0.9879 on the dev holdout with min recall
 # 0.88 / 0.88 / 0.90 — len-std wins on every axis.
 LEN_STD = 128
