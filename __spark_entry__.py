@@ -875,9 +875,8 @@ def q_streaming_sketch(spark, sf_dir):
     import os
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # a NOT-yet-existing subpath: the state reader treats only
-    # PATH_NOT_FOUND as "first batch" (streaming/_state.py), and
-    # mkdtemp itself creates its directory
+    # a fresh subpath: a missing state directory is the first batch
+    # (streaming/_state.py)
     st = os.path.join(
         tempfile.mkdtemp(prefix="gate_streaming_sketch_"), "state"
     )

@@ -236,15 +236,27 @@ def materialize_token_sequences(
     ``materialize`` pins it to one computation; only the three
     consumed columns are materialized (§2.3 project early).
 
-    Precondition: ``id_col`` is unique per row. The layout joins the
-    token arrays on it, so a shared id would attach every row's tokens
-    to each of its slices; a sequence holding a shared id raises,
-    naming it. Rows sharing an id that are all empty add no tokens and
-    pass."""
+    Precondition: ``id_col`` is unique and non-null per row. The
+    layout joins the token arrays on it, so a shared id would attach
+    every row's tokens to each of its slices, and a null id would drop
+    its row's tokens; a null id raises, and so does a sequence holding
+    a shared id, naming it. Rows sharing an id that are all empty add
+    no tokens and pass."""
     from spatialpandas_spark.materialize import materialize
 
+    # the layout joins on the id, which never matches a null one
+    null_id = F.raise_error(
+        F.lit(f"materialize_token_sequences requires a non-null {id_col}")
+    )
     tokens = materialize(
-        tokens.select(id_col, weight_col, tokens_col), eager=False
+        tokens.select(
+            F.when(F.col(id_col).isNull(), null_id)
+            .otherwise(F.col(id_col))
+            .alias(id_col),
+            weight_col,
+            tokens_col,
+        ),
+        eager=False,
     )
     layout = pack_token_sequences(
         tokens.select(id_col, weight_col),

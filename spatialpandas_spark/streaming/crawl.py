@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from spatialpandas_spark.operators.html import extract_text_from_html
 from spatialpandas_spark.sources.archives import warc_records
+from spatialpandas_spark.streaming._state import start_loop
 from spatialpandas_spark.streaming.ingest import ingest_batch
 
 __all__ = ["extract_crawl_batch", "crawl_ingest_batch", "stream_crawl_ingest"]
@@ -88,18 +89,11 @@ def stream_crawl_ingest(
 ):
     """Attach the crawl-ingestion loop to a streaming archive frame
     (``archive_id``, ``payload``). Returns the started StreamingQuery."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        crawl_ingest_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: crawl_ingest_batch(
             batch.sparkSession, index_path, batch, output_path, threshold,
             batch_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )

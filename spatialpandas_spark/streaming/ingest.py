@@ -22,13 +22,15 @@ Semantics per micro-batch b:
   3. the remainder appends to the index and to ``output_path``.
 
 Failure note: the CURATED OUTPUT is retry-idempotent — each micro-batch
-writes its own ``ingest_batch=N`` partition via dynamic partition
-overwrite, so a replayed batch rewrites rather than double-appends (and
-the partition column is free batch provenance). The INDEX side remains
-at-least-once parquet appends: a replay can duplicate index rows, which
-is verdict-benign (`dedup_against_index` dropDuplicates the candidate
-pairs and `filter_against_index` is a left-anti — duplicates cost only
-storage and duplicate match-report rows) and removable by compaction.
+writes its own ``ingest_batch=N`` partition through the batch-keyed
+writer of streaming/_state.py, so a replayed batch rewrites rather than
+double-appends (and the partition column is free batch provenance);
+without a batch id (the batch API) the output is a plain append. The
+INDEX side remains at-least-once parquet appends: a replay can
+duplicate index rows, which is verdict-benign (`dedup_against_index`
+dropDuplicates the candidate pairs and `filter_against_index` is a
+left-anti — duplicates cost only storage and duplicate match-report
+rows) and removable by compaction.
 Exactly-once index appends would need a transactional table format —
 called out in SCALE.md rather than papered over.
 """
@@ -45,6 +47,7 @@ from spatialpandas_spark.operators.dedup_index import (
     filter_against_index,
     load_minhash_params,
 )
+from spatialpandas_spark.streaming._state import start_loop, write_partition
 
 
 def _drop_within_batch_dups(
@@ -69,30 +72,6 @@ def _drop_within_batch_dups(
     return batch.join(losers, p["id_col"], "left_anti")
 
 
-def _write_output(
-    df: DataFrame, output_path: str, batch_id: int | None
-) -> None:
-    """Curated-output write. With a ``batch_id`` (the streaming path),
-    rows land in an ``ingest_batch=N`` partition via DYNAMIC partition
-    overwrite — a replayed micro-batch rewrites its own partition
-    instead of appending a second copy, making the curated corpus
-    IDEMPOTENT under foreachBatch retries (the double-append caveat
-    documented in this module now applies only to the index side, where
-    duplicate rows are verdict-benign and compaction-removable). The
-    partition column doubles as batch provenance for lineage queries.
-    Without a batch id (the batch API), plain append as before."""
-    if batch_id is None:
-        df.write.mode("append").parquet(output_path)
-        return
-    (
-        df.withColumn("ingest_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(output_path)
-    )
-
-
 def ingest_batch(
     spark: SparkSession,
     index_path: str,
@@ -104,8 +83,7 @@ def ingest_batch(
     """One ingestion step (also the foreachBatch body): within-batch
     collapse -> probe index -> append survivors to index (and to
     ``output_path`` when given — idempotently per ``batch_id`` on the
-    streaming path, see :func:`_write_output`). Returns the surviving
-    documents."""
+    streaming path). Returns the surviving documents."""
     p = load_minhash_params(index_path)
     survivors = filter_against_index(
         spark,
@@ -118,7 +96,7 @@ def ingest_batch(
     survivors = materialize(survivors, eager=True)
     append_to_minhash_index(survivors, index_path)
     if output_path is not None:
-        _write_output(survivors, output_path, batch_id)
+        write_partition(survivors, output_path, batch_id, "ingest_batch")
     return survivors
 
 
@@ -132,20 +110,13 @@ def stream_dedup_ingest(
     """Attach the ingestion loop to a streaming DataFrame. Returns the
     started ``StreamingQuery``; stop it (or ``processAllAvailable`` in
     tests) as usual."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: ingest_batch(
             batch.sparkSession, index_path, batch, output_path, threshold,
             batch_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )
 
 
@@ -159,23 +130,17 @@ def probe_matches_stream(
     """Read-only variant: stream documents, emit (new_id, dup_of,
     est_jaccard) match rows to ``output_path`` without mutating the
     index — the monitoring/decontamination-alert shape."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        _write_output(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: write_partition(
             dedup_against_index(
                 batch.sparkSession, index_path, batch, threshold
             ),
             output_path,
             batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+            "ingest_batch",
+        ),
     )
 
 
@@ -246,7 +211,7 @@ def embedding_ingest_batch(
     surv = materialize(surv.join(dups, id_col, "left_anti"), eager=True)
     append_to_ivfpq_index(surv, index_path, corpus_id=id_col, corpus_vec=vec_col)
     if output_path is not None:
-        _write_output(surv, output_path, batch_id)
+        write_partition(surv, output_path, batch_id, "ingest_batch")
     return surv
 
 
@@ -263,11 +228,10 @@ def stream_embedding_ingest(
 ):
     """Attach the embedding-ingestion loop to a streaming DataFrame.
     Returns the started ``StreamingQuery``."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        embedding_ingest_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: embedding_ingest_batch(
             batch.sparkSession,
             index_path,
             batch,
@@ -278,13 +242,7 @@ def stream_embedding_ingest(
             vec_col,
             dim,
             batch_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )
 
 
@@ -313,9 +271,7 @@ def embedding_matches_stream(
             "store_vectors=True) for exact duplicate verdicts"
         )
 
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def _matches(batch: DataFrame, batch_id: int) -> None:
         qs = batch.select(
             F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
         )
@@ -331,11 +287,6 @@ def embedding_matches_stream(
                 "sim",
             )
         )
-        _write_output(out, output_path, batch_id)
+        write_partition(out, output_path, batch_id, "ingest_batch")
 
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
-    )
+    return start_loop(stream, checkpoint_path, _matches)

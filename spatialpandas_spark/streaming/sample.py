@@ -13,11 +13,11 @@ the streamed selection (ids AND multiplicities) equals one batch
 (micro-batch order, ``order_cols`` order). That identity is the twin
 test.
 
-Exactly-once mirrors streaming/sequences.py: the carried total is
-written under a ``batch=N`` state partition (dynamic overwrite), a
-replayed batch re-reads the batch-(N-1) state; selected rows land in a
-``sample_batch=N`` output partition. Driver-side data per batch: one
-carry row in, one summed weight out — two bounded one-row exchanges.
+Exactly-once: the carried total is the state of the batch-keyed
+store of streaming/_state.py, and selected rows land in a
+``sample_batch=N`` output partition through its writer, so a replayed
+batch rewrites both. Driver-side data per batch: one carry row in, one
+summed weight out — two bounded one-row exchanges.
 """
 
 from __future__ import annotations
@@ -26,29 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.sampling import systematic_sample
-from spatialpandas_spark.streaming._state import read_state_frame
-
-_STATE_SCHEMA = "batch long, carry long"
-
-
-def _read_carry(
-    spark: SparkSession, state_path: str, before_batch: int
-) -> int:
-    """Total ingested weight as of the latest batch STRICTLY BEFORE
-    ``before_batch`` (replay safety, as in streaming/sequences.py).
-    Only a MISSING state path reads as "first batch" — any other read
-    failure propagates so the micro-batch retries instead of silently
-    resetting the lattice (streaming/_state.py)."""
-    st = read_state_frame(spark, state_path, _STATE_SCHEMA)
-    if st is None:
-        return 0
-    row = (
-        st.filter(F.col("batch") < before_batch)
-        .orderBy(F.col("batch").desc())
-        .limit(1)
-        .collect()
-    )
-    return int(row[0]["carry"]) if row else 0
+from spatialpandas_spark.streaming._state import (
+    read_state,
+    start_loop,
+    write_partition,
+)
 
 
 def sample_pps_batch(
@@ -77,7 +59,8 @@ def sample_pps_batch(
             int(hashlib.md5(f"{seed}:pps".encode()).hexdigest()[:15], 16)
             % st
         )
-    carry = _read_carry(spark, state_path, batch_id)
+    prev = read_state(spark, state_path, batch_id, "carry long")
+    carry = 0 if prev is None else int(prev.first()["carry"])
     local_off = (int(offset) - carry) % st
     out = systematic_sample(
         batch,
@@ -90,21 +73,11 @@ def sample_pps_batch(
     w = batch.agg(F.sum(F.col(weight_col)).alias("w")).first()["w"]
     new_carry = carry + int(w or 0)
     if output_path is not None:
-        (
-            out.withColumn("sample_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("sample_batch")
-            .parquet(output_path)
-        )
-    (
-        spark.createDataFrame(
-            [(int(batch_id), new_carry)], _STATE_SCHEMA
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(state_path)
+        write_partition(out, output_path, batch_id, "sample_batch")
+    write_partition(
+        spark.createDataFrame([(new_carry,)], "carry long"),
+        state_path,
+        batch_id,
     )
     return out
 
@@ -121,11 +94,10 @@ def stream_pps_sample(
 ):
     """Attach the incremental sampler to a streaming frame. Returns the
     started ``StreamingQuery``."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sample_pps_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: sample_pps_batch(
             batch.sparkSession,
             batch,
             state_path,
@@ -135,11 +107,5 @@ def stream_pps_sample(
             seed=seed,
             output_path=output_path,
             batch_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )

@@ -12,14 +12,9 @@ set itself is NOT state: it derives from the stored artifact each
 batch (one narrow benchmark-sized read), so appending new benchmarks
 to the index mid-stream simply makes their probes start unfound.
 
-State layout mirrors streaming/sketch.py's exactly-once discipline:
-the FULL found-hash set (≤ k rows per benchmark group — synopsis-small
-by construction) is written under a ``batch=N`` partition via dynamic
-partition overwrite; a replayed batch re-reads the batch-(N-1) state
-it read the first time and overwrites its own partition — idempotent
-end to end. Only a MISSING state path reads as "first batch"; any
-other read failure fails the micro-batch for retry
-(streaming/_state.py).
+State: the FULL found-hash set (≤ k rows per benchmark group —
+synopsis-small by construction) in the batch-keyed store of
+streaming/_state.py, so a replayed batch is idempotent end to end.
 
 Scale: per batch, one scan of the BATCH (not the accumulated corpus),
 one benchmark-sized read of the index store, one ≤(k·groups)-row state
@@ -38,30 +33,13 @@ from spatialpandas_spark.operators.contamination_index import (
 )
 from spatialpandas_spark.operators.dedup import word_shingles
 from spatialpandas_spark.operators.sampling import sample_hash
-from spatialpandas_spark.streaming._state import read_state_frame
+from spatialpandas_spark.streaming._state import (
+    read_state,
+    start_loop,
+    write_partition,
+)
 
-#: explicit state schema: a zero-hit first batch writes an EMPTY
-#: partitioned directory, which schema inference cannot read
-_STATE_SCHEMA = "h long, batch int"
-
-
-def _read_found(
-    spark: SparkSession, state_path: str, before_batch: int
-) -> DataFrame | None:
-    """Found-hash set as of the latest batch STRICTLY BEFORE
-    ``before_batch`` (replay safety), or None when no prior batch
-    exists."""
-    st = read_state_frame(spark, state_path, schema=_STATE_SCHEMA)
-    if st is None:
-        return None
-    prev = (
-        st.filter(F.col("batch") < before_batch)
-        .agg(F.max("batch"))
-        .first()[0]
-    )
-    if prev is None:
-        return None
-    return st.filter(F.col("batch") == prev).select("h")
+_STATE_SCHEMA = "h long"
 
 
 def _summary(bsk: DataFrame, found: DataFrame | None, groups: list[str],
@@ -130,22 +108,11 @@ def screen_batch(
         .join(probes, "h", "left_semi")
         .distinct()
     )
-    prev = _read_found(spark, state_path, batch_id)
+    prev = read_state(spark, state_path, batch_id, _STATE_SCHEMA)
     merged = hits if prev is None else prev.union(hits).distinct()
-    (
-        merged.withColumn("batch", F.lit(int(batch_id)))
-        .repartition(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(state_path)
-    )
-    found = read_state_frame(spark, state_path, schema=_STATE_SCHEMA)
-    found = (
-        None
-        if found is None
-        else found.filter(F.col("batch") == int(batch_id)).select("h")
-    )
+    write_partition(merged.repartition(1), state_path, batch_id)
+    # the partition just written; none until some batch finds a probe
+    found = read_state(spark, state_path, batch_id + 1, _STATE_SCHEMA)
     all_groups = (
         spark.read.parquet(f"{index_path.rstrip('/')}/groups")
         if groups
@@ -161,7 +128,7 @@ def load_screen(
     — the streaming counterpart of ``screen_against_index``'s output."""
     p = load_decon_params(index_path)
     groups = p["group_cols"]
-    found = _read_found(spark, state_path, 1 << 62)
+    found = read_state(spark, state_path, schema=_STATE_SCHEMA)
     bsk = probe_set(spark, index_path)
     all_groups = (
         spark.read.parquet(f"{index_path.rstrip('/')}/groups")
@@ -180,22 +147,15 @@ def stream_screen_ingest(
 ):
     """Attach cumulative benchmark screening to a streaming document
     frame. Returns the started ``StreamingQuery``."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        screen_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: screen_batch(
             batch.sparkSession,
             batch,
             index_path,
             state_path,
             batch_id=batch_id,
             text_col=text_col,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )

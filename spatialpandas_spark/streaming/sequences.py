@@ -23,13 +23,12 @@ for the usual digit ids, injective for string ids of any length) — the
 same contract as sequential calls to :func:`sequence_batch` on the same
 frames in order, which is what the twin test asserts.
 
-Exactly-once: both sides of the state are keyed by ``batch_id``. The
-emitted rows land in a ``seq_batch=N`` partition via dynamic partition
-overwrite, and the post-batch carry state is written to a ``batch=N``
-state partition; a replayed micro-batch re-reads the batch-(N-1) state
-it read the first time and overwrites its own partitions — idempotent
-end to end, with no at-least-once caveat (unlike the dedup-index append
-path, whose trade is documented in streaming/ingest.py).
+Exactly-once: the carry is the state of the batch-keyed store of
+streaming/_state.py, and the emitted rows land in a ``seq_batch=N``
+output partition through its writer, so a replayed micro-batch
+rewrites both — idempotent end to end, with no at-least-once caveat
+(unlike the dedup-index append path, whose trade is documented in
+streaming/ingest.py).
 
 Scale: per batch the only driver-side data is the carry row (< seq_len
 ids) and the last sequence's id — two bounded single-row collects. Token
@@ -42,51 +41,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.shards import materialize_token_sequences
-from spatialpandas_spark.streaming._state import read_state_frame
+from spatialpandas_spark.streaming._state import (
+    read_state,
+    start_loop,
+    write_partition,
+)
 
-_STATE_SCHEMA = "batch long, next_seq long, carry array<int>"
+_STATE_SCHEMA = "next_seq long, carry array<int>"
 
 
-def _read_state(
-    spark: SparkSession, state_path: str, before_batch: int
+def _carry_in(
+    spark: SparkSession, state_path: str, before_batch: int | None = None
 ) -> tuple[int, list[int]]:
-    """State as of the latest batch STRICTLY BEFORE ``before_batch`` —
-    so a replayed batch N reconsumes the batch-(N-1) state, never its
-    own half-written one. (0, []) when no prior batch exists. Only a
-    MISSING state path reads as "no prior batch" — any other read
-    failure propagates so the micro-batch retries instead of silently
-    restarting the sequence counter (streaming/_state.py)."""
-    st = read_state_frame(spark, state_path, _STATE_SCHEMA)
+    """(next sequence id, carried tokens) left by the latest batch
+    below ``before_batch``; (0, []) before the first batch."""
+    st = read_state(spark, state_path, before_batch, _STATE_SCHEMA)
     if st is None:
         return 0, []
-    row = (
-        st.filter(F.col("batch") < before_batch)
-        .orderBy(F.col("batch").desc())
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        return 0, []
-    return int(row[0]["next_seq"]), list(row[0]["carry"] or [])
-
-
-def _write_state(
-    spark: SparkSession,
-    state_path: str,
-    batch_id: int,
-    next_seq: int,
-    carry: list[int],
-) -> None:
-    (
-        spark.createDataFrame(
-            [(int(batch_id), int(next_seq), [int(t) for t in carry])],
-            _STATE_SCHEMA,
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(state_path)
-    )
+    row = st.first()
+    return int(row["next_seq"]), list(row["carry"] or [])
 
 
 def sequence_batch(
@@ -107,7 +80,7 @@ def sequence_batch(
     ``batch`` needs (``id_col``, ``tokens_col``); lengths are derived.
     """
     L = int(seq_len)
-    next_seq, carry = _read_state(spark, state_path, batch_id)
+    next_seq, carry = _carry_in(spark, state_path, batch_id)
 
     # virtual key: carry sorts first (empty string < any length-prefixed
     # key), batch rows in LENGTH-THEN-LEXICOGRAPHIC id order — injective
@@ -116,12 +89,22 @@ def sequence_batch(
     # and equal to numeric order for the usual digit ids. The 8-digit
     # length prefix covers ids up to 10^8-1 chars; a longer id RAISES
     # (the guard below — lpad would otherwise truncate the length string
-    # itself and re-open the collision) rather than being dropped.
+    # itself and re-open the collision) rather than being dropped. A
+    # null id has no length and no place in the order: it raises too.
     sid = F.col(id_col).cast("string")
     klen = F.length(sid)
     key = F.concat(F.lpad(klen.cast("string"), 8, "0"), sid)
     keyed = batch.select(
-        F.when(klen < F.lit(100_000_000), key)
+        F.when(
+            sid.isNull(),
+            F.raise_error(
+                F.lit(
+                    f"sequence_batch requires a non-null {id_col}: a null "
+                    "id has no place in the stream order"
+                )
+            ),
+        )
+        .when(klen < F.lit(100_000_000), key)
         .otherwise(
             F.raise_error(
                 F.lit(
@@ -146,44 +129,30 @@ def sequence_batch(
     tail = (
         seqs.orderBy(F.col("seq_id").desc()).limit(1).collect()
     )
-    if not tail:  # batch had zero tokens: state (and carry) unchanged
-        _write_state(spark, state_path, batch_id, next_seq, carry)
-        out = seqs.select(
-            (F.col("seq_id") + next_seq).alias("seq_id"),
-            "token_ids",
-            "n_tokens",
-        )
-        if output_path is not None:
-            _write_output(out, output_path, batch_id)
-        return out
-    last_id, last_n = int(tail[0]["seq_id"]), int(tail[0]["n_tokens"])
-    if last_n < L:
-        new_carry = [int(t) for t in tail[0]["token_ids"]]
-        complete = seqs.filter(F.col("seq_id") < last_id)
-        new_next = next_seq + last_id
-    else:
-        new_carry = []
-        complete = seqs
-        new_next = next_seq + last_id + 1
+    complete, new_next, new_carry = seqs, next_seq, carry
+    if tail:  # else the batch had zero tokens: state (and carry) unchanged
+        last_id = int(tail[0]["seq_id"])
+        if int(tail[0]["n_tokens"]) < L:
+            new_carry = [int(t) for t in tail[0]["token_ids"]]
+            complete = seqs.filter(F.col("seq_id") < last_id)
+            new_next = next_seq + last_id
+        else:
+            new_carry, new_next = [], next_seq + last_id + 1
     out = complete.select(
         (F.col("seq_id") + next_seq).cast("long").alias("seq_id"),
         "token_ids",
         F.col("n_tokens").cast("long").alias("n_tokens"),
     )
     if output_path is not None:
-        _write_output(out, output_path, batch_id)
-    _write_state(spark, state_path, batch_id, new_next, new_carry)
-    return out
-
-
-def _write_output(df: DataFrame, output_path: str, batch_id: int) -> None:
-    (
-        df.withColumn("seq_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seq_batch")
-        .parquet(output_path)
+        write_partition(out, output_path, batch_id, "seq_batch")
+    write_partition(
+        spark.createDataFrame(
+            [(int(new_next), [int(t) for t in new_carry])], _STATE_SCHEMA
+        ),
+        state_path,
+        batch_id,
     )
+    return out
 
 
 def flush_carry(
@@ -196,7 +165,7 @@ def flush_carry(
     operator's final short row) so the streamed output equals the batch
     operator over the full concatenation. Writes under the sentinel
     ``seq_batch`` partition when ``output_path`` is given."""
-    next_seq, carry = _read_state(spark, state_path, final_batch_id)
+    next_seq, carry = _carry_in(spark, state_path)
     rows = (
         [(int(next_seq), [int(t) for t in carry], len(carry))]
         if carry
@@ -206,7 +175,7 @@ def flush_carry(
         rows, "seq_id long, token_ids array<int>, n_tokens long"
     )
     if output_path is not None and rows:
-        _write_output(out, output_path, final_batch_id)
+        write_partition(out, output_path, final_batch_id, "seq_batch")
     return out
 
 
@@ -221,11 +190,10 @@ def stream_token_sequences(
 ):
     """Attach the incremental training-row loop to a streaming frame of
     tokenized documents. Returns the started ``StreamingQuery``."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sequence_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: sequence_batch(
             batch.sparkSession,
             batch,
             seq_len,
@@ -234,11 +202,5 @@ def stream_token_sequences(
             id_col=id_col,
             tokens_col=tokens_col,
             batch_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )

@@ -10,54 +10,27 @@ equals ``shingle_sketch`` over the concatenation of all batches EXACTLY
 shingle SET, and merge-of-bottom-k == bottom-k-of-union. That identity
 is the twin test.
 
-State layout mirrors streaming/sequences.py's exactly-once discipline:
-the FULL merged sketch (tiny: ≤ k rows per group) is written under a
-``batch=N`` partition via dynamic partition overwrite; a replayed batch
-re-reads the batch-(N-1) state it read the first time and overwrites
-its own partition — idempotent end to end, no at-least-once caveat.
-Rewriting the whole synopsis per batch is the right trade precisely
-because a synopsis is small by definition; the corpora it summarizes
-never re-scan.
+State: the FULL merged sketch (tiny: ≤ k rows per group) in the
+batch-keyed store of streaming/_state.py, so a replayed batch is
+idempotent end to end. Rewriting the whole synopsis per batch is the
+right trade precisely because a synopsis is small by definition; the
+corpora it summarizes never re-scan.
 
 Scale: per batch, one scan of the BATCH (not the accumulated corpus),
 one k-rows-per-group state read, one bounded window over ≤ 2k rows per
-group. Driver-side data: one max-batch probe row.
+group. Driver-side data: one directory listing.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.sketch import kmv_merge, shingle_sketch
-from spatialpandas_spark.streaming._state import read_state_frame
-
-
-def _read_state(
-    spark: SparkSession,
-    state_path: str,
-    before_batch: int,
-    group_cols: list[str],
-) -> DataFrame | None:
-    """Merged sketch as of the latest batch STRICTLY BEFORE
-    ``before_batch`` (so a replayed batch N reconsumes the batch-(N-1)
-    state, never its own half-written one); None when no prior batch
-    exists. Only a MISSING state path reads as "no prior batch" — any
-    other read failure propagates so the micro-batch retries instead of
-    silently resetting the sketch (streaming/_state.py)."""
-    st = read_state_frame(spark, state_path)
-    if st is None:
-        return None
-    prev = (
-        st.filter(F.col("batch") < before_batch)
-        .agg(F.max("batch"))
-        .first()[0]
-    )
-    if prev is None:
-        return None
-    return st.filter(F.col("batch") == prev).select(
-        *group_cols, "rank", "h"
-    )
+from spatialpandas_spark.streaming._state import (
+    read_state,
+    start_loop,
+    write_partition,
+)
 
 
 def sketch_batch(
@@ -80,19 +53,13 @@ def sketch_batch(
     cur = shingle_sketch(
         batch, text_col, n=n, k=k, seed=seed, group_cols=groups
     )
-    prev = _read_state(spark, state_path, batch_id, groups)
+    prev = read_state(spark, state_path, batch_id, cur.schema)
     merged = cur if prev is None else kmv_merge(prev, cur, k, groups)
-    (
-        merged.withColumn("batch", F.lit(int(batch_id)))
-        .repartition(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(state_path)
-    )
-    return spark.read.parquet(state_path).filter(
-        F.col("batch") == int(batch_id)
-    ).select(*groups, "rank", "h")
+    write_partition(merged.repartition(1), state_path, batch_id)
+    # the partition just written; none when the batch had no shingles
+    # and no earlier batch did either
+    written = read_state(spark, state_path, batch_id + 1, cur.schema)
+    return merged if written is None else written
 
 
 def load_sketch(
@@ -101,10 +68,10 @@ def load_sketch(
     """The current maintained sketch (latest batch partition) — feed it
     to ``kmv_overlap`` / ``kmv_overlap_matrix`` / ``kmv_summary``."""
     groups = list(group_cols or [])
-    sk = _read_state(spark, state_path, 1 << 62, groups)
+    sk = read_state(spark, state_path)
     if sk is None:
         raise FileNotFoundError(f"no sketch state at {state_path}")
-    return sk
+    return sk.select(*groups, "rank", "h")
 
 
 def stream_sketch_ingest(
@@ -119,11 +86,10 @@ def stream_sketch_ingest(
 ):
     """Attach sketch maintenance to a streaming document frame. Returns
     the started ``StreamingQuery``."""
-
-    def _step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sketch_batch(
+    return start_loop(
+        stream,
+        checkpoint_path,
+        lambda batch, batch_id: sketch_batch(
             batch.sparkSession,
             batch,
             state_path,
@@ -133,11 +99,5 @@ def stream_sketch_ingest(
             seed=seed,
             group_cols=group_cols,
             batch_id=batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
+        ),
     )

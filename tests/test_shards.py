@@ -279,6 +279,21 @@ def test_materialize_token_sequences_shared_empty_ids_pass(spark):
     assert got == [(0, [20, 21, 22, 30]), (1, [31])]
 
 
+def test_materialize_token_sequences_null_id_raises(spark):
+    """The layout's join on the id never matches a null one, so a
+    null-id row's tokens went missing: seq 0 came out as [20], one
+    token at seq_len 4. It must raise instead, naming the
+    precondition."""
+    from spatialpandas_spark.operators.shards import (
+        materialize_token_sequences,
+    )
+
+    rows = [(None, [1, 2, 3], 3), (2, [20, 21, 22], 3), (3, [30, 31], 2)]
+    df = spark.createDataFrame(rows, _TOKENS_SCHEMA)
+    with pytest.raises(Exception, match="requires a non-null doc_id"):
+        materialize_token_sequences(df, 4).collect()
+
+
 def test_materialize_token_sequences_no_single_partition_exchange(spark):
     from spatialpandas_spark.operators.shards import (
         materialize_token_sequences,
