@@ -18,10 +18,11 @@ Division of labor with the rest of the stack:
   size; one TakeOrdered job, same shape as ``similarity._centroids``).
 - ``pq_encode``: one Arrow-batched linear scan, corpus-side, fully
   distributed; emits a ``binary`` code column (m_sub bytes/row).
-- ``pq_topk``: ADC scan with the same two-phase partial-top-k shape as
-  ``brute_force_topk`` (per-partition reduction, window over survivors
-  only), plus an optional exact-cosine rerank join against the source
-  vectors for ``k * rerank_factor`` candidates per query.
+- ``pq_topk``: ADC scan through the two-phase top-k skeleton of
+  ``operators/similarity.py`` (per-partition reduction, window over
+  survivors only, optional exact-cosine rerank join against the source
+  vectors for ``k * rerank_factor`` candidates per query); this module
+  supplies only the ADC scoring (``_pq_codec``).
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .similarity import _Codec, _code_topk, _rerank_vectors, _stack
 
 __all__ = ["train_pq", "pq_encode", "pq_topk", "pq_reconstruct_error"]
 
@@ -180,155 +183,54 @@ def pq_encode(
     return c.mapInPandas(run, out_schema)
 
 
-def _group_topk(q, v, s, n: int):
-    """Keep the ``n`` best (sim desc, id asc) rows per query id, fully
-    vectorized — THE shared reducer of every two-phase top-k path (the
-    collected scans, the distributed pair fallbacks, the IVF-PQ probe).
-    One definition so tie-break/rank semantics cannot silently diverge
-    between paths whose bit-for-bit equivalence the tests pin."""
-    idx = np.lexsort((v, -s, q))
-    q, v, s = q[idx], v[idx], s[idx]
-    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-    sizes = np.diff(np.r_[starts, len(q)])
-    rank = np.arange(len(q)) - np.repeat(starts, sizes)
-    keep = rank < n
-    return q[keep], v[keep], s[keep]
-
-
-def _global_topn(cand: DataFrame, n: int) -> DataFrame:
-    """Exact global per-query top-``n`` by (sim desc, vec_id asc) — the
-    same order :func:`_group_topk` applies per partition, applied ACROSS
-    partitions, so the surviving set is bounded |queries| x ``n``
-    independent of the scan's partition count. ADC sims are
-    bit-identical for a given (query, code) pair regardless of which
-    partition scored it (the LUT matmul is per-batch identical), so the
-    global order — and with it the surviving candidate set — is
-    deterministic."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("__cr", F.row_number().over(w))
-        .filter(F.col("__cr") <= n)
-        .drop("__cr")
-    )
-
-
-#: forced candidate-broadcast budget for the exact-rerank joins (guide
-#: §3.1: a few hundred MB broadcast is fine, multiple GB is a driver
-#: hazard, 8 GB is the hard cap)
-_CAND_BROADCAST_CAP = 256 << 20
-
-
-def _rerank_pairs(
-    cand: DataFrame,
-    qv: DataFrame,
-    cv: DataFrame,
-    n_cand: int,
-    n_parts: int,
-    n_queries: int,
-    dim: int,
-) -> DataFrame:
-    """Attach query and corpus vectors to the ADC candidate set for the
-    exact rerank, with a partition-safe join strategy (round-15 advice
-    fix). The candidate set out of the Arrow scan is top-``n_cand`` per
-    query PER PARTITION, so its true bound is ``n_parts x n_queries x
-    n_cand`` — the explicit ``F.broadcast`` hint the round-14 fix added
-    bypasses the planner's size checks, which at corpus scale (many scan
-    partitions) would blow the 8 GB broadcast cap / driver memory. All
-    three factors are KNOWN at query-construction time, so:
-
-    - bound fits the budget (every bench/fixture scale): broadcast the
-      per-partition candidate pool directly — plan and results identical
-      to round 14 (the richer pool feeds the rerank, which is the
-      documented approximate-candidate semantics the recall tests pin);
-    - bound too big: reduce to the global per-query top-``n_cand`` first
-      (:func:`_global_topn`, an exact partition-independent refinement of
-      the same order) and broadcast that — now provably ``n_queries x
-      n_cand`` rows;
-    - even that exceeds the budget (huge collected query sets x wide
-      vectors): leave the join strategy to the planner, which sees a
-      small exchange it can size at runtime (AQE).
-    """
-    per_row = dim * 8 + 48  # query vector + ids/struct overhead
-    if n_parts * n_queries * n_cand * per_row > _CAND_BROADCAST_CAP:
-        cand = _global_topn(cand, n_cand)
-        if n_queries * n_cand * per_row > _CAND_BROADCAST_CAP:
-            return (
-                cand.select("qid", "vec_id")
-                .join(qv, "qid")
-                .join(cv, "vec_id")
-                .select("qid", "vec_id", "__qv", "__cv")
-            )
-    return (
-        F.broadcast(cand.select("qid", "vec_id").join(F.broadcast(qv), "qid"))
-        .join(cv, "vec_id")
-        .select("qid", "vec_id", "__qv", "__cv")
-    )
-
-
-def _adc_pair_scan(
-    pairs: DataFrame, B: np.ndarray, n_cand: int, out_schema: StructType
-) -> DataFrame:
-    """Distributed ADC over a PAIR frame (qid, __qv, vec_id, code): one
-    Arrow pass builds the per-distinct-query LUT inside each batch (the
-    IDENTICAL ``Q_sub @ B[j].T`` matmul the collected path uses, so a
-    given (query, code) pair scores bit-for-bit the same on either
-    path), fancy-indexes scores, and reduces to the per-partition
-    top-``n_cand`` per query. This is the fallback engine for oversized
-    query sides — no driver materialization anywhere."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+def _pq_codec(codebooks):
+    """PQ's scoring for the shared top-k skeleton
+    (``similarity._Codec``): per query a lookup table ``lut[q, j, c]`` =
+    dot(unit-normalized query subspace j, codeword c), and the ADC sim
+    of a code is the sum of its ``m_sub`` table entries. The collected
+    scan and the pair scan build the IDENTICAL ``Q_sub @ B[j].T``
+    matmul per query, so a given (query, code) pair scores bit-for-bit
+    the same on either path."""
+    B = _books_array(codebooks)
     m_sub, n_codes, sub = B.shape
 
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
+    def lut(Q):
+        Q = _l2_normalize(Q)
+        return np.stack(
+            [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)], axis=1
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = (pdf["code"].notna() & pdf["__qv"].notna()).to_numpy()
-            if not ok.any():
-                continue
-            pdf = pdf[ok]
-            inv, _uniq = pd.factorize(pdf["qid"], sort=False)
-            # first-occurrence row per distinct query: inv labels appear
-            # in first-seen order, so unique's return_index gives them
-            _, fidx = np.unique(inv, return_index=True)
-            Q = _l2_normalize(
-                np.asarray(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in pdf["__qv"].iloc[fidx]
-                    ]
-                )
-            )
-            _check_dims(Q.shape[1], m_sub)
-            lut = np.stack(
-                [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)],
-                axis=1,
-            )
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(-1, m_sub)
-            scores = np.zeros(len(pdf))
+    def decode(col):
+        return np.frombuffer(
+            b"".join(bytes(b) for b in col), dtype=np.uint8
+        ).reshape(-1, m_sub)
+
+    def scorer(Q):
+        L = lut(Q)
+
+        def score(col, qs):
+            C, Lq = decode(col), L[qs]
+            S = np.zeros((len(qs), C.shape[0]))
             for j in range(m_sub):
-                scores += lut[inv, j, C[:, j]]
-            acc.append(
-                _reduce(
-                    pdf["qid"].to_numpy(), pdf["vec_id"].to_numpy(), scores
-                )
-            )
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": q, "vec_id": v, "sim": s})
+                S += Lq[:, j, :][:, C[:, j]]
+            return S
 
-    return pairs.mapInPandas(run, out_schema)
+        return score
+
+    def pair_score(pdf):
+        import pandas as pd
+
+        # one LUT per distinct query of the batch: inv labels appear in
+        # first-seen order, so unique's return_index gives their rows
+        inv, _ = pd.factorize(pdf["qid"], sort=False)
+        _, first = np.unique(inv, return_index=True)
+        L, C = lut(_stack(pdf["__qv"].iloc[first])), decode(pdf["code"])
+        s = np.zeros(len(pdf))
+        for j in range(m_sub):
+            s += L[inv, j, C[:, j]]
+        return s
+
+    return _Codec(m_sub * sub, scorer, pair_score)
 
 
 def pq_topk(
@@ -348,132 +250,29 @@ def pq_topk(
 
     Per partition of the code table, ONE fancy-indexing pass scores every
     (query, row) pair from the per-query lookup tables (``m_sub x
-    n_codes`` partial inner products, built once per query per batch set)
-    and reduces to the local top-c (``c = k * rerank_factor`` when a
-    rerank frame is supplied, else ``k``); the final window ranks only
-    the tiny survivor set — the same two-phase shape as
-    ``brute_force_topk``. With ``rerank``, the surviving candidates are
-    joined back to the float vectors and re-scored with exact cosine, so
-    ``sim`` in the output is exact and only the candidate CHOICE is
-    approximate (the standard IVFADC refinement step).
+    n_codes`` partial inner products, built once per query) and reduces
+    to the local top-c (``c = k * rerank_factor`` when a rerank frame is
+    supplied, else ``k``); the final window ranks only the tiny survivor
+    set — the two-phase skeleton of ``brute_force_topk``. With
+    ``rerank``, the surviving candidates are joined back to the float
+    vectors and re-scored with exact cosine, so ``sim`` in the output is
+    exact and only the candidate CHOICE is approximate (the standard
+    IVFADC refinement step).
 
     The query side is bounded exactly like ``brute_force_topk``: a
     ``limit(n+1)`` collect guards the driver, and ABOVE
     ``max_collected_queries`` the operator degrades to the fully
-    distributed pair formulation (:func:`_adc_pair_scan` — same ADC
-    arithmetic, candidates from a qid-grouped Arrow pair scan, no
-    driver materialization) instead of raising. Columns out:
-    (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from .similarity import _topk_rerank, pair_cosine_arrow
-
-    B = _books_array(codebooks)
-    m_sub, n_codes, sub = B.shape
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    n_cand = k * rerank_factor if rerank is not None else k
-    cds = codes.select("vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
+    distributed pair formulation (same ADC arithmetic, candidates from
+    an Arrow pair scan, no driver materialization) instead of raising.
+    A query whose dim is not the codebooks' ``m_sub x sub_dim`` raises
+    ``ValueError`` on either path. Columns out: (qid, vec_id, sim,
+    rank)."""
+    return _code_topk(
+        queries, codes, _pq_codec(codebooks), k,
+        _rerank_vectors(rerank, corpus_id, corpus_vec),
+        k * rerank_factor if rerank is not None else k,
+        query_id, query_vec, max_collected_queries,
     )
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        # distributed fallback: O(|Q| x |C|) is inherent to scoring an
-        # oversized query set; put it on the cluster (brute_force_topk's
-        # discipline), with the rerank join NOT broadcasting the large
-        # query side
-        pairs = cds.crossJoin(q_sel).select("qid", "__qv", "vec_id", "code")
-        cand = _adc_pair_scan(pairs, B, n_cand, out_schema)
-        if rerank is None:
-            return _topk_rerank(cand, k)
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-        rr = (
-            cand.select("qid", "vec_id")
-            .join(q_sel, "qid")
-            .join(cv, "vec_id")
-            .select("qid", "vec_id", "__qv", "__cv")
-        )
-        return _topk_rerank(pair_cosine_arrow(rr), k)
-    if not qrows:
-        return codes.sparkSession.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("qid", q_sel.schema["qid"].dataType),
-                    StructField("vec_id", codes.schema["vec_id"].dataType),
-                    StructField("sim", DoubleType()),
-                ]
-            ),
-        ).withColumn("rank", F.lit(1).cast("int"))
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = _l2_normalize(
-        np.asarray([np.asarray(r["__qv"], dtype=np.float64) for r in qrows])
-    )
-    _check_dims(Q.shape[1], m_sub)
-    # per-query LUT: lut[q, j, c] = dot(Q[q] subspace j, codeword c)
-    lut = np.stack(
-        [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)], axis=1
-    )
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = pdf["code"].notna()
-            if not ok.any():
-                continue
-            vid = pdf["vec_id"][ok].to_numpy()
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"][ok]), dtype=np.uint8
-            ).reshape(-1, m_sub)
-            # scores: (n_q, n_rows) = sum_j lut[:, j, C[:, j]]
-            scores = np.zeros((lut.shape[0], C.shape[0]))
-            for j in range(m_sub):
-                scores += lut[:, j, :][:, C[:, j]]
-            nq, nr = scores.shape
-            qcol = np.repeat(np.arange(nq), nr)
-            vcol = np.tile(vid, nq)
-            acc.append(_reduce(qcol, vcol, scores.ravel()))
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": qids[q], "vec_id": v, "sim": s})
-
-    cand = cds.mapInPandas(adc_scan, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    # exact rerank: join the tiny candidate set back to the float vectors
-    qv = q_sel  # qid -> query vector
-    cv = rerank.select(
-        F.col(corpus_id).alias("vec_id"),
-        F.col(corpus_vec).cast("array<double>").alias("__cv"),
-    )
-    # broadcast the candidate side of the vector join so the float
-    # corpus streams through a broadcast hash join instead of being
-    # shuffled (round-14 b20 profile: the old plan shuffle-wrote the
-    # entire cached vector corpus, ~54 MB at sf0.1, to equi-join a few
-    # hundred rows) — strategy chosen by the construction-time bound so
-    # the forced hint can never exceed the broadcast cap (round-15)
-    pairs = _rerank_pairs(
-        cand, qv, cv, n_cand,
-        n_parts=cds.rdd.getNumPartitions(),
-        n_queries=len(qrows), dim=Q.shape[1],
-    )
-    return _topk_rerank(pair_cosine_arrow(pairs), k)
 
 
 def pq_reconstruct_error(

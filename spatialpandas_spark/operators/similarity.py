@@ -14,6 +14,9 @@ Two paths, per SURVEY-plus scope:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 import numpy as np
 
 from pyspark.sql import Column, DataFrame
@@ -56,36 +59,28 @@ def brute_force_topk(
     corpus per query through ``Window.partitionBy(qid)`` ships every
     corpus row to one task — dead at 100 TB):
 
-    1. the query set is broadcast and cosines are computed JVM-side in the
-       scan stage (exact, sequential fold — bit-identical to the SQL
-       oracle);
-    2. an Arrow ``mapInPandas`` pass reduces each *partition* to its local
-       top-k per query (float values pass through untouched), emitting at
-       most ``n_partitions * n_queries * k`` rows;
+    1. the query set is collected and cosines are computed in one Arrow
+       pass over the corpus (exact, sequential fold — bit-identical to
+       the SQL oracle);
+    2. that pass reduces each *partition* to its local top-k per query
+       (float values pass through untouched), emitting at most
+       ``n_partitions * n_queries * k`` rows;
     3. the final ranking window runs over that tiny survivor set only.
 
     The query side is collected to the driver only when it has at most
-    ``max_collected_queries`` rows (checked with a bounded ``limit(n+1)``
-    collect, never an unbounded one); above that the operator switches to
-    the fully distributed pair-join formulation — same exact semantics,
-    no driver materialization — because brute force over a large query
-    set is inherently O(|Q| x |C|) and belongs on the cluster, not the
-    driver. Query/corpus id columns keep their native types (string ids
-    pass through untouched).
+    ``max_collected_queries`` rows (:func:`_vector_topk`'s bounded
+    collect); above that the operator switches to the fully distributed
+    pair-join formulation — same exact semantics, no driver
+    materialization — because brute force over a large query set is
+    inherently O(|Q| x |C|) and belongs on the cluster, not the driver.
+    A query whose dim differs from the corpus dim raises ``ValueError``
+    on either path. Query/corpus id columns keep their native types
+    (string ids pass through untouched).
 
     Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     # null vectors are unrankable: drop them at the DataFrame boundary
     # (cheap JVM filter) instead of making every Arrow kernel tolerate
     # ragged batches — at 100 TB some rows WILL be null
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
     c = corpus.select(
         F.col(corpus_id).alias("vec_id"),
         F.col(corpus_vec).cast("array<double>").alias("__cv"),
@@ -94,103 +89,447 @@ def brute_force_topk(
     # the probe set is small by contract; collecting it lets ONE Arrow pass
     # over the corpus compute all query sims per batch — no q x corpus pair
     # table, no interpreted per-row HOF fold (measured 7.3 s -> ~1 s at
-    # 1M x 8, BASELINE.md round-3 ANN crossover). The limit(n+1) bound
-    # makes the collect safe: an oversized query side costs one truncated
-    # fetch, not a driver OOM.
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        cand = c.crossJoin(q_sel).select("qid", "vec_id", "__qv", "__cv")
-        return _topk_rerank(pair_cosine_arrow(cand), k)
+    # 1M x 8, BASELINE.md round-3 ANN crossover)
+    def collected(q_sel, qids, Q, schema):
+        qn = np.sqrt(_seq_pair_dot(Q, Q))
 
-    # native dtype (int ids -> int64, string ids -> unicode): numpy infers,
-    # no int64 coercion — string query ids sort/compare fine in lexsort
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = _stack([r["__qv"] for r in qrows])
-    qn = np.sqrt(_seq_pair_dot(Q, Q))
-
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", c.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def _reduce(q, v, s):
-        # keep the k best (sim desc, id asc) per qid, fully vectorized
-        idx = np.lexsort((v, -s, q))
-        q, v, s = q[idx], v[idx], s[idx]
-        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-        sizes = np.diff(np.r_[starts, len(q)])
-        rank = np.arange(len(q)) - np.repeat(starts, sizes)
-        keep = rank < k
-        return q[keep], v[keep], s[keep]
-
-    def sims_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
+        def sims(pdf):
             if len(pdf) == 0:
-                continue
+                return
             X = _stack(pdf["__cv"])
+            if X.shape[1] != Q.shape[1]:
+                raise ValueError(
+                    f"query vector dim {Q.shape[1]} != corpus dim {X.shape[1]}"
+                )
             xn = np.sqrt(_seq_pair_dot(X, X))
             vid = pdf["vec_id"].to_numpy()
             for j in range(len(qids)):
                 ok = (xn > 0) & (qn[j] > 0)
                 s = np.where(ok, _seq_dot(X, Q[j]) / (xn * qn[j]), 0.0)
-                acc.append(
-                    _reduce(np.full(len(s), qids[j], dtype=qids.dtype), vid, s)
-                )
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": q, "vec_id": v, "sim": s})
+                yield np.full(len(s), j), vid, s
 
-    survivors = c.mapInPandas(sims_topk, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        return _rank(_scan_topk(c, sims, k, schema, qids), k)
+
+    def distributed(q_sel, schema):
+        cand = c.crossJoin(q_sel).select("qid", "vec_id", "__qv", "__cv")
+        return _topk_rerank(pair_cosine_arrow(cand), k)
+
+    return _vector_topk(
+        queries, query_id, query_vec, max_collected_queries,
+        c.schema["vec_id"].dataType, collected, distributed,
     )
 
 
-def _topk_rerank(sims: DataFrame, k: int) -> DataFrame:
-    """Two-phase exact top-k over a (qid, vec_id, sim) candidate set: an
-    Arrow partial top-k per partition, then the ranking window over the
-    tiny survivor set — the same shape brute_force_topk uses, factored
-    out so every ANN rerank avoids windowing the full candidate volume
-    (n_probe/n_centroids of the corpus per query at IVF scale)."""
+# ------------------------------------------------------ two-phase top-k
+# Every vector top-k here runs one skeleton. Phase 1 is one Arrow pass
+# that reduces each partition to its per-query top-n (:func:`_scan_topk`
+# over :func:`_group_topk`); phase 2 ranks only that survivor set with
+# one window (:func:`_rank`). :func:`_vector_topk` owns the query side
+# and its collect-or-distribute fork, :func:`_rerank_vectors` and
+# :func:`_finish_topk` the optional exact rerank, and
+# :func:`_ivf_code_topk` the IVF probe of both quantized codecs. A
+# codec (``pq._pq_codec``, ``sq._sq8_codec``) supplies only its scoring.
+
+#: forced candidate-broadcast budget for the exact-rerank joins (guide
+#: §3.1: a few hundred MB broadcast is fine, multiple GB is a driver
+#: hazard, 8 GB is the hard cap)
+_CAND_BROADCAST_CAP = 256 << 20
+
+
+class _Codec(NamedTuple):
+    """The scoring a quantized code column plugs into the skeleton.
+
+    ``scorer(Q)`` takes the collected raw query matrix and returns
+    ``score(codes, qs)``: the ``(len(qs), len(codes))`` sims of the
+    queries ``qs`` (row indices of ``Q``) against a Series of codes.
+    ``pair_score(pdf)`` scores a batch of (qid, __qv, vec_id, code)
+    pair rows, one sim per row, with the same arithmetic per (query,
+    code) pair. ``dim`` is the query dim the codes were built for."""
+
+    dim: int
+    scorer: Callable
+    pair_score: Callable
+
+
+def _check_dim(vecs, dim: int) -> None:
+    """Raise when a query vector's length is not the codec's ``dim``: a
+    longer one would otherwise score a truncated prefix."""
+    bad = next((len(v) for v in vecs if len(v) != dim), None)
+    if bad is not None:
+        raise ValueError(f"query vector dim {bad} != codec dim {dim}")
+
+
+def _group_topk(q, v, s, n: int):
+    """Keep the ``n`` best (sim desc, id asc) rows per query id, fully
+    vectorized — THE one reducer of every two-phase top-k path. One
+    definition so tie-break/rank semantics cannot silently diverge
+    between paths whose bit-for-bit equivalence the tests pin."""
+    idx = np.lexsort((v, -s, q))
+    q, v, s = q[idx], v[idx], s[idx]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    sizes = np.diff(np.r_[starts, len(q)])
+    rank = np.arange(len(q)) - np.repeat(starts, sizes)
+    keep = rank < n
+    return q[keep], v[keep], s[keep]
+
+
+def _scan_topk(df: DataFrame, triples, n: int, schema, qids=None) -> DataFrame:
+    """Phase 1: one Arrow pass over ``df``. ``triples(pdf)`` yields
+    ``(q, vec_id, sim)`` arrays per batch; each is cut to its per-query
+    top-``n`` and the partition's union cut again, so at most
+    ``n_queries * n`` rows leave a partition. With ``qids``, ``q``
+    holds row indices into it and the output carries the ids."""
     from collections.abc import Iterator
 
     import pandas as pd
 
-    def _reduce(q, v, s):
-        idx = np.lexsort((v, -s, q))
-        q, v, s = q[idx], v[idx], s[idx]
-        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-        sizes = np.diff(np.r_[starts, len(q)])
-        rank = np.arange(len(q)) - np.repeat(starts, sizes)
-        keep = rank < k
-        return q[keep], v[keep], s[keep]
-
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            acc.append(
-                _reduce(
-                    pdf["qid"].to_numpy(),
-                    pdf["vec_id"].to_numpy(),
-                    pdf["sim"].to_numpy(),
-                )
-            )
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc = [_group_topk(*t, n) for pdf in batches for t in triples(pdf)]
         if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": q, "vec_id": v, "sim": s})
+            q, v, s = _group_topk(*(np.concatenate(a) for a in zip(*acc)), n)
+            yield pd.DataFrame(
+                {"qid": q if qids is None else qids[q], "vec_id": v, "sim": s}
+            )
 
-    survivors = sims.mapInPandas(partial_topk, sims.schema)
+    return df.mapInPandas(run, schema)
+
+
+def _rank(survivors: DataFrame, n: int) -> DataFrame:
+    """Phase 2: the one ranking window, (sim desc, vec_id asc) per
+    query, run over the phase-1 survivors only."""
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return survivors.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        F.col("rank") <= n
+    )
+
+
+def _topk_rerank(sims: DataFrame, k: int) -> DataFrame:
+    """Two-phase exact top-k over a (qid, vec_id, sim) candidate set:
+    every ANN rerank avoids windowing the full candidate volume
+    (n_probe/n_centroids of the corpus per query at IVF scale)."""
+
+    def triples(pdf):
+        yield (
+            pdf["qid"].to_numpy(),
+            pdf["vec_id"].to_numpy(),
+            pdf["sim"].to_numpy(),
+        )
+
+    return _rank(_scan_topk(sims, triples, k, sims.schema), k)
+
+
+def _vector_topk(
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    max_collected_queries: int,
+    vec_id_type,
+    collected,
+    distributed,
+    dim: int | None = None,
+) -> DataFrame:
+    """The query side of every vector top-k, and its one fork.
+
+    Selects (qid, __qv) with null vectors dropped, then collects at most
+    ``max_collected_queries + 1`` rows: a bounded fetch, so an oversized
+    query side costs one truncated fetch, not a driver OOM. Above the
+    bound it returns ``distributed(q_sel, schema)``; an empty query side
+    returns the empty (qid, vec_id, sim, rank) frame; otherwise, after
+    checking each query's dim against ``dim`` when the caller knows it,
+    ``collected(q_sel, qids, Q, schema)`` with the collected ids and the
+    raw float64 query matrix. ``schema`` is the (qid, vec_id, sim)
+    candidate schema both paths emit."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    q_sel = queries.select(
+        F.col(query_id).alias("qid"),
+        F.col(query_vec).cast("array<double>").alias("__qv"),
+    ).filter(F.col("__qv").isNotNull())
+    schema = StructType(
+        [
+            StructField("qid", q_sel.schema["qid"].dataType),
+            StructField("vec_id", vec_id_type),
+            StructField("sim", DoubleType()),
+        ]
+    )
+    rows = q_sel.limit(max_collected_queries + 1).collect()
+    if len(rows) > max_collected_queries:
+        return distributed(q_sel, schema)
+    if not rows:
+        return q_sel.sparkSession.createDataFrame([], schema).withColumn(
+            "rank", F.lit(1).cast("int")
+        )
+    vecs = [r["__qv"] for r in rows]
+    if dim is not None:
+        _check_dim(vecs, dim)
+    # native dtype (int ids -> int64, string ids -> unicode): numpy
+    # infers, no int64 coercion
+    qids = np.asarray([r["qid"] for r in rows])
+    return collected(q_sel, qids, _stack(vecs), schema)
+
+
+def _rerank_vectors(
+    rerank, corpus_id: str, corpus_vec: str, stored=None, build: str = ""
+):
+    """The ``(vec_id, __cv)`` frame an exact rerank joins, from a
+    ``rerank`` argument: ``None`` (no rerank: ADC sims out), a corpus
+    DataFrame, or ``"stored"`` — the ``vec`` column of ``stored``, the
+    probed index of an index built by ``build(store_vectors=True)``."""
+    if rerank is None:
+        return None
+    if isinstance(rerank, str):
+        if rerank != "stored":
+            raise ValueError(f"unknown rerank mode {rerank!r}")
+        if stored is None:
+            raise ValueError(
+                f"rerank='stored' requires {build}(store_vectors=True)"
+            )
+        return stored.select("vec_id", F.col("vec").alias("__cv"))
+    return rerank.select(
+        F.col(corpus_id).alias("vec_id"),
+        F.col(corpus_vec).cast("array<double>").alias("__cv"),
+    )
+
+
+def _finish_topk(
+    cand: DataFrame,
+    k: int,
+    q_sel: DataFrame,
+    cv,
+    n_cand: int,
+    bound=None,
+    global_pool: bool = False,
+) -> DataFrame:
+    """Phase 2 of a code scan: rank the ADC candidates, or, with the
+    rerank vectors ``cv``, join them back to the float query and corpus
+    vectors and rank by exact cosine — ``sim`` out is exact and only
+    the candidate CHOICE is approximate (the IVFADC refinement step).
+
+    The candidate pool is top-``n_cand`` per query PER PARTITION of the
+    scan. On the collected path ``bound`` is ``(scanned code frame,
+    n_queries, dim)``, so the pool's size bound ``n_parts x n_queries
+    x n_cand`` rows is known at construction time (round-15 advice fix:
+    a forced ``F.broadcast`` bypasses the planner's size checks):
+
+    - bound fits the budget (every bench/fixture scale): broadcast the
+      per-partition pool, so the float corpus streams through a
+      broadcast hash join instead of being shuffled (round-14 b20
+      profile: the old plan shuffle-wrote the entire cached vector
+      corpus to equi-join a few hundred rows);
+    - too big: reduce to the global per-query top-``n_cand`` first (an
+      exact partition-independent refinement of the same order) and
+      broadcast that — ``n_queries x n_cand`` rows;
+    - even that exceeds the budget: plain joins, sized by the planner.
+
+    On the distributed path (no ``bound``) the query side is large by
+    definition: plain joins, never broadcasting it; ``global_pool`` cuts
+    the pool to the global top-``n_cand`` first."""
+    if cv is None:
+        return _topk_rerank(cand, k)
+    broadcast = False
+    if bound is not None:
+        scanned, n_queries, dim = bound
+        pool = n_queries * n_cand * (dim * 8 + 48)  # query vector + ids
+        global_pool = scanned.rdd.getNumPartitions() * pool > _CAND_BROADCAST_CAP
+        broadcast = not global_pool or pool <= _CAND_BROADCAST_CAP
+    if global_pool:
+        cand = _rank(cand, n_cand).drop("rank")
+    ids = cand.select("qid", "vec_id")
+    if broadcast:
+        with_q = F.broadcast(ids.join(F.broadcast(q_sel), "qid"))
+    else:
+        with_q = ids.join(q_sel, "qid")
+    pairs = with_q.join(cv, "vec_id").select("qid", "vec_id", "__qv", "__cv")
+    return _topk_rerank(pair_cosine_arrow(pairs), k)
+
+
+def _code_scan(
+    cds: DataFrame, score, qids, n: int, schema, probes_by_bucket=None
+) -> DataFrame:
+    """Phase 1 of a collected code scan: ADC-score the code column
+    against the collected queries. Flat (``probes_by_bucket`` None):
+    every query against every row. IVF: each row only against the
+    queries that probe its ``bucket``."""
+    everyone = np.arange(len(qids))
+
+    def triples(pdf):
+        pdf = pdf[pdf["code"].notna().to_numpy()]
+        if len(pdf) == 0:
+            return
+        vid = pdf["vec_id"].to_numpy()
+        if probes_by_bucket is None:
+            groups = [(everyone, np.arange(len(pdf)))]
+        else:
+            bk = pdf["bucket"].to_numpy()
+            groups = [
+                (np.asarray(probes_by_bucket[int(b)]), np.flatnonzero(bk == b))
+                for b in np.unique(bk)
+                if int(b) in probes_by_bucket
+            ]
+        for qs, rows in groups:
+            S = score(pdf["code"].iloc[rows], qs)
+            yield np.repeat(qs, len(rows)), np.tile(vid[rows], len(qs)), S.ravel()
+
+    return _scan_topk(cds, triples, n, schema, qids)
+
+
+def _pair_scan(pairs: DataFrame, codec: _Codec, n: int, schema) -> DataFrame:
+    """Phase 1 of a distributed code scan over (qid, __qv, vec_id, code)
+    pair rows: the codec's pair scorer, same arithmetic per (query,
+    code) pair as the collected scan, so a pair scores bit-for-bit the
+    same on either path — no driver materialization anywhere."""
+
+    def triples(pdf):
+        pdf = pdf[(pdf["code"].notna() & pdf["__qv"].notna()).to_numpy()]
+        if len(pdf) == 0:
+            return
+        _check_dim(pdf["__qv"], codec.dim)
+        yield pdf["qid"].to_numpy(), pdf["vec_id"].to_numpy(), codec.pair_score(pdf)
+
+    return _scan_topk(pairs, triples, n, schema)
+
+
+def _code_topk(
+    queries: DataFrame,
+    codes: DataFrame,
+    codec: _Codec,
+    k: int,
+    cv,
+    n_cand: int,
+    query_id: str,
+    query_vec: str,
+    max_collected_queries: int,
+) -> DataFrame:
+    """Flat ADC top-k over a (vec_id, code) column: every query scores
+    every code, collected or — above ``max_collected_queries`` — as a
+    cross-joined pair scan, then :func:`_finish_topk`."""
+    cds = codes.select("vec_id", "code")
+
+    def collected(q_sel, qids, Q, schema):
+        cand = _code_scan(cds, codec.scorer(Q), qids, n_cand, schema)
+        return _finish_topk(
+            cand, k, q_sel, cv, n_cand, bound=(cds, len(qids), Q.shape[1])
+        )
+
+    def distributed(q_sel, schema):
+        pairs = cds.crossJoin(q_sel).select("qid", "__qv", "vec_id", "code")
+        return _finish_topk(
+            _pair_scan(pairs, codec, n_cand, schema), k, q_sel, cv, n_cand
+        )
+
+    return _vector_topk(
+        queries, query_id, query_vec, max_collected_queries,
+        cds.schema["vec_id"].dataType, collected, distributed,
+        codec.dim,
+    )
+
+
+def _ivf_code_topk(
+    spark,
+    path: str,
+    meta: dict,
+    build: str,
+    codec: _Codec,
+    rank_probes,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    rerank,
+    rerank_factor: int,
+    query_id: str,
+    query_vec: str,
+    corpus_id: str,
+    corpus_vec: str,
+    max_collected_queries: int,
+    global_pool: bool = False,
+) -> DataFrame:
+    """The IVF probe of a bucket-partitioned code index (IVF-PQ,
+    IVF-SQ8), given its sidecar ``meta`` and the name of the ``build``
+    function (for the ``rerank="stored"`` error). ``rank_probes(Q,
+    n_probe)`` ranks each raw query's centroids with the codec's own
+    tie-break.
+
+    Collected: the probe set is known driver-side, so the union of probe
+    buckets is a STATIC planning-time partition filter (the dedup-index
+    discipline, no reliance on DPP) and each row is scored only against
+    the queries that probe its bucket.
+
+    Distributed (above ``max_collected_queries`` — degrade, don't
+    raise): probe assignment is an Arrow pass over the query frame with
+    the same ranking, pinned because it feeds both the DISTINCT
+    probed-bucket collect (<= n_centroids rows, so the scan keeps its
+    static filter) and the bucket equi-join that builds the (query,
+    code) pairs each query probes; the pairs go through the codec's
+    pair scorer. ``global_pool`` cuts the candidate pool to the global
+    top-``k * rerank_factor`` before the rerank join (the SQ8 shape)."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    index = spark.read.parquet(path)
+    n_cand = k * rerank_factor if rerank is not None else k
+
+    def probed(buckets):
+        idx = index.filter(F.col("bucket").isin(buckets))
+        cv = _rerank_vectors(
+            rerank, corpus_id, corpus_vec,
+            idx if meta.get("store_vectors") else None, build,
+        )
+        return idx.select("bucket", "vec_id", "code"), cv
+
+    def collected(q_sel, qids, Q, schema):
+        probes_by_bucket: dict[int, list[int]] = {}
+        for qi, row in enumerate(rank_probes(Q, n_probe)):
+            for b in row:
+                probes_by_bucket.setdefault(int(b), []).append(qi)
+        cds, cv = probed(sorted(probes_by_bucket))
+        cand = _code_scan(
+            cds, codec.scorer(Q), qids, n_cand, schema, probes_by_bucket
+        )
+        return _finish_topk(
+            cand, k, q_sel, cv, n_cand, bound=(cds, len(qids), Q.shape[1])
+        )
+
+    def distributed(q_sel, schema):
+        probe_schema = StructType(
+            [
+                StructField("qid", q_sel.schema["qid"].dataType),
+                StructField("__qv", q_sel.schema["__qv"].dataType),
+                StructField("bucket", IntegerType()),
+            ]
+        )
+
+        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                _check_dim(pdf["__qv"], codec.dim)
+                order = rank_probes(_stack(pdf["__qv"]), n_probe)
+                n_p = order.shape[1]
+                yield pd.DataFrame(
+                    {
+                        "qid": pdf["qid"].to_numpy().repeat(n_p),
+                        "__qv": pdf["__qv"].to_numpy().repeat(n_p),
+                        "bucket": order.ravel().astype("int32"),
+                    }
+                )
+
+        # pinned: the probe frame feeds BOTH the distinct-bucket collect
+        # and the bucket equi-join — without it the Arrow assignment pass
+        # over the (by definition oversized) query frame runs twice
+        probes = materialize(q_sel.mapInPandas(assign, probe_schema), eager=True)
+        cds, cv = probed(
+            sorted(r["bucket"] for r in probes.select("bucket").distinct().collect())
+        )
+        pairs = cds.join(probes, "bucket").select("qid", "__qv", "vec_id", "code")
+        cand = _pair_scan(pairs, codec, n_cand, schema)
+        return _finish_topk(cand, k, q_sel, cv, n_cand, global_pool=global_pool)
+
+    return _vector_topk(
+        queries, query_id, query_vec, max_collected_queries,
+        index.schema["vec_id"].dataType, collected, distributed,
+        codec.dim,
     )
 
 
@@ -378,7 +717,8 @@ def pair_cosine_arrow(
 ) -> DataFrame:
     """(*keep_cols, cosine(a, b)) as one Arrow pass over candidate pairs
     — same sequential-fold bit-exactness contract as
-    ``bucket_assign_arrow``."""
+    ``bucket_assign_arrow``. Vectors of different dims raise instead of
+    scoring a prefix."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -393,6 +733,10 @@ def pair_cosine_arrow(
             if len(pdf) == 0:
                 continue
             A, B = _stack(pdf[a_col]), _stack(pdf[b_col])
+            if A.shape[1] != B.shape[1]:
+                raise ValueError(
+                    f"query vector dim {A.shape[1]} != corpus dim {B.shape[1]}"
+                )
             na = np.sqrt(_seq_pair_dot(A, A))
             nb = np.sqrt(_seq_pair_dot(B, B))
             ok = (na > 0) & (nb > 0)

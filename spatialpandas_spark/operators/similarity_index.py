@@ -20,10 +20,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spatialpandas_spark.materialize import materialize
 from spatialpandas_spark.operators.similarity import (
     _centroids,
     _centroid_sims,
+    _ivf_code_topk,
     _topk_rerank,
     _with_centroids,
     bucket_assign_arrow,
@@ -233,264 +233,27 @@ def query_ivfpq_index(
     scores to its own probed buckets. ``rerank`` is ``None`` (ADC sims
     out), a corpus DataFrame (exact-cosine rerank join against the
     source table — the at-scale shape), or ``"stored"`` (rerank against
-    vectors persisted with ``store_vectors=True``).
+    vectors persisted with ``store_vectors=True``). Above
+    ``max_collected_queries`` the probe degrades to the distributed
+    formulation of ``similarity._ivf_code_topk`` instead of raising.
     Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from spatialpandas_spark.operators.pq import _books_array, _l2_normalize
+    from spatialpandas_spark.operators.pq import _l2_normalize, _pq_codec
 
     meta = load_ivfpq_meta(path)
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    B = _books_array(meta["codebooks"])
-    m_sub, n_codes, sub = B.shape
-
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        # distributed fallback (brute_force_topk's discipline): degrade,
-        # don't raise. Probe assignment runs as an Arrow pass over the
-        # query frame; the DISTINCT probed-bucket set (<= n_centroids
-        # rows, bounded small) is still collected so the scan keeps its
-        # static partition filter; candidates come from a bucket
-        # equi-join + the shared ADC pair scan. Same arithmetic as the
-        # collected path per (query, code) pair.
-        return _query_ivfpq_distributed(
-            spark, path, meta, q_sel, k, n_probe, rerank, rerank_factor,
-            corpus_id, corpus_vec,
-        )
-    if not qrows:
-        empty = StructType(
-            [
-                StructField("qid", q_sel.schema["qid"].dataType),
-                StructField("vec_id", spark.read.parquet(path).schema["vec_id"].dataType),
-                StructField("sim", DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], empty).withColumn(
-            "rank", F.lit(1).cast("int")
-        )
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = _l2_normalize(
-        np.asarray([np.asarray(r["__qv"], dtype=np.float64) for r in qrows])
-    )
-    # centroid ranking in numpy (cosine == dot of normalized pairs)
-    cn = _l2_normalize(cents)
-    csims = Q @ cn.T
-    order = np.argsort(-csims, axis=1, kind="stable")[:, :n_probe]
-    probes_by_bucket: dict[int, list[int]] = {}
-    for qi in range(order.shape[0]):
-        for b in order[qi]:
-            probes_by_bucket.setdefault(int(b), []).append(qi)
-    buckets = sorted(probes_by_bucket)
-
-    lut = np.stack(
-        [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)], axis=1
-    )
-    n_cand = k * rerank_factor if rerank is not None else k
-
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    from spatialpandas_spark.operators.pq import _group_topk, _rerank_pairs
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = pdf["code"].notna()
-            if not ok.any():
-                continue
-            pdf = pdf[ok]
-            bk = pdf["bucket"].to_numpy()
-            vid = pdf["vec_id"].to_numpy()
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(-1, m_sub)
-            for b in np.unique(bk):
-                qs_b = probes_by_bucket.get(int(b))
-                if not qs_b:
-                    continue
-                rows = np.flatnonzero(bk == b)
-                Cb = C[rows]
-                scores = np.zeros((len(qs_b), len(rows)))
-                lsel = lut[qs_b]
-                for j in range(m_sub):
-                    scores += lsel[:, j, :][:, Cb[:, j]]
-                qcol = np.repeat(np.asarray(qs_b), len(rows))
-                vcol = np.tile(vid[rows], len(qs_b))
-                acc.append(_reduce(qcol, vcol, scores.ravel()))
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": qids[q], "vec_id": v, "sim": s})
-
-    cand = cds.mapInPandas(adc_scan, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfpq_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    # broadcast the candidate side so the stored/pruned vector
-    # partitions stream through a broadcast hash join instead of being
-    # shuffled (round-14 b20/b21/b31 profile fix) — strategy chosen by
-    # the construction-time bound so the forced hint can never exceed
-    # the broadcast cap when the index scan has many partitions
-    # (round-15 advice fix, see pq._rerank_pairs)
-    pairs = _rerank_pairs(
-        cand, q_sel, cv, n_cand,
-        n_parts=cds.rdd.getNumPartitions(),
-        n_queries=len(qids), dim=Q.shape[1],
-    )
-    return _topk_rerank(pair_cosine_arrow(pairs), k)
-
-
-def _query_ivfpq_distributed(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    q_sel: DataFrame,
-    k: int,
-    n_probe: int,
-    rerank,
-    rerank_factor: int,
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """Oversized-query IVF-PQ probe, fully distributed:
-
-    1. probe assignment — an Arrow pass over the query frame ranks
-       centroids per query with the SAME stable argsort the collected
-       path uses and explodes to (qid, __qv, bucket) probe rows;
-    2. the DISTINCT probed buckets (<= n_centroids, bounded) are
-       collected and pushed as a static partition filter, keeping the
-       collected path's planning-time pruning;
-    3. a bucket equi-join builds the (query, code) pairs each query
-       actually probes, scored by the shared :func:`~spatialpandas_spark
-       .operators.pq._adc_pair_scan`;
-    4. optional exact rerank joins WITHOUT broadcasting the large query
-       side.
-
-    Same candidate set and ADC arithmetic as the collected path — the
-    over-threshold pytest pins row-identity across the boundary."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    from spatialpandas_spark.operators.pq import (
-        _adc_pair_scan,
-        _books_array,
-        _l2_normalize,
-    )
-
     cn = _l2_normalize(np.asarray(meta["centroids"], dtype=np.float64))
-    B = _books_array(meta["codebooks"])
 
-    probe_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("__qv", q_sel.schema["__qv"].dataType),
-            StructField("bucket", IntegerType()),
-        ]
-    )
+    def rank_probes(Q, n):
+        # cosine == dot of normalized pairs; the stable argsort breaks
+        # ties to the LOWER centroid index
+        return np.argsort(-(_l2_normalize(Q) @ cn.T), axis=1, kind="stable")[:, :n]
 
-    def assign_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = _l2_normalize(
-                np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__qv"]]
-                )
-            )
-            order = np.argsort(-(Q @ cn.T), axis=1, kind="stable")[:, :n_probe]
-            n_q, n_p = order.shape
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy().repeat(n_p),
-                    "__qv": pdf["__qv"].to_numpy().repeat(n_p),
-                    "bucket": order.ravel().astype("int32"),
-                }
-            )
-
-    # checkpoint: the probe frame feeds BOTH the distinct-bucket collect
-    # and the bucket equi-join — without it the Arrow assignment pass
-    # over the (by definition oversized) query frame runs twice
-    probes = materialize(
-        q_sel.mapInPandas(assign_probes, probe_schema), eager=True
+    return _ivf_code_topk(
+        spark, path, meta, "build_ivfpq_index", _pq_codec(meta["codebooks"]),
+        rank_probes, queries, k, n_probe, rerank, rerank_factor, query_id,
+        query_vec, corpus_id, corpus_vec, max_collected_queries,
     )
-    # distinct probed buckets: bounded by n_centroids — tiny, safe collect
-    buckets = sorted(
-        r["bucket"] for r in probes.select("bucket").distinct().collect()
-    )
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    pairs = cds.join(probes, "bucket").select("qid", "__qv", "vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-    n_cand = k * rerank_factor if rerank is not None else k
-    cand = _adc_pair_scan(pairs, B, n_cand, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfpq_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    rr = (
-        cand.select("qid", "vec_id")
-        .join(q_sel, "qid")
-        .join(cv, "vec_id")
-        .select("qid", "vec_id", "__qv", "__cv")
-    )
-    return _topk_rerank(pair_cosine_arrow(rr), k)
 
 
 def append_to_ivfpq_index(
@@ -670,229 +433,22 @@ def query_ivfsq8_index(
     (ADC sims out), a corpus DataFrame (exact-cosine rerank against the
     source table — the at-scale shape), or ``"stored"`` (vectors
     persisted with ``store_vectors=True``). Above
-    ``max_collected_queries`` the probe degrades to the fully
-    distributed formulation (``_query_ivfsq8_distributed``) instead of
-    raising. Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
+    ``max_collected_queries`` the probe degrades to the distributed
+    formulation of ``similarity._ivf_code_topk`` instead of raising;
+    there the rerank joins the global top-``k * rerank_factor``
+    candidates per query. Columns out: (qid, vec_id, sim, rank)."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from spatialpandas_spark.operators.pq import _group_topk, _rerank_pairs
-    from spatialpandas_spark.operators.sq import _scales, _seq_normalize
+    from spatialpandas_spark.operators.sq import _sq8_codec
 
     meta = load_ivfsq8_meta(path)
     cents = np.asarray(meta["centroids"], dtype=np.float64)
-    params = meta["sq8"]
-    lo, scale = _scales(params)
-    dim = int(params["dim"])
-
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        return _query_ivfsq8_distributed(
-            spark, path, meta, q_sel, k, n_probe, rerank, rerank_factor,
-            corpus_id, corpus_vec,
-        )
-    if not qrows:
-        empty = StructType(
-            [
-                StructField("qid", q_sel.schema["qid"].dataType),
-                StructField(
-                    "vec_id", spark.read.parquet(path).schema["vec_id"].dataType
-                ),
-                StructField("sim", DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], empty).withColumn(
-            "rank", F.lit(1).cast("int")
-        )
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = np.asarray([np.asarray(r["__qv"], np.float64) for r in qrows])
-    if Q.ndim != 2 or Q.shape[1] != dim:
-        raise ValueError(
-            f"query vector dim {Q.shape[1] if Q.ndim == 2 else 'ragged'}"
-            f" != index dim {dim}"
-        )
-    Qn = _seq_normalize(Q)
-    order = _rank_probes_seq(Q, cents, n_probe)
-    probes_by_bucket: dict[int, list[int]] = {}
-    for qi in range(order.shape[0]):
-        for b in order[qi]:
-            probes_by_bucket.setdefault(int(b), []).append(qi)
-    buckets = sorted(probes_by_bucket)
-
-    n_cand = k * rerank_factor if rerank is not None else k
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
+    return _ivf_code_topk(
+        spark, path, meta, "build_ivfsq8_index", _sq8_codec(meta["sq8"]),
+        lambda Q, n: _rank_probes_seq(Q, cents, n), queries, k, n_probe,
+        rerank, rerank_factor, query_id, query_vec, corpus_id, corpus_vec,
+        max_collected_queries, global_pool=True,
     )
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = pdf["code"].notna()
-            if not ok.any():
-                continue
-            pdf = pdf[ok]
-            bk = pdf["bucket"].to_numpy()
-            vid = pdf["vec_id"].to_numpy()
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"code width {C.shape[1]} != index dim {dim}"
-                )
-            Xhat = lo[None, :] + C.astype(np.float64) * scale[None, :]
-            for b in np.unique(bk):
-                qs_b = probes_by_bucket.get(int(b))
-                if not qs_b:
-                    continue
-                rows = np.flatnonzero(bk == b)
-                Xb = Xhat[rows]
-                # sequential dim fold (sq8_topk's exact arithmetic)
-                S = np.zeros((Xb.shape[0], len(qs_b)), dtype=np.float64)
-                for j in range(dim):
-                    S = S + Xb[:, j : j + 1] * Qn[qs_b, j][None, :]
-                qcol = np.tile(np.asarray(qs_b), len(rows))
-                vcol = np.repeat(vid[rows], len(qs_b))
-                acc.append(_reduce(qcol, vcol, S.ravel()))
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": qids[q], "vec_id": v, "sim": s})
-
-    cand = cds.mapInPandas(adc_scan, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfsq8_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    # broadcast the candidate side so the stored/pruned vector
-    # partitions stream through a broadcast hash join instead of being
-    # shuffled (round-14 b20/b21/b31 profile fix) — strategy chosen by
-    # the construction-time bound so the forced hint can never exceed
-    # the broadcast cap when the index scan has many partitions
-    # (round-15 advice fix, see pq._rerank_pairs)
-    pairs = _rerank_pairs(
-        cand, q_sel, cv, n_cand,
-        n_parts=cds.rdd.getNumPartitions(),
-        n_queries=len(qids), dim=Q.shape[1],
-    )
-    return _topk_rerank(pair_cosine_arrow(pairs), k)
-
-
-def _query_ivfsq8_distributed(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    q_sel: DataFrame,
-    k: int,
-    n_probe: int,
-    rerank,
-    rerank_factor: int,
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """Oversized-query IVF-SQ8 probe (the `_query_ivfpq_distributed`
-    shape on the SQ8 codec): Arrow probe assignment with the SAME
-    tie-break as the collected path (:func:`_rank_probes_seq`), the
-    bounded distinct-bucket collect keeps the static partition filter,
-    a bucket equi-join builds the (query, code) pairs, and the shared
-    :func:`~spatialpandas_spark.operators.sq._sq8_pair_topk` scores
-    them with the identical dequantize + sequential-fold arithmetic."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from spatialpandas_spark.operators.sq import _sq8_pair_topk
-
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    probe_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("__qv", q_sel.schema["__qv"].dataType),
-            StructField("bucket", IntegerType()),
-        ]
-    )
-
-    def assign_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__qv"]]
-            )
-            order = _rank_probes_seq(Q, cents, n_probe)
-            n_q, n_p = order.shape
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy().repeat(n_p),
-                    "__qv": pdf["__qv"].to_numpy().repeat(n_p),
-                    "bucket": order.ravel().astype("int32"),
-                }
-            )
-
-    probes = materialize(
-        q_sel.mapInPandas(assign_probes, probe_schema), eager=True
-    )
-    buckets = sorted(
-        r["bucket"] for r in probes.select("bucket").distinct().collect()
-    )
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    pairs = cds.join(probes, "bucket").select("qid", "__qv", "vec_id", "code")
-    n_cand = k * rerank_factor if rerank is not None else k
-    cand = _sq8_pair_topk(pairs, meta["sq8"], n_cand)
-    if rerank is None:
-        return cand  # n_cand == k: already the ranked top-k
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfsq8_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    rr = (
-        cand.select("qid", "vec_id")
-        .join(q_sel, "qid")
-        .join(cv, "vec_id")
-        .select("qid", "vec_id", "__qv", "__cv")
-    )
-    return _topk_rerank(pair_cosine_arrow(rr), k)
 
 
 def append_to_ivfsq8_index(

@@ -20,10 +20,11 @@ Spark shapes, all previously proven in this repo:
   collected state is 2·dim floats, never corpus rows;
 - **encode**: Arrow-batched linear scan -> ``(vec_id, code binary)``
   (dim bytes per row) — the column a 100 TB deployment persists;
-- **topk**: broadcast queries, per-partition ADC scan + local top-k
-  (the two-phase reducer shared with similarity.py/pq.py via
-  ``_group_topk`` — tie-break semantics cannot diverge), final window
-  over the tiny survivor set only. No query x corpus pair table.
+- **topk**: collected queries, per-partition ADC scan + local top-k,
+  final window over the tiny survivor set only — the two-phase
+  skeleton of similarity.py, so tie-break semantics cannot diverge;
+  this module supplies only the scoring (``_sq8_codec``). No query x
+  corpus pair table below ``max_collected_queries``.
 
 Correctness evidence (tests/test_sq.py): numpy replay twins for train/
 encode/ADC (bit-identical sims — both sides run the same numpy ops in
@@ -37,7 +38,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -45,8 +45,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from spatialpandas_spark.operators.pq import _group_topk
-from spatialpandas_spark.operators.similarity import _seq_pair_dot
+from spatialpandas_spark.operators.similarity import (
+    _Codec,
+    _code_topk,
+    _seq_pair_dot,
+    _stack,
+)
 
 
 def _seq_normalize(X: np.ndarray) -> np.ndarray:
@@ -217,6 +221,45 @@ def load_sq8(path: str, filesystem=None) -> dict:
     }
 
 
+def _sq8_codec(params: dict):
+    """SQ8's scoring for the shared top-k skeleton
+    (``similarity._Codec``): dequantize each code to ``lo_j + code_j *
+    scale_j`` and fold ``sum_j xhat_j * qn_j`` left to right against
+    the sequential-fold-normalized query (similarity.py ``_seq_dot``
+    discipline) — batch-shape-independent and bit-identical to a SQL
+    fold, where np.dot's BLAS blocking would make sims depend on Arrow
+    batch size. The collected scan and the pair scan run the same ops
+    per (query, code) pair."""
+    lo, scale = _scales(params)
+    dim = int(params["dim"])
+
+    def dequantize(col):
+        C = np.frombuffer(
+            b"".join(bytes(b) for b in col), dtype=np.uint8
+        ).reshape(len(col), -1)
+        if C.shape[1] != dim:
+            raise ValueError(f"code width {C.shape[1]} != params dim {dim}")
+        return lo[None, :] + C.astype(np.float64) * scale[None, :]
+
+    def scorer(Q):
+        Qn = _seq_normalize(Q)
+
+        def score(col, qs):
+            X = dequantize(col)
+            S = np.zeros((X.shape[0], len(qs)), dtype=np.float64)
+            for j in range(dim):
+                S = S + X[:, j : j + 1] * Qn[qs, j][None, :]
+            return S.T
+
+        return score
+
+    def pair_score(pdf):
+        Qn = _seq_normalize(_stack(pdf["__qv"]))
+        return _seq_pair_dot(dequantize(pdf["code"]), Qn)
+
+    return _Codec(dim, scorer, pair_score)
+
+
 def sq8_topk(
     queries: DataFrame,
     codes: DataFrame,
@@ -227,8 +270,9 @@ def sq8_topk(
     max_collected_queries: int = 65536,
 ) -> DataFrame:
     """Approximate top-k by cosine against the SQ8 codes (ADC:
-    dequantized corpus x float query), two-phase like every top-k here:
-    per-partition scan + local top-k, final window over survivors.
+    dequantized corpus x float query), through the two-phase top-k
+    skeleton of ``operators/similarity.py``: per-partition scan + local
+    top-k, final window over survivors.
 
     The query side is collected only when it has at most
     ``max_collected_queries`` rows (bounded ``limit(n+1)`` probe); above
@@ -236,147 +280,11 @@ def sq8_topk(
     formulation (``brute_force_topk``'s discipline) — same dequantize +
     sequential-fold arithmetic per (query, code) pair, no driver
     materialization. Query dims are validated against ``params['dim']``
-    (a longer query would otherwise silently score a truncated prefix);
-    an empty/all-null query side returns an empty frame with the
-    declared schema. Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.window import Window
-
-    lo, scale = _scales(params)
-    dim = int(params["dim"])
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        pairs = codes.crossJoin(q_sel).select(
-            "qid", "__qv", "vec_id", "code"
-        )
-        return _sq8_pair_topk(pairs, params, k)
-
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", codes.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
+    on either path (a longer query would otherwise silently score a
+    truncated prefix); an empty/all-null query side returns an empty
+    frame with the declared schema. Columns out: (qid, vec_id, sim,
+    rank)."""
+    return _code_topk(
+        queries, codes, _sq8_codec(params), k, None, k,
+        query_id, query_vec, max_collected_queries,
     )
-    if not qrows:
-        spark = queries.sparkSession
-        empty = StructType(
-            list(out_schema.fields)
-            + [StructField("rank", IntegerType())]
-        )
-        return spark.createDataFrame([], empty)
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = np.asarray([np.asarray(r["__qv"], np.float64) for r in qrows])
-    if Q.ndim != 2 or Q.shape[1] != dim:
-        raise ValueError(
-            f"query vector dim {Q.shape[1] if Q.ndim == 2 else 'ragged'}"
-            f" != params dim {dim}"
-        )
-    Q = _seq_normalize(Q)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accq, accv, accs = [], [], []
-        for pdf in batches:
-            pdf = pdf[pdf["code"].notna()]
-            if len(pdf) == 0:
-                continue
-            C = np.frombuffer(
-                b"".join(pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"code width {C.shape[1]} != params dim {dim}"
-                )
-            Xhat = lo[None, :] + C.astype(np.float64) * scale[None, :]
-            # sequential left-to-right fold over dims (similarity.py
-            # _seq_dot discipline): batch-shape-independent and
-            # bit-identical to a SQL fold — np.dot's BLAS blocking
-            # would make sims depend on Arrow batch size
-            S = np.zeros((Xhat.shape[0], Q.shape[0]), dtype=np.float64)
-            for j in range(Xhat.shape[1]):
-                S = S + Xhat[:, j : j + 1] * Q[None, :, j]
-            nrows, nq = S.shape
-            qcol = np.tile(qids, nrows)
-            vcol = np.repeat(pdf["vec_id"].to_numpy(), nq)
-            scol = S.ravel()
-            gq, gv, gs = _group_topk(qcol, vcol, scol, k)
-            accq.append(gq), accv.append(gv), accs.append(gs)
-        if accq:
-            gq, gv, gs = _group_topk(
-                np.concatenate(accq), np.concatenate(accv),
-                np.concatenate(accs), k,
-            )
-            yield pd.DataFrame({"qid": gq, "vec_id": gv, "sim": gs})
-
-    survivors = codes.mapInPandas(run, out_schema)
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _sq8_pair_topk(pairs: DataFrame, params: dict, k: int) -> DataFrame:
-    """Distributed SQ8 ADC over an explicit (qid, __qv, vec_id, code)
-    pair frame — the oversized-query fallback of :func:`sq8_topk` and
-    the probe scorer of the persistent IVF-SQ8 index. Per pair:
-    sequential-fold normalize the query, dequantize the code, and fold
-    ``sum_j xhat_j * qn_j`` left to right — the EXACT arithmetic of the
-    collected path (row-identity pinned by tests/test_sq.py), then the
-    shared two-phase top-k reducer."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from spatialpandas_spark.operators.similarity import _topk_rerank
-
-    lo, scale = _scales(params)
-    dim = int(params["dim"])
-    out_schema = StructType(
-        [
-            StructField("qid", pairs.schema["qid"].dataType),
-            StructField("vec_id", pairs.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["code"].notna()]
-            if len(pdf) == 0:
-                continue
-            Q = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf["__qv"]]
-            )
-            if Q.ndim != 2 or Q.shape[1] != dim:
-                raise ValueError(
-                    f"query vector dim"
-                    f" {Q.shape[1] if Q.ndim == 2 else 'ragged'}"
-                    f" != params dim {dim}"
-                )
-            Qn = _seq_normalize(Q)
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"code width {C.shape[1]} != params dim {dim}"
-                )
-            Xhat = lo[None, :] + C.astype(np.float64) * scale[None, :]
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"],
-                    "vec_id": pdf["vec_id"],
-                    "sim": _seq_pair_dot(Xhat, Qn),
-                }
-            )
-
-    return _topk_rerank(pairs.mapInPandas(run, out_schema), k)

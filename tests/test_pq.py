@@ -86,7 +86,7 @@ def test_pq_rerank_capacity_fork_safe_at_scale(spark, monkeypatch):
     global per-query top-n_cand window instead, and (b) leave the
     LOSSLESS-config result exactly equal to brute force — proving the
     fallback path computes the same query."""
-    import spatialpandas_spark.operators.pq as pqmod
+    import spatialpandas_spark.operators.similarity as simmod
 
     emb = _emb(spark, n=12, dim=8, labels=12, noise=0.0, seed=5)
     books = train_pq(emb, m_sub=2, n_codes=12, iters=4)
@@ -94,7 +94,7 @@ def test_pq_rerank_capacity_fork_safe_at_scale(spark, monkeypatch):
     qs = emb.limit(4).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    monkeypatch.setattr(pqmod, "_CAND_BROADCAST_CAP", 0)
+    monkeypatch.setattr(simmod, "_CAND_BROADCAST_CAP", 0)
     out = pq_topk(qs, codes, books, k=3, rerank=emb, rerank_factor=2)
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
