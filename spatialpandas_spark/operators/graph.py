@@ -50,7 +50,10 @@ def connected_components(
     set fits comfortably on the driver (``<= driver_threshold`` edges
     after dedup), a single-pass union-find there beats ~10 tiny Spark
     jobs of star contraction — near-dup pair graphs are usually orders of
-    magnitude smaller than their corpus. Larger graphs take the
+    magnitude smaller than their corpus. A ``count()`` of the pinned
+    edges decides the path; on the driver path one Arrow collect brings
+    the edges in and the result is a local frame built from Arrow,
+    which later actions read with no Spark job. Larger graphs take the
     distributed path; set ``driver_threshold=0`` to force it.
     """
     e = (
@@ -60,15 +63,19 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
         # materialize once: every path below reads the edge set at least
-        # twice (count + collect, or iterate), and upstream is typically
-        # an expensive pair pipeline (LSH) that must not recompute
+        # twice (count + collect, or count + rounds), and upstream is
+        # typically an expensive pair pipeline (LSH) that must not
+        # recompute
         .transform(materialize, eager=True)
     )
 
     if driver_threshold > 0:
-        # count is one cheap job; the loop below would run ~10 per round
+        # count is cheap on the pin; the loop below would run ~10 jobs
+        # per round. A limit(driver_threshold + 1) collect would decide
+        # and fetch in one job, but it runs every partition and sends
+        # their first driver_threshold + 1 edges through one task.
         if e.count() <= driver_threshold:
-            return _driver_union_find(e)
+            return _driver_union_find(e.sparkSession, e.toArrow())
 
     prev: tuple | None = None
     converged = False
@@ -138,10 +145,13 @@ def connected_components(
     )
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Small-graph path: collect the (deduped) edge list, run path-halving
-    union-find, return the (node, component) table. Driver memory is
-    O(edges) — guarded by the caller's threshold."""
+def _driver_union_find(spark, edges) -> DataFrame:
+    """Small-graph path: path-halving union-find over the collected
+    (deduped) ``u``/``v`` int64 columns of an Arrow table, returning the
+    (node, component) table as an Arrow-built local frame. Driver memory
+    is O(edges) — guarded by the caller's threshold."""
+    import pyarrow as pa
+
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -151,13 +161,20 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for row in e.toLocalIterator():
-        ra, rb = find(row["u"]), find(row["v"])
+    for u, v in zip(edges.column("u").to_pylist(), edges.column("v").to_pylist()):
+        ra, rb = find(u), find(v)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
 
-    rows = [(n, find(n)) for n in parent]
-    return e.sparkSession.createDataFrame(rows, "node long, component long")
+    nodes = list(parent)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(nodes, pa.int64()),
+                "component": pa.array([find(n) for n in nodes], pa.int64()),
+            }
+        )
+    )
 
 
 def pagerank(

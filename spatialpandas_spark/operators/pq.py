@@ -169,7 +169,10 @@ def pq_encode(
                         [np.asarray(v, dtype=np.float64) for v in pdf["__cv"][mask]]
                     )
                 )
-                _check_dims(X.shape[1], m_sub)
+                if X.shape[1] != m_sub * sub:
+                    raise ValueError(
+                        f"vector dim {X.shape[1]} != codebook dim {m_sub * sub}"
+                    )
                 out = np.empty((X.shape[0], m_sub), dtype=np.uint8)
                 for j in range(m_sub):
                     S = X[:, j * sub : (j + 1) * sub]

@@ -35,6 +35,15 @@ set. Nothing data-sized ever crosses the wire, no second corpus pass,
 and exactness holds by construction (earlier rounds used an
 HLL-threshold prefilter + a recompute safety net: one extra full scan
 and three extra plan-subtree copies per sketch for the same result).
+
+The overlap screens (:func:`kmv_overlap`, :func:`corpus_overlap`)
+finish on the driver: their input is at most ``2k`` hashes by
+construction, so the call collects them in one Arrow collect (running
+the sketch scan then, once), counts the union's bottom-k and the shared
+hashes in numpy and returns a local one-row frame, over which the
+Column estimators fold at plan time. Each Spark job costs driver time
+whatever its rows; joining and aggregating two k-row frames in Spark
+cost several.
 """
 
 from __future__ import annotations
@@ -182,12 +191,12 @@ def kmv_summary(
         F.count("*").alias("n_hashes"),
         F.max(F.when(F.col("rank") == k, F.col("h"))).alias("kth_hash"),
     )
-    est = F.when(
-        F.col("n_hashes") < k, F.col("n_hashes").cast("double")
-    ).otherwise(
-        F.lit(float(k - 1)) * F.lit(float(HSPACE)) / F.col("kth_hash").cast("double")
+    return agg.select(
+        *groups,
+        "n_hashes",
+        "kth_hash",
+        _kmv_estimate("n_hashes", "kth_hash", k).alias("distinct_est"),
     )
-    return agg.select(*groups, "n_hashes", "kth_hash", est.alias("distinct_est"))
 
 
 def kmv_merge(
@@ -241,46 +250,77 @@ def kmv_overlap(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
     :func:`containment_probe`, whose error is independent of the large
     side's size.
 
-    Each input is consumed three times (union, membership flags,
-    summary); a lazy ``materialize`` pins the ≤ k-row sketch so a
-    sketch built from a corpus scan runs that scan ONCE, not three
-    times. (Purely a recompute saver: the sketch is a deterministic
-    function of the key set, so this is not in the fork-determinism
-    class rank.py pins.)"""
-    a = a.transform(materialize, eager=False)
-    b = b.transform(materialize, eager=False)
-    u = kmv_union(a, b, k)
-    flagged = (
-        u.join(
-            F.broadcast(a.select(F.col("h"), F.lit(1).alias("__a"))),
-            "h",
-            "left",
-        )
-        .join(
-            F.broadcast(b.select(F.col("h"), F.lit(1).alias("__b"))),
-            "h",
-            "left",
-        )
-        .select(
-            "h",
-            "rank",
-            F.coalesce(F.col("__a"), F.lit(0)).alias("in_a"),
-            F.coalesce(F.col("__b"), F.lit(0)).alias("in_b"),
-        )
+    Runs at call time: both sketches' ``h`` columns come back in ONE
+    Arrow collect (at most ``2k`` hashes for ``k``-row sketches — a
+    sketch built from a corpus scan runs that scan here, once), the
+    counts the estimators need are taken on the driver, and the result
+    is a local one-row frame that later actions read with no Spark
+    job."""
+    sides = a.select(F.lit(0).alias("__side"), "h").unionByName(
+        b.select(F.lit(1).alias("__side"), "h")
     )
-    stats = flagged.agg(
-        F.count("*").alias("k_used"),
-        F.sum(F.col("in_a") * F.col("in_b")).alias("n_both"),
-        F.max(F.when(F.col("rank") == k, F.col("h"))).alias("kth_hash"),
+    return _driver_overlap(sides, k)
+
+
+def _driver_overlap(sides: DataFrame, k: int) -> DataFrame:
+    """Collect a ``(__side, h)`` frame (side 0 = A, 1 = B) of two
+    ungrouped sketches in one Arrow collect, count on the driver what
+    the estimators need (union bottom-k size, shared hashes, each
+    side's row count and k-th hash) and apply :func:`_overlap_estimates`
+    to that one-row Arrow-built frame. Spark folds the projection into
+    the ``LocalRelation``, so reading the result runs no job."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = sides.select("__side", "h").toArrow()
+    side, h = t.column("__side").to_numpy(), t.column("h").to_numpy()
+    ha, hb = np.sort(h[side == 0]), np.sort(h[side == 1])
+    u = np.unique(np.concatenate([ha, hb]))[:k]
+
+    def kth(s):
+        # max(h) over rank == k: NULL below k rows
+        return int(s[k - 1]) if len(s) >= k else None
+
+    both = int((np.isin(u, ha) & np.isin(u, hb)).sum())
+    counts = {
+        "k_used": len(u),
+        "n_both": both if len(u) else None,  # a sum over no rows is NULL
+        "kth_hash": kth(u),
+        "n_a": len(ha),
+        "kth_a": kth(ha),
+        "n_b": len(hb),
+        "kth_b": kth(hb),
+    }
+    # the nullability of the aggregates these replace (count, sum, max)
+    schema = pa.schema(
+        [pa.field(c, pa.int64(), nullable=c not in ("k_used", "n_a", "n_b"))
+         for c in counts]
     )
-    sa = kmv_summary(a, k).select(
-        F.col("distinct_est").alias("distinct_a_est")
-    )
-    sb = kmv_summary(b, k).select(
-        F.col("distinct_est").alias("distinct_b_est")
+    local = sides.sparkSession.createDataFrame(
+        pa.Table.from_pylist([counts], schema=schema)
     )
     return _overlap_estimates(
-        stats.crossJoin(F.broadcast(sa)).crossJoin(F.broadcast(sb)), k, []
+        local.select(
+            "k_used",
+            "n_both",
+            "kth_hash",
+            _kmv_estimate("n_a", "kth_a", k).alias("distinct_a_est"),
+            _kmv_estimate("n_b", "kth_b", k).alias("distinct_b_est"),
+        ),
+        k,
+        [],
+    )
+
+
+def _kmv_estimate(n_col: str, kth_col: str, k: int):
+    """Distinct-count estimate of a sketch from its row count and k-th
+    hash: the row count under ``k`` rows, else the unbiased KMV
+    estimator ``(k-1) * H / h_k`` (Column; the gate's SQL oracle
+    mirrors this op order)."""
+    return F.when(
+        F.col(n_col) < k, F.col(n_col).cast("double")
+    ).otherwise(
+        F.lit(float(k - 1)) * F.lit(float(HSPACE)) / F.col(kth_col).cast("double")
     )
 
 
@@ -289,11 +329,7 @@ def _overlap_estimates(df, k: int, id_cols: list[str]) -> DataFrame:
     kth_hash, distinct_a_est, distinct_b_est) to the full overlap-stats
     row. One IEEE multiply/divide chain — the exact op order the gate's
     SQL oracle mirrors."""
-    union_est = F.when(
-        F.col("k_used") < k, F.col("k_used").cast("double")
-    ).otherwise(
-        F.lit(float(k - 1)) * F.lit(float(HSPACE)) / F.col("kth_hash").cast("double")
-    )
+    union_est = _kmv_estimate("k_used", "kth_hash", k)
     jacc = F.when(F.col("k_used") > 0,
                   F.col("n_both").cast("double") / F.col("k_used")
                   ).otherwise(F.lit(0.0))
@@ -540,17 +576,13 @@ def corpus_overlap(
     job and the sketch machinery (Arrow partial bottom-k, distinct,
     rank window) is planned once. Per-side rows are identical to two
     separate :func:`shingle_sketch` calls because the sketch is a pure
-    function of each side's key set; the tiny (≤ 2k-row) grouped sketch
-    is checkpointed so the union scan never re-executes for the second
-    consumer."""
+    function of each side's key set. The ≤ 2k-row grouped sketch is
+    collected once, at call time, and finished on the driver like
+    :func:`kmv_overlap`: the result is a local one-row frame."""
     ga = docs_a.select(F.lit(0).alias("__side"), F.col(text_col))
     gb = docs_b.select(F.lit(1).alias("__side"), F.col(text_col))
     sk = shingle_sketch(
         ga.unionByName(gb), text_col, n=n, k=k, seed=seed,
         group_cols=["__side"],
-    ).transform(materialize, eager=False)
-    return kmv_overlap(
-        sk.filter(F.col("__side") == 0).drop("__side"),
-        sk.filter(F.col("__side") == 1).drop("__side"),
-        k,
     )
+    return _driver_overlap(sk, k)

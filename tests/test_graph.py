@@ -75,6 +75,58 @@ def test_cc_random_graphs_match_union_find(spark, seed, thr):
     assert got == _uf_components(edges)
 
 
+def _is_local(df):
+    from spatialpandas_spark.plans import physical_plan
+
+    return "LocalTableScan" in physical_plan(df)
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_cc_driver_threshold_boundary(spark, seed):
+    """Exactly ``driver_threshold`` deduped edges take the driver path
+    (an Arrow-built local frame); one edge more takes the distributed
+    path. Both match the union-find oracle."""
+    rng = random.Random(seed)
+    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(90)]
+    n = len({(a, b) for a, b in edges if a != b})
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    drv = connected_components(df, driver_threshold=n)
+    dist = connected_components(df, driver_threshold=n - 1)
+    assert _is_local(drv) and not _is_local(dist)
+    want = _uf_components(edges)
+    for out in (drv, dist):
+        assert {r["node"]: r["component"] for r in out.collect()} == want
+
+
+@pytest.mark.parametrize("thr", [0, 1_000_000])  # distributed and driver paths
+def test_cc_empty_edge_set(spark, thr):
+    """No edges (here only a self-loop) give an empty (node, component)
+    frame on both paths."""
+    df = spark.createDataFrame([(3, 3)], "id_a long, id_b long")
+    out = connected_components(df, driver_threshold=thr)
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+
+
+def test_cc_driver_path_jobs_pinned(spark, jobs_in):
+    """The driver path on an edge set pinned in 8 partitions runs the
+    eager pin (2 jobs), a ``count()`` (2) and one Arrow collect at call
+    time, and nothing at ``collect()`` (warm second call). The parent
+    ran 12 at call time: the pin, the ``count()`` and a
+    ``toLocalIterator()`` of one job per partition (8); and 1 at
+    ``collect()`` of its list-built frame."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 160, 2)], "id_a long, id_b long"
+    ).repartition(8, "id_a", "id_b")
+    for rnd in ("warm", "pin"):
+        out, n_call = jobs_in(
+            f"cc-driver-call-{rnd}", lambda: connected_components(edges)
+        )
+        rows, n_collect = jobs_in(f"cc-driver-collect-{rnd}", out.collect)
+    assert (n_call, n_collect) == (5, 0)
+    assert len(rows) == 160
+
+
 @pytest.fixture(scope="module")
 def dup_docs(spark):
     # 0,1,2 chain-similar; 3,4 identical; 5,6 unique
@@ -102,6 +154,24 @@ def test_near_dup_clusters_groups_transitively(spark, dup_docs):
     assert by_id[3]["cluster_id"] == by_id[4]["cluster_id"] == 3
     assert by_id[5]["cluster_id"] == 5 and by_id[5]["cluster_size"] == 1
     assert by_id[6]["cluster_id"] == 6
+
+
+def test_near_dup_clusters_jobs_pinned(spark, dup_docs, jobs_in):
+    """Jobs of a warm second ``near_dup_clusters`` call and its
+    ``collect()`` on this fixture. The parent ran 9 and 7: the Arrow
+    collect of the edges costs what its ``toLocalIterator()`` did on
+    this small edge set, and its list-built component frame cost jobs
+    at every read."""
+    from spatialpandas_spark.operators.dedup import near_dup_clusters
+
+    for rnd in ("warm", "pin"):
+        out, n_call = jobs_in(
+            f"near-dup-call-{rnd}",
+            lambda: near_dup_clusters(dup_docs, threshold=0.4),
+        )
+        rows, n_collect = jobs_in(f"near-dup-collect-{rnd}", out.collect)
+    assert (n_call, n_collect) == (9, 4)
+    assert len(rows) == 7
 
 
 def test_dedup_near_keeps_min_id_per_cluster(spark, dup_docs):

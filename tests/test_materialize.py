@@ -7,11 +7,12 @@ test session through the public API, so this runs in a subprocess with
 its own ``local[2]`` session: the same operators run first in local
 mode, then again after ``setCheckpointDir``, and the results must match
 exactly. Covered pins: the eager fork pin of ``with_rank``, the eager
-per-iteration pins of ``connected_components``, the lazy pins of
-``corpus_overlap`` (``kmv_sketch`` underneath) and the per-round eager
-pins of a multi-round ``sjoin_knn``. A reliable checkpoint recomputes
-the pinned RDD to write it, so the kNN run also checks that the counts
-its rounds observe during the pin (logged at DEBUG) do not double.
+per-iteration pins of ``connected_components``, the lazy pin of
+``containment_probe`` (a ``shingle_sketch`` of the benchmark side) and
+the per-round eager pins of a multi-round ``sjoin_knn``. A reliable
+checkpoint recomputes the pinned RDD to write it, so the kNN run also
+checks that the counts its rounds observe during the pin (logged at
+DEBUG) do not double.
 """
 
 import json
@@ -30,7 +31,7 @@ from spatialpandas_spark.session import get_spark
 from spatialpandas_spark.operators.graph import connected_components
 from spatialpandas_spark.operators.knn import sjoin_knn
 from spatialpandas_spark.operators.rank import with_rank
-from spatialpandas_spark.operators.sketch import corpus_overlap
+from spatialpandas_spark.operators.sketch import containment_probe
 from tests.test_knn import multi_round_points
 
 spark = get_spark(app_name="reliable-materialize", master="local[2]",
@@ -86,9 +87,9 @@ def run():
     cc = connected_components(edges, driver_threshold=0)
     out["cc"] = sorted((r["node"], r["component"]) for r in cc.collect())
     out["n_cc"] = n_ckpt()
-    ov = corpus_overlap(docs_a, docs_b, n=2, k=64)
-    out["overlap"] = [sorted(r.asDict().items()) for r in ov.collect()]
-    out["n_overlap"] = n_ckpt()
+    probe = containment_probe(docs_a, docs_b, n=2, k=64, detail=True)
+    out["probe"] = sorted(list(r) for r in probe.collect())
+    out["n_probe"] = n_ckpt()
     knn_log.clear()
     kn = sjoin_knn(knn_l, knn_r, k=3, cell_size=0.25, residual_bf_rows=2)
     out["knn"] = sorted(list(r) for r in kn.collect())
@@ -120,7 +121,7 @@ def test_reliable_checkpoint_mode_matches_local(tmp_path):
     assert sorted(rk for _, rk in local["rank"]) == list(range(1, 601))
     assert reliable["cc"] == local["cc"]
     assert len({c for _, c in local["cc"]}) == 13
-    assert reliable["overlap"] == local["overlap"]
+    assert reliable["probe"] == local["probe"]
     assert reliable["knn"] == local["knn"]
     assert len(local["knn"]) == 23 * 3
     # three pinned rounds, then the residual sweep; equal logs mean equal
@@ -133,9 +134,9 @@ def test_reliable_checkpoint_mode_matches_local(tmp_path):
     assert reliable["knn_log"] == local["knn_log"]
     # no checkpoint dir: nothing written; with one, every operator's pins
     # wrote reliable checkpoints under it
-    assert local["n_overlap"] == 0
+    assert local["n_probe"] == 0
     assert (
-        0 < reliable["n_rank"] < reliable["n_cc"] < reliable["n_overlap"]
+        0 < reliable["n_rank"] < reliable["n_cc"] < reliable["n_probe"]
         < reliable["n_knn"]
     )
     assert any(p.is_file() for p in ckpt.rglob("rdd-*/part-*"))

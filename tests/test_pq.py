@@ -44,6 +44,15 @@ def test_train_pq_dim_guard(spark):
         train_pq(emb, m_sub=4)
 
 
+def test_pq_encode_dim_mismatch_raises(spark):
+    """Codebooks trained on 8-dim vectors cannot encode a 12-dim corpus:
+    the parent encoded each row from its first 8 dims without a word."""
+    books = train_pq(_emb(spark, dim=8), m_sub=4, n_codes=8, iters=2)
+    wide = _emb(spark, n=5, dim=12)
+    with pytest.raises(Exception, match=r"ValueError: vector dim 12 != codebook dim 8"):
+        pq_encode(wide, books).collect()
+
+
 def test_pq_encode_compression_and_nulls(spark):
     emb = _emb(spark, n=50).unionByName(
         spark.createDataFrame(

@@ -355,10 +355,10 @@ def test_overlap_matrix_equals_pairwise_overlap(spark):
 
 def test_plan_shapes(spark):
     """Codified plan audit (round 8): the overlap comparison must not
-    re-scan corpus data (checkpoint-pinned sketches cut the lineage;
-    each side's scan runs once at pin time), must contain no cartesian
-    product, and the grouped sketch must not funnel corpus rows through
-    a single-partition exchange."""
+    re-scan corpus data (its row is a local relation: each side's scan
+    ran once, at call time), must contain no cartesian product, and the
+    grouped sketch must not funnel corpus rows through a
+    single-partition exchange."""
     from spatialpandas_spark.plans import physical_plan
 
     docs = spark.createDataFrame(
@@ -370,14 +370,78 @@ def test_plan_shapes(spark):
     b = shingle_sketch(docs.filter(F.col("doc_id") % 2 == 1), k=32)
     plan = physical_plan(kmv_overlap(a, b, 32))
     assert "CartesianProduct" not in plan
-    # the lazy checkpoint replaces the corpus lineage in the comparison
-    assert "Scan ExistingRDD" in plan
+    # the driver-built row replaces the corpus lineage in the comparison
+    assert "LocalTableScan" in plan
 
     grouped = kmv_sketch(
         docs.selectExpr("src", "text as s"), "s", k=16, group_cols=["src"]
     )
     gplan = physical_plan(grouped)
     assert "Exchange SinglePartition" not in gplan
+
+
+@pytest.fixture(scope="module")
+def overlap_docs(spark):
+    """Two halves (even / odd ``doc_id``) of a corpus whose 5-grams
+    overlap, spread over 8 partitions."""
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 90}" for j in range(12)))
+         for i in range(120)],
+        "doc_id long, text string",
+    ).repartition(8)
+    return (
+        docs.filter(F.col("doc_id") % 2 == 0),
+        docs.filter(F.col("doc_id") % 2 == 1),
+    )
+
+
+def test_overlap_jobs_pinned(spark, overlap_docs, jobs_in):
+    """Both overlap screens collect their sketches in one Arrow collect
+    at call time and return a local row that ``first()`` / ``collect()``
+    read with no job (warm second call, this fixture): 5 jobs at call
+    time, where the sketch scans and shuffles run. The parent ran
+    ``corpus_overlap`` in 4 jobs at call time and 8 at ``first()``, and
+    ``kmv_overlap`` in 4 and 8: lazy pins, broadcast membership joins
+    and a cross join of three summaries over two k-row sketches."""
+    even, odd = overlap_docs
+    for rnd in ("warm", "pin"):
+        ov, n_call = jobs_in(
+            f"corpus-overlap-call-{rnd}", lambda: corpus_overlap(even, odd, k=32)
+        )
+        row, n_first = jobs_in(f"corpus-overlap-first-{rnd}", ov.first)
+        a, b = shingle_sketch(even, k=32), shingle_sketch(odd, k=32)
+        ko, k_call = jobs_in(
+            f"kmv-overlap-call-{rnd}", lambda: kmv_overlap(a, b, 32)
+        )
+        rows, k_collect = jobs_in(f"kmv-overlap-collect-{rnd}", ko.collect)
+    assert (n_call, n_first) == (5, 0)
+    assert (k_call, k_collect) == (5, 0)
+    # the grouped sketch's rows equal two standalone sketches'
+    assert rows == [row] and row["n_both"] > 0
+
+
+def test_empty_sketches_overlap_row(spark):
+    """Two empty sketches give the parent's row: ``k_used`` 0, ``n_both``
+    NULL (a SQL sum over no rows) and every estimate 0.0; one empty side
+    gives ``n_both`` 0 and the other side's exact count."""
+    empty = kmv_sketch(spark.createDataFrame([], "s string"), "s", k=16)
+    ten = kmv_sketch(
+        spark.createDataFrame([(f"x{i}",) for i in range(10)], "s string"),
+        "s", k=16,
+    )
+    ov = kmv_overlap(empty, empty, 16)
+    assert ov.schema.simpleString() == (
+        "struct<k_used:bigint,n_both:bigint,jaccard:double,union_est:double,"
+        "intersection_est:double,distinct_a_est:double,distinct_b_est:double,"
+        "containment_a:double,containment_b:double>"
+    )
+    assert [tuple(r) for r in ov.collect()] == [(0, None) + (0.0,) * 7]
+    half = kmv_overlap(empty, ten, 16).first()
+    assert tuple(half) == (10, 0, 0.0, 10.0, 0.0, 0.0, 10.0, 0.0, 0.0)
+    docs = spark.createDataFrame([], "text string")
+    assert [tuple(r) for r in corpus_overlap(docs, docs, k=16).collect()] == [
+        (0, None) + (0.0,) * 7
+    ]
 
 
 def test_overlap_matrix_group_count_guard(spark):

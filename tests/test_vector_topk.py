@@ -144,31 +144,19 @@ JOBS = {
 }
 
 
-def _jobs(sc, group, fn):
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("path", sorted(PATHS))
 @pytest.mark.parametrize("op", OPS)
-def test_jobs_per_call_and_collect_pinned(fx, op, path):
+def test_jobs_per_call_and_collect_pinned(fx, op, path, jobs_in):
     """Jobs launched by the call (query collect, probe pins, bucket
     collect) and by ``collect()``, on a warm second call. The counts
     were taken before the operators shared one skeleton; the refactor
     keeps every job."""
-    spark = fx["spark"]
-    sc = spark.sparkContext
     qs = fx["corpus"].filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     _run(op, fx, qs, PATHS[path]).collect()  # warm: caches, listings
     tag = f"topk-jobs-{op}-{path}"
-    out, n_call = _jobs(sc, tag + "-call", lambda: _run(op, fx, qs, PATHS[path]))
-    rows, n_collect = _jobs(sc, tag + "-collect", out.collect)
+    out, n_call = jobs_in(tag + "-call", lambda: _run(op, fx, qs, PATHS[path]))
+    rows, n_collect = jobs_in(tag + "-collect", out.collect)
     assert len(rows) == 3 * NQ
     assert (n_call, n_collect) == JOBS[(op, path)]

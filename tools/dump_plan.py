@@ -67,11 +67,10 @@ def df_b27_sjoin_nearest(spark, sf_dir):
 
 
 def df_b30_kmv_overlap(spark, sf_dir):
-    # the sketch stage: kmv_overlap checkpoints its sketch inputs, so
-    # the end-to-end plan starts downstream of the part whose shape the
-    # optimization changed. Round-14 continuation: corpus_overlap now
-    # runs ONE tagged-union grouped sketch pass over both sides, so
-    # mirror that shape (was: one per-side shingle_sketch per plan).
+    # the sketch stage: corpus_overlap collects its grouped sketch and
+    # finishes on the driver, so the sketch is the only Spark plan it
+    # runs. It is ONE tagged-union grouped sketch pass over both sides;
+    # mirror that shape.
     import bench
     from spatialpandas_spark.operators.sketch import shingle_sketch
 
