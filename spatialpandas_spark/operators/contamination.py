@@ -24,7 +24,7 @@ composes with dedup at scan speed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.dedup import word_shingles
@@ -40,6 +40,22 @@ def benchmark_shingles(
         bench.select(F.explode(word_shingles(F.col(text_col), n)).alias("s"))
         .distinct()
     )
+
+
+def _unique_id(op: str, id_col: str, value: Column) -> Column:
+    """Aggregate ``value`` over a ``groupBy(id_col)`` whose input carries
+    the per-row marker ``__row``; a group whose markers differ is two
+    rows sharing a non-null id and raises, naming it. Rides the
+    existing aggregate: no extra Spark job."""
+    shared = F.col(id_col).isNotNull() & (F.min("__row") != F.max("__row"))
+    dup = F.raise_error(
+        F.concat(
+            F.lit(f"{op} requires a unique {id_col}: "),
+            F.col(id_col).cast("string"),
+            F.lit(" names more than one row"),
+        )
+    )
+    return F.when(shared, dup).otherwise(value)
 
 
 def ngram_overlap(
@@ -58,19 +74,24 @@ def ngram_overlap(
     broadcast join + one groupBy(doc) shuffle; the benchmark side must be
     broadcast-sized (true for every real eval suite).
 
-    Precondition (not checked): ``id_col`` is unique per row; rows sharing
-    an id are scored as one document.
+    ``id_col`` must be unique per row: two rows sharing a non-null id
+    would be scored as one document, so they raise, naming the id.
     """
     bset = benchmark_shingles(bench, bench_text_col, n).withColumn(
         "__hit", F.lit(1)
     )
     exploded = docs.select(
         F.col(id_col),
+        F.monotonically_increasing_id().alias("__row"),
+        F.col(text_col),
+    ).select(
+        id_col,
+        "__row",
         F.explode_outer(word_shingles(F.col(text_col), n)).alias("s"),
     )
     joined = exploded.join(F.broadcast(bset), "s", "left")
     agg = joined.groupBy(id_col).agg(
-        F.count("s").alias("total_ngrams"),
+        _unique_id("ngram_overlap", id_col, F.count("s")).alias("total_ngrams"),
         F.count("__hit").alias("matched_ngrams"),
     )
     return agg.withColumn(
@@ -279,17 +300,22 @@ def ngram_overlap_bloom(
        instead of a driver broadcast.
 
     The result is exact for ANY ``fpp``; the knob only trades candidate
-    volume against bloom bytes. Same unique-``id_col`` precondition as
-    :func:`ngram_overlap`."""
+    volume against bloom bytes. As in :func:`ngram_overlap`, two rows
+    sharing a non-null ``id_col`` raise, naming the id: the per-document
+    totals are one ``groupBy(id_col)``, which the join to the matched
+    counts then reads already partitioned by id."""
     bset = benchmark_shingles(bench, bench_text_col, n)
     # bounded: one integer. The count also sizes the bitmap.
     n_items = bset.count()
     base = docs.select(
         F.col(id_col),
+        F.monotonically_increasing_id().alias("__row"),
         word_shingles(F.col(text_col), n).alias("__sh"),
     )
-    totals = base.select(
-        id_col, F.size("__sh").cast("long").alias("total_ngrams")
+    totals = base.groupBy(id_col).agg(
+        _unique_id(
+            "ngram_overlap_bloom", id_col, F.sum(F.size("__sh")).cast("long")
+        ).alias("total_ngrams")
     )
     if n_items == 0:
         out = totals.withColumn("matched_ngrams", F.lit(0).cast("long"))
@@ -327,8 +353,8 @@ def decontaminate(
     so the removal is a broadcast anti-join — the corpus itself is never
     shuffled. ``method='bloom'`` scores overlap via
     :func:`ngram_overlap_bloom` (same exact values; use when the
-    benchmark shingle set exceeds broadcast size). Precondition (not
-    checked): ``id_col`` is unique per row; removal is by id."""
+    benchmark shingle set exceeds broadcast size). Removal is by id, so
+    two rows sharing a non-null ``id_col`` raise, naming the id."""
     if method not in ("broadcast", "bloom"):
         raise ValueError(f"unknown decontamination method {method!r}")
     fn = ngram_overlap if method == "broadcast" else ngram_overlap_bloom

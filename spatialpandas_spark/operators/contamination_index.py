@@ -291,9 +291,10 @@ def rebuild_decon_index(
     base = path.rstrip("/")
     tmp = f"{base}.rebuild.tmp"
     groups = p["group_cols"]
-    # consumed by count, bloom build, and the staged write
+    # consumed by the distinct count, bloom build, and the staged write
     store = materialize(spark.read.parquet(f"{base}/shingles"), eager=False)
-    n_before = store.count()  # distinct per (groups, s) by invariant
+    # distinct per (groups, s) by invariant
+    n_before = _fs.parquet_num_rows(f"{base}/shingles")
     nsh = store.select("s").distinct().count()
     fpp = p["bloom"]["fpp"] if fpp is None else fpp
     m, bk = _bloom_params(max(1, nsh), fpp)
@@ -320,7 +321,7 @@ def rebuild_decon_index(
         "fpp_realized": _fpp_realized(m, bk, nsh),
     }
     _fs.write_text(f"{tmp}/{_SIDECAR}", json.dumps(out))
-    n_after = spark.read.parquet(f"{tmp}/shingles").count()
+    n_after = _fs.parquet_num_rows(f"{tmp}/shingles")
     if n_after != n_before:
         raise RuntimeError(
             f"decon-index rebuild row-count mismatch ({n_before} -> "

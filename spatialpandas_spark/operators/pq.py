@@ -254,13 +254,15 @@ def pq_topk(
     Per partition of the code table, ONE fancy-indexing pass scores every
     (query, row) pair from the per-query lookup tables (``m_sub x
     n_codes`` partial inner products, built once per query) and reduces
-    to the local top-c (``c = k * rerank_factor`` when a rerank frame is
-    supplied, else ``k``); the final window ranks only the tiny survivor
-    set — the two-phase skeleton of ``brute_force_topk``. With
-    ``rerank``, the surviving candidates are joined back to the float
-    vectors and re-scored with exact cosine, so ``sim`` in the output is
-    exact and only the candidate CHOICE is approximate (the standard
-    IVFADC refinement step).
+    to the partition's top-k; the final window ranks only the tiny
+    survivor set — the two-phase skeleton of ``brute_force_topk``. With
+    ``rerank``, the scan keeps the top-c instead (``c = k *
+    rerank_factor``), the survivors are cut to each query's global
+    top-c, and that pool is joined back to the float vectors and
+    re-scored with exact cosine, so ``sim`` in the output is exact and
+    only the candidate CHOICE is approximate (the standard IVFADC
+    refinement step). The pool does not depend on how the code table
+    is partitioned.
 
     The query side is bounded exactly like ``brute_force_topk``: a
     ``limit(n+1)`` collect guards the driver, and ABOVE

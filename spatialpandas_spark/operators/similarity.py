@@ -126,7 +126,8 @@ def brute_force_topk(
 # over :func:`_group_topk`); phase 2 ranks only that survivor set with
 # one window (:func:`_rank`). :func:`_vector_topk` owns the query side
 # and its collect-or-distribute fork, :func:`_rerank_vectors` and
-# :func:`_finish_topk` the optional exact rerank, and
+# :func:`_finish_topk` the optional exact rerank of one global
+# candidate pool (the ``_rank`` window cut), and
 # :func:`_ivf_code_topk` the IVF probe of both quantized codecs. A
 # codec (``pq._pq_codec``, ``sq._sq8_codec``) supplies only its scoring.
 
@@ -292,49 +293,35 @@ def _rerank_vectors(
 
 
 def _finish_topk(
-    cand: DataFrame,
-    k: int,
-    q_sel: DataFrame,
-    cv,
-    n_cand: int,
-    bound=None,
-    global_pool: bool = False,
+    cand: DataFrame, k: int, q_sel: DataFrame, cv, n_cand: int, bound=None
 ) -> DataFrame:
     """Phase 2 of a code scan: rank the ADC candidates, or, with the
-    rerank vectors ``cv``, join them back to the float query and corpus
-    vectors and rank by exact cosine — ``sim`` out is exact and only
-    the candidate CHOICE is approximate (the IVFADC refinement step).
+    rerank vectors ``cv``, cut them to the global top-``n_cand`` per
+    query, join that pool back to the float query and corpus vectors
+    and rank by exact cosine — ``sim`` out is exact and only the
+    candidate CHOICE is approximate (the IVFADC refinement step). The
+    pool is the same on every path and at every partition layout of
+    the scan: a distributed top-k is exact only when the candidates are
+    merged globally before the cut.
 
-    The candidate pool is top-``n_cand`` per query PER PARTITION of the
-    scan. On the collected path ``bound`` is ``(scanned code frame,
-    n_queries, dim)``, so the pool's size bound ``n_parts x n_queries
-    x n_cand`` rows is known at construction time (round-15 advice fix:
-    a forced ``F.broadcast`` bypasses the planner's size checks):
-
-    - bound fits the budget (every bench/fixture scale): broadcast the
-      per-partition pool, so the float corpus streams through a
-      broadcast hash join instead of being shuffled (round-14 b20
-      profile: the old plan shuffle-wrote the entire cached vector
-      corpus to equi-join a few hundred rows);
-    - too big: reduce to the global per-query top-``n_cand`` first (an
-      exact partition-independent refinement of the same order) and
-      broadcast that — ``n_queries x n_cand`` rows;
-    - even that exceeds the budget: plain joins, sized by the planner.
-
-    On the distributed path (no ``bound``) the query side is large by
-    definition: plain joins, never broadcasting it; ``global_pool`` cuts
-    the pool to the global top-``n_cand`` first."""
+    On the collected path ``bound`` is ``(n_queries, dim)``, so the
+    pool's size is known at construction time (round-15 advice fix: a
+    forced ``F.broadcast`` bypasses the planner's size checks). When
+    ``n_queries x n_cand`` rows of query vector and ids fit
+    ``_CAND_BROADCAST_CAP``, the pool is broadcast and the float corpus
+    streams through a broadcast hash join instead of being shuffled
+    (round-14 b20 profile: the old plan shuffle-wrote the entire cached
+    vector corpus to equi-join a few hundred rows). Otherwise, and on
+    the distributed path (no ``bound``: the query side is large by
+    definition), plain joins sized by the planner."""
     if cv is None:
         return _topk_rerank(cand, k)
+    ids = _rank(cand, n_cand).select("qid", "vec_id")
     broadcast = False
     if bound is not None:
-        scanned, n_queries, dim = bound
-        pool = n_queries * n_cand * (dim * 8 + 48)  # query vector + ids
-        global_pool = scanned.rdd.getNumPartitions() * pool > _CAND_BROADCAST_CAP
-        broadcast = not global_pool or pool <= _CAND_BROADCAST_CAP
-    if global_pool:
-        cand = _rank(cand, n_cand).drop("rank")
-    ids = cand.select("qid", "vec_id")
+        n_queries, dim = bound
+        # query vector + ids per pool row
+        broadcast = n_queries * n_cand * (dim * 8 + 48) <= _CAND_BROADCAST_CAP
     if broadcast:
         with_q = F.broadcast(ids.join(F.broadcast(q_sel), "qid"))
     else:
@@ -408,7 +395,7 @@ def _code_topk(
     def collected(q_sel, qids, Q, schema):
         cand = _code_scan(cds, codec.scorer(Q), qids, n_cand, schema)
         return _finish_topk(
-            cand, k, q_sel, cv, n_cand, bound=(cds, len(qids), Q.shape[1])
+            cand, k, q_sel, cv, n_cand, bound=(len(qids), Q.shape[1])
         )
 
     def distributed(q_sel, schema):
@@ -441,7 +428,6 @@ def _ivf_code_topk(
     corpus_id: str,
     corpus_vec: str,
     max_collected_queries: int,
-    global_pool: bool = False,
 ) -> DataFrame:
     """The IVF probe of a bucket-partitioned code index (IVF-PQ,
     IVF-SQ8), given its sidecar ``meta`` and the name of the ``build``
@@ -460,8 +446,8 @@ def _ivf_code_topk(
     probed-bucket collect (<= n_centroids rows, so the scan keeps its
     static filter) and the bucket equi-join that builds the (query,
     code) pairs each query probes; the pairs go through the codec's
-    pair scorer. ``global_pool`` cuts the candidate pool to the global
-    top-``k * rerank_factor`` before the rerank join (the SQ8 shape)."""
+    pair scorer. Both paths rerank the one pool of
+    :func:`_finish_topk`."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -488,7 +474,7 @@ def _ivf_code_topk(
             cds, codec.scorer(Q), qids, n_cand, schema, probes_by_bucket
         )
         return _finish_topk(
-            cand, k, q_sel, cv, n_cand, bound=(cds, len(qids), Q.shape[1])
+            cand, k, q_sel, cv, n_cand, bound=(len(qids), Q.shape[1])
         )
 
     def distributed(q_sel, schema):
@@ -524,7 +510,7 @@ def _ivf_code_topk(
         )
         pairs = cds.join(probes, "bucket").select("qid", "__qv", "vec_id", "code")
         cand = _pair_scan(pairs, codec, n_cand, schema)
-        return _finish_topk(cand, k, q_sel, cv, n_cand, global_pool=global_pool)
+        return _finish_topk(cand, k, q_sel, cv, n_cand)
 
     return _vector_topk(
         queries, query_id, query_vec, max_collected_queries,

@@ -434,8 +434,8 @@ def query_ivfsq8_index(
     source table — the at-scale shape), or ``"stored"`` (vectors
     persisted with ``store_vectors=True``). Above
     ``max_collected_queries`` the probe degrades to the distributed
-    formulation of ``similarity._ivf_code_topk`` instead of raising;
-    there the rerank joins the global top-``k * rerank_factor``
+    formulation of ``similarity._ivf_code_topk`` instead of raising.
+    On both paths the rerank joins the global top-``k * rerank_factor``
     candidates per query. Columns out: (qid, vec_id, sim, rank)."""
     import numpy as np
 
@@ -447,7 +447,7 @@ def query_ivfsq8_index(
         spark, path, meta, "build_ivfsq8_index", _sq8_codec(meta["sq8"]),
         lambda Q, n: _rank_probes_seq(Q, cents, n), queries, k, n_probe,
         rerank, rerank_factor, query_id, query_vec, corpus_id, corpus_vec,
-        max_collected_queries, global_pool=True,
+        max_collected_queries,
     )
 
 
@@ -494,10 +494,11 @@ def compact_vector_index(
 
     Same safe-swap discipline as ``compact_spatial_parquet``: write the
     repacked layout NEXT TO the live one, copy the model sidecar so the
-    staged directory is complete, verify row-count equality, then move it
-    over the old directory. Returns the new data-file count, or None when
-    the index already has <= ``min_files`` files (default: one per
-    existing bucket, i.e. already compact)."""
+    staged directory is complete, verify row-count equality (parquet
+    footers, no Spark job), then move it over the old directory. Returns
+    the new data-file count, or None when the index already has <=
+    ``min_files`` files (default: one per existing bucket, i.e. already
+    compact)."""
     from spatialpandas_spark.sources import fs as _fs
 
     base = path.rstrip("/")
@@ -508,7 +509,7 @@ def compact_vector_index(
         min_files = buckets
     if len(files) <= min_files:
         return None
-    n_before = df.count()
+    n_before = _fs.parquet_num_rows(base)
     tmp = f"{base}.compact.tmp"
     df.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
@@ -520,7 +521,7 @@ def compact_vector_index(
             )
         except (FileNotFoundError, OSError):
             continue
-    n_after = spark.read.parquet(tmp).count()
+    n_after = _fs.parquet_num_rows(tmp)
     if n_after != n_before:
         raise RuntimeError(
             f"index compaction row-count mismatch ({n_before} -> {n_after});"

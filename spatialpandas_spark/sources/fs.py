@@ -122,3 +122,25 @@ def read_parquet_metadata(
 
     fs, p = resolve(path, filesystem)
     return pq.read_metadata(p, filesystem=fs)
+
+
+def parquet_num_rows(
+    path: str, filesystem: pafs.FileSystem | None = None
+) -> int:
+    """Rows of the parquet dataset at ``path``, summed from the footers'
+    ``num_rows`` over the files Spark would read: names starting with
+    ``_`` or ``.`` (sidecars, ``_SUCCESS``, checksums, ``_temporary``)
+    are skipped at every level, and partition directories such as
+    ``bucket=N`` are descended into. No Spark job."""
+    fs, p = resolve(path, filesystem)
+    root = p.rstrip("/") + "/"
+    sel = pafs.FileSelector(p, recursive=True)
+    total = 0
+    for info in fs.get_file_info(sel):
+        parts = info.path[len(root) :].split("/")
+        if info.type != pafs.FileType.File or any(
+            part.startswith(("_", ".")) for part in parts
+        ):
+            continue
+        total += read_parquet_metadata(info.path, filesystem=fs).num_rows
+    return total

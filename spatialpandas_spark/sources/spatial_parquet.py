@@ -128,10 +128,10 @@ def compact_spatial_parquet(
     counts grow, and this restores the single global order).
 
     Safe swap discipline: the repacked layout is written NEXT TO the
-    live one (``<path>.compact.tmp``), verified (row count equality),
-    then moved over the old directory — a reader mid-swap sees either
-    the old complete dataset or the new complete dataset, never a
-    partial write. Directory moves through the pyarrow-fs layer so
+    live one (``<path>.compact.tmp``), verified (row count equality,
+    from the parquet footers: no Spark job), then moved over the old
+    directory — a reader mid-swap sees either the old complete dataset
+    or the new complete dataset, never a partial write. Directory moves through the pyarrow-fs layer so
     object-store paths behave (copy + delete where rename isn't
     atomic — documented, same caveat as any non-transactional lake).
 
@@ -142,7 +142,7 @@ def compact_spatial_parquet(
     if len(old["files"]) < min_files:
         return None
     df = spark.read.parquet(base)
-    n_before = df.count()
+    n_before = _fs.parquet_num_rows(base)
     tmp = f"{base}.compact.tmp"
     manifest = write_spatial_parquet(
         df,
@@ -154,7 +154,7 @@ def compact_spatial_parquet(
         total_bounds=total_bounds,
         compression=compression,
     )
-    n_after = spark.read.parquet(tmp).count()
+    n_after = _fs.parquet_num_rows(tmp)
     if n_after != n_before:
         raise RuntimeError(
             f"compaction row-count mismatch ({n_before} -> {n_after}); "

@@ -1,10 +1,12 @@
 """Decontamination vs a Python set-overlap oracle; broadcast-plan checks."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.contamination import (
     decontaminate,
     ngram_overlap,
+    ngram_overlap_bloom,
 )
 
 
@@ -217,3 +219,32 @@ def test_bloom_build_distributed_or_reduce(spark):
         map(tuple, ngram_overlap_bloom(docs, bench, n=3).collect())
     )
     assert got == want
+
+
+# id 1 names a contaminated row and a clean one: scored as one document,
+# the parent merged them (ngram_overlap), gave both the merged match
+# count (ngram_overlap_bloom: overlap above 1.0) or dropped both
+# (decontaminate)
+SHARED = [
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (1, "totally different words here none shared at all"),
+    (2, "short doc"),
+]
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda d, b: ngram_overlap(d, b, n=3),
+        lambda d, b: ngram_overlap_bloom(d, b, n=3),
+        lambda d, b: decontaminate(d, b, threshold=0.5, n=3),
+        lambda d, b: decontaminate(d, b, threshold=0.5, n=3, method="bloom"),
+    ],
+    ids=["ngram_overlap", "ngram_overlap_bloom", "decontaminate",
+         "decontaminate-bloom"],
+)
+def test_shared_id_raises_naming_it(spark, call):
+    docs = spark.createDataFrame(SHARED, "doc_id long, text string")
+    bench = spark.createDataFrame(BENCH, "doc_id long, text string")
+    with pytest.raises(Exception, match="requires a unique doc_id: 1 names"):
+        call(docs, bench).collect()

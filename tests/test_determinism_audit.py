@@ -27,6 +27,10 @@ Audited sites (round 7, full-package grep):
   shards) — hash partitioning is content-deterministic, out of class.
 - ``ordering.py`` deterministic_shuffle / sample_hash — content-hash
   order, layout-independent by construction.
+- ``operators/contamination.py`` ngram_overlap / ngram_overlap_bloom —
+  a per-row ``__row`` marker read by one ``groupBy(id)`` only, as
+  ``min != max`` (two rows share the id): the test holds on any
+  layout, and no other branch reads the stamps.
 
 The allowlist test makes any NEW layout-dependent call site fail review
 until it is either pinned or consciously added here. It also holds the
@@ -55,6 +59,7 @@ ALLOWED = {
     },
     "monotonically_increasing_id": {
         "operators/sjoin.py": 1,      # pinned round 7 (this module's twin)
+        "operators/contamination.py": 2,  # shared-id marker, one consumer
     },
     "spark_partition_id": {
         "operators/rank.py": 2,       # downstream of the pinned fork

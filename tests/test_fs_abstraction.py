@@ -72,6 +72,28 @@ def test_build_manifest_on_memory_fs(memfs):
     }
 
 
+def test_parquet_num_rows_counts_what_spark_reads(memfs):
+    """Footer row counts over the files Spark would read: partition
+    directories are descended into; ``_``/``.``-prefixed files and
+    directories (sidecars, staging, checksums) are not read at all —
+    they hold no parquet here, so reading one would raise."""
+    def put(path, n):
+        pq.write_table(pa.table({"v": pa.array(range(n), pa.int64())}),
+                       path, filesystem=memfs)
+
+    for d in ("ix/bucket=0", "ix/bucket=1", "ix/_temporary/0"):
+        memfs.create_dir(d, recursive=True)
+    put("ix/bucket=0/part-0.parquet", 3)
+    put("ix/bucket=0/part-1.parquet", 4)
+    put("ix/bucket=1/part-0.parquet", 5)
+    put("ix/_temporary/0/part-9.parquet", 100)
+    for name in ("ix/_ivfpq.json", "ix/_SUCCESS", "ix/bucket=0/.part-0.crc"):
+        with memfs.open_output_stream(name) as f:
+            f.write(b"not parquet")
+    assert _fs.parquet_num_rows("ix", filesystem=memfs) == 12
+    assert _fs.parquet_num_rows("ix/bucket=1", filesystem=memfs) == 5
+
+
 def test_ivf_sidecar_on_memory_fs(memfs):
     from spatialpandas_spark.operators.similarity_index import (
         load_ivf_centroids,

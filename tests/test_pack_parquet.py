@@ -171,20 +171,14 @@ def test_append_refreshes_manifest_and_prunes(spark, tmp_path):
     assert gen1.count() == 200
 
 
-def test_compact_restores_single_pack(spark, tmp_path):
-    """append-fragmented dataset -> compact -> one global Hilbert order,
-    same rows, manifest rebuilt, reads still prune."""
-    from pyspark.sql import functions as F
+#: Spark jobs of one compaction call on ``_fragmented`` (local[8]); 9
+#: when the live and the staged rows were each counted by a Spark job
+COMPACT_JOBS = 4
 
-    from spatialpandas_spark import st_point, with_bounds
-    from spatialpandas_spark.sources import read_spatial_parquet
-    from spatialpandas_spark.sources.spatial_parquet import (
-        MANIFEST_NAME,
-        append_spatial_parquet,
-        compact_spatial_parquet,
-        write_spatial_parquet,
-    )
-    import json as _json
+
+def _fragmented(spark, path):
+    """A spatial dataset of ids 0..999 in 8 files: a write, two appends."""
+    from spatialpandas_spark.sources.spatial_parquet import append_spatial_parquet
 
     def pts(lo, hi):
         df = spark.range(lo, hi).select(
@@ -196,10 +190,65 @@ def test_compact_restores_single_pack(spark, tmp_path):
         )
         return with_bounds(df, "geom", "point")
 
+    tb = (0, 0, 99, 96)
+    write_spatial_parquet(pts(0, 500), path, npartitions=4, total_bounds=tb)
+    append_spatial_parquet(pts(500, 800), path, npartitions=2, total_bounds=tb)
+    append_spatial_parquet(pts(800, 1000), path, npartitions=2, total_bounds=tb)
+
+
+def test_compact_jobs_pinned(spark, tmp_path, jobs_in):
+    """Compaction reads its row-identity check from the parquet footers:
+    the call launches only the repack's own jobs (sampling, the packed
+    write), none to count the live or the staged rows."""
+    from spatialpandas_spark.sources.spatial_parquet import compact_spatial_parquet
+
     path = str(tmp_path / "ds")
-    write_spatial_parquet(pts(0, 500), path, npartitions=4, total_bounds=(0, 0, 99, 96))
-    append_spatial_parquet(pts(500, 800), path, npartitions=2, total_bounds=(0, 0, 99, 96))
-    append_spatial_parquet(pts(800, 1000), path, npartitions=2, total_bounds=(0, 0, 99, 96))
+    _fragmented(spark, path)
+    _, n_jobs = jobs_in(
+        "compact-jobs",
+        lambda: compact_spatial_parquet(
+            spark, path, npartitions=4, total_bounds=(0, 0, 99, 96)
+        ),
+    )
+    assert n_jobs == COMPACT_JOBS
+    assert spark.read.parquet(path).count() == 1000
+
+
+def test_compact_short_staged_copy_raises(spark, tmp_path, monkeypatch):
+    """A staged copy that lost a row fails the footer row check: the
+    call raises, the staged copy stays for inspection, and the live
+    dataset keeps its files and rows."""
+    import spatialpandas_spark.sources.spatial_parquet as sp
+
+    path = str(tmp_path / "ds")
+    _fragmented(spark, path)
+    files = sorted(os.listdir(path))
+    real_write = sp.write_spatial_parquet
+
+    def lossy_write(df, *args, **kwargs):
+        return real_write(df.filter(F.col("id") != 7), *args, **kwargs)
+
+    monkeypatch.setattr(sp, "write_spatial_parquet", lossy_write)
+    with pytest.raises(RuntimeError, match=r"row-count mismatch \(1000 -> 999\)"):
+        sp.compact_spatial_parquet(
+            spark, path, npartitions=4, total_bounds=(0, 0, 99, 96)
+        )
+    assert sorted(os.listdir(path)) == files
+    assert spark.read.parquet(path).count() == 1000
+    assert os.path.isdir(f"{path}.compact.tmp")
+
+
+def test_compact_restores_single_pack(spark, tmp_path):
+    """append-fragmented dataset -> compact -> one global Hilbert order,
+    same rows, manifest rebuilt, reads still prune."""
+    from spatialpandas_spark.sources.spatial_parquet import (
+        MANIFEST_NAME,
+        compact_spatial_parquet,
+    )
+    import json as _json
+
+    path = str(tmp_path / "ds")
+    _fragmented(spark, path)
     before = _json.loads(open(f"{path}/{MANIFEST_NAME}").read())
     assert len(before["files"]) == 8
 

@@ -10,16 +10,24 @@ fork.
   frame with its declared types.
 - The Spark jobs each path launches, at call time and at ``collect()``,
   stay pinned.
+- The rows do not depend on how the scanned frame is partitioned: an
+  approximate top-k reranks one global candidate pool, not the union
+  of per-partition pools.
 """
 
 import re
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.pq import pq_encode, pq_topk, train_pq
-from spatialpandas_spark.operators.similarity import brute_force_topk
+from spatialpandas_spark.operators.similarity import (
+    brute_force_topk,
+    ivf_topk,
+    lsh_bucket_topk,
+)
 from spatialpandas_spark.operators.similarity_index import (
     build_ivfpq_index,
     build_ivfsq8_index,
@@ -127,19 +135,20 @@ def test_all_null_query_side_returns_empty_frame(fx, op, path):
     assert out.collect() == []
 
 
-# (call-time jobs, collect() jobs) per operator and path, measured on
-# the parent of the skeleton refactor with this fixture (local[8],
-# warm second call)
+# (call-time jobs, collect() jobs) per operator and path with this
+# fixture (local[8], warm second call). On the rerank paths (pq_topk
+# and both indexes here) the ranking window that cuts the candidates to
+# one global pool before the rerank join is one of the collect() jobs.
 JOBS = {
     ("brute_force_topk", "collected"): (3, 2),
     ("brute_force_topk", "distributed"): (1, 3),
-    ("pq_topk", "collected"): (3, 4),
-    ("pq_topk", "distributed"): (1, 5),
+    ("pq_topk", "collected"): (3, 5),
+    ("pq_topk", "distributed"): (1, 6),
     ("sq8_topk", "collected"): (3, 2),
     ("sq8_topk", "distributed"): (1, 3),
-    ("query_ivfpq_index", "collected"): (4, 4),
-    ("query_ivfpq_index", "distributed"): (5, 5),
-    ("query_ivfsq8_index", "collected"): (4, 4),
+    ("query_ivfpq_index", "collected"): (4, 5),
+    ("query_ivfpq_index", "distributed"): (5, 6),
+    ("query_ivfsq8_index", "collected"): (4, 5),
     ("query_ivfsq8_index", "distributed"): (5, 6),
 }
 
@@ -148,9 +157,7 @@ JOBS = {
 @pytest.mark.parametrize("op", OPS)
 def test_jobs_per_call_and_collect_pinned(fx, op, path, jobs_in):
     """Jobs launched by the call (query collect, probe pins, bucket
-    collect) and by ``collect()``, on a warm second call. The counts
-    were taken before the operators shared one skeleton; the refactor
-    keeps every job."""
+    collect) and by ``collect()``, on a warm second call."""
     qs = fx["corpus"].filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
@@ -160,3 +167,69 @@ def test_jobs_per_call_and_collect_pinned(fx, op, path, jobs_in):
     rows, n_collect = jobs_in(tag + "-collect", out.collect)
     assert len(rows) == 3 * NQ
     assert (n_call, n_collect) == JOBS[(op, path)]
+
+
+@contextmanager
+def _index_scan_split(spark, n):
+    """Plan file scans into ``n`` splits by size (at most one non-empty
+    split per parquet row group), restoring the session's settings."""
+    confs = {
+        "spark.sql.files.minPartitionNum": str(n),
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    old = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def _layout_rows(fx, op, n, mcq):
+    """Sorted (qid, rank, vec_id, sim) rows of ``op`` with its scanned
+    frame in ``n`` partitions (the index scan in ``n`` splits)."""
+    spark = fx["spark"]
+    qs = fx["corpus"].filter(F.col("vec_id") < NQ).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    if op.startswith("query_"):
+        with _index_scan_split(spark, n):
+            rows = _run(op, fx, qs, mcq).collect()
+    else:
+        fx = {**fx}
+        for key in ("corpus", "pq_codes", "sq_codes"):
+            fx[key] = fx[key].repartition(n)
+        if op == "ivf_topk":
+            # kmeans_iters=0: md5-sampled centroids; a Lloyd step sums
+            # floats in partition order
+            out = ivf_topk(
+                qs, fx["corpus"], k=3, n_centroids=4, n_probe=2,
+                kmeans_iters=0,
+            )
+        elif op == "lsh_bucket_topk":
+            out = lsh_bucket_topk(qs, fx["corpus"], k=3, dim=DIM)
+        else:
+            out = _run(op, fx, qs, mcq)
+        rows = out.collect()
+    return sorted((r["qid"], r["rank"], r["vec_id"], r["sim"]) for r in rows)
+
+
+@pytest.mark.parametrize("op", OPS + ["ivf_topk", "lsh_bucket_topk"])
+def test_rows_do_not_depend_on_partition_layout(fx, op):
+    """The same rows at 1, 2, 8 and 32 partitions of the codes/corpus
+    (for the IVF indexes: of the index scan), on both sides of the
+    collect-or-distribute fork where the operator has one. A rerank
+    pool made of each partition's top ``k * rerank_factor`` grows with
+    the partition count, and ``pq_topk`` and ``query_ivfpq_index`` then
+    return different rows at 1 and 2 partitions of this fixture."""
+    paths = [None, 0] if op in OPS else [None]
+    base = _layout_rows(fx, op, 1, None)
+    assert base and len(base) <= 3 * NQ
+    for n in (1, 2, 8, 32):
+        for mcq in paths:
+            assert _layout_rows(fx, op, n, mcq) == base, (n, mcq)
