@@ -44,10 +44,13 @@ def benchmark_shingles(
 
 def _unique_id(op: str, id_col: str, value: Column) -> Column:
     """Aggregate ``value`` over a ``groupBy(id_col)`` whose input carries
-    the per-row marker ``__row``; a group whose markers differ is two
-    rows sharing a non-null id and raises, naming it. Rides the
-    existing aggregate: no extra Spark job."""
-    shared = F.col(id_col).isNotNull() & (F.min("__row") != F.max("__row"))
+    the per-row marker ``__row``. The null-id group raises: its rows
+    would be scored as one document, and no null id matches the
+    removal's anti-join. A group whose markers differ is two rows
+    sharing an id and raises, naming it. Rides the existing aggregate:
+    no extra Spark job."""
+    shared = F.min("__row") != F.max("__row")
+    null = F.raise_error(F.lit(f"{op} requires a non-null {id_col}"))
     dup = F.raise_error(
         F.concat(
             F.lit(f"{op} requires a unique {id_col}: "),
@@ -55,7 +58,11 @@ def _unique_id(op: str, id_col: str, value: Column) -> Column:
             F.lit(" names more than one row"),
         )
     )
-    return F.when(shared, dup).otherwise(value)
+    return (
+        F.when(F.col(id_col).isNull(), null)
+        .when(shared, dup)
+        .otherwise(value)
+    )
 
 
 def ngram_overlap(
@@ -74,8 +81,9 @@ def ngram_overlap(
     broadcast join + one groupBy(doc) shuffle; the benchmark side must be
     broadcast-sized (true for every real eval suite).
 
-    ``id_col`` must be unique per row: two rows sharing a non-null id
-    would be scored as one document, so they raise, naming the id.
+    ``id_col`` must be non-null and unique per row: rows sharing an id
+    (null included) would be scored as one document, so a null id
+    raises, and a shared id raises naming it.
     """
     bset = benchmark_shingles(bench, bench_text_col, n).withColumn(
         "__hit", F.lit(1)
@@ -300,10 +308,10 @@ def ngram_overlap_bloom(
        instead of a driver broadcast.
 
     The result is exact for ANY ``fpp``; the knob only trades candidate
-    volume against bloom bytes. As in :func:`ngram_overlap`, two rows
-    sharing a non-null ``id_col`` raise, naming the id: the per-document
-    totals are one ``groupBy(id_col)``, which the join to the matched
-    counts then reads already partitioned by id."""
+    volume against bloom bytes. As in :func:`ngram_overlap`, a null
+    ``id_col`` raises, and two rows sharing one raise, naming it: the
+    per-document totals are one ``groupBy(id_col)``, which the join to
+    the matched counts then reads already partitioned by id."""
     bset = benchmark_shingles(bench, bench_text_col, n)
     # bounded: one integer. The count also sizes the bitmap.
     n_items = bset.count()
@@ -354,13 +362,21 @@ def decontaminate(
     shuffled. ``method='bloom'`` scores overlap via
     :func:`ngram_overlap_bloom` (same exact values; use when the
     benchmark shingle set exceeds broadcast size). Removal is by id, so
-    two rows sharing a non-null ``id_col`` raise, naming the id."""
+    a null ``id_col`` raises (no null matches the anti-join), and two
+    rows sharing one raise, naming it."""
     if method not in ("broadcast", "bloom"):
         raise ValueError(f"unknown decontamination method {method!r}")
     fn = ngram_overlap if method == "broadcast" else ngram_overlap_bloom
     flagged = (
         fn(docs, bench, id_col, text_col, bench_text_col, n)
         .filter(F.col("overlap") >= F.lit(float(threshold)))
-        .select(id_col)
+        .select(F.col(id_col).alias("__flagged"))
     )
-    return docs.join(F.broadcast(flagged), id_col, "left_anti")
+    # null-safe: from a plain equality key the optimizer infers a
+    # not-null filter on the flagged side and pushes it below the
+    # groupBy, so the null-id group, and its check, would never form
+    return docs.join(
+        F.broadcast(flagged),
+        F.col(id_col).eqNullSafe(F.col("__flagged")),
+        "left_anti",
+    )

@@ -48,6 +48,16 @@ distances, identical IEEE op order to the grid path so ``dist2`` stays
 bit-exact), and only ``n_partitions * n_residual * k`` survivor rows
 reach the final ranking window. Same exact semantics, one corpus scan,
 no candidate shuffle.
+
+First-round rule: the grid's cost is mostly fixed per call (the cell
+estimator's sample job, round 0's join, ranking window and eager pin,
+and their plan building), whatever the input size. So when the whole
+left side fits the residual sweep (``n_left <= residual_bf_rows``) and
+``n_left * n_right <= _SWEEP_FIRST_PAIRS`` (2^25 pairs, about the
+break-even on a one-partition corpus; ``docs/SCALE.md``), the sweep
+runs first, on every left row, and no grid round runs. The same
+residual block serves both entry points, so results are identical
+either way. The choice is logged at DEBUG with its inputs.
 """
 
 from __future__ import annotations
@@ -62,6 +72,9 @@ from pyspark.sql.window import Window
 from spatialpandas_spark.materialize import materialize
 
 log = logging.getLogger(__name__)
+
+# the first-round rule's bound, in (left, right) pairs (module docstring)
+_SWEEP_FIRST_PAIRS = 1 << 25
 
 
 def estimate_knn_cell_size(
@@ -233,6 +246,13 @@ def sjoin_knn(
     ``extent`` (max of the data's x/y span) bounds the level count;
     computed from the right side when omitted (one tiny agg job).
 
+    First round: a call whose whole left side is at most
+    ``residual_bf_rows`` rows and at most ``_SWEEP_FIRST_PAIRS`` (2^25)
+    (left, right) pairs skips the grid and runs the residual sweep on
+    every left row — no cell estimate, no pinned round, no ranking
+    window over candidates. Results are identical; ``residual_bf_rows=0``
+    forces the grid.
+
     ``max_radius`` bounds the search: the result becomes "the k nearest
     within ``max_radius``" (possibly fewer than k rows per left row,
     none for isolated rows) and — the scale point — the level-doubling
@@ -249,6 +269,8 @@ def sjoin_knn(
         raise ValueError("k must be positive")
     if max_radius is not None and not max_radius > 0:
         raise ValueError("max_radius must be positive")
+    if cell_size is not None and cell_size <= 0:
+        raise ValueError("cell_size must be positive")
 
     l0 = left.select(
         F.col(left_id).alias("__lid"),
@@ -263,16 +285,14 @@ def sjoin_knn(
         F.col(right_geom)["y"].alias("__ry"),
     ).filter(F.col("__rid").isNotNull())
 
-    # ONE agg job yields the corpus count (feeds the cell-size estimator
-    # and the residual-budget check) AND, when the level loop will need
-    # an extent, the min/max bounds of the UNION of both point sets —
-    # the separate left-side bounds job this replaces was a full extra
-    # job chain per call (round-14 b16 profile). The union bounds are
-    # exactly min/max over both sides, and an empty left side degrades
-    # to right-only bounds automatically. The left scan is skipped
-    # whenever the extent provably won't be used: caller passed one, or
-    # the radius-covering level is 0 (cell_size defaulting to
-    # max_radius, or an explicit cell_size >= max_radius).
+    # ONE agg job yields both row counts (they feed the first-round
+    # rule, the cell-size estimator and the residual-budget check) AND
+    # the min/max bounds of the UNION of both point sets, for the level
+    # loop's extent when the caller passed none — the separate left-side
+    # bounds job this replaces was a full extra job chain per call
+    # (round-14 b16 profile). The union bounds are exactly min/max over
+    # both sides, and an empty left side degrades to right-only bounds
+    # automatically.
     # radius-covering calls need NO statistics job at all: with cell
     # width >= max_radius the 3x3 neighborhood covers the cutoff disc, so
     # the loop below terminates after round 0 for every input — rows with
@@ -286,6 +306,7 @@ def sjoin_knn(
         cell_size is None or cell_size >= max_radius
     )
     cell_source = "given"
+    sweep_first = False
     if not radius_covers:
         # the narrow (id, x, y) projections are read several times per
         # call — the statistics aggregation, the estimator's sample,
@@ -310,22 +331,20 @@ def sjoin_knn(
             cell_size = float(max_radius)
             cell_source = "max_radius"
     else:
-        need_lb = extent is None
         sides = r0.select(
             F.lit(1).alias("__isr"),
             F.col("__rx").alias("__x"),
             F.col("__ry").alias("__y"),
-        )
-        if need_lb:
-            sides = sides.unionByName(
-                l0.select(
-                    F.lit(0).alias("__isr"),
-                    F.col("__lx").alias("__x"),
-                    F.col("__ly").alias("__y"),
-                )
+        ).unionByName(
+            l0.select(
+                F.lit(0).alias("__isr"),
+                F.col("__lx").alias("__x"),
+                F.col("__ly").alias("__y"),
             )
+        )
         ustat = sides.agg(
             F.sum("__isr").alias("n"),
+            F.count(F.lit(1)).alias("n_all"),
             F.max("__x").alias("x1"), F.min("__x").alias("x0"),
             F.max("__y").alias("y1"), F.min("__y").alias("y0"),
         ).first()
@@ -334,7 +353,22 @@ def sjoin_knn(
             return l0.sparkSession.createDataFrame(
                 [], f"{left_id} long, {right_id} long, dist2 double, rank int"
             )
-        if cell_size is None:
+        n_left = ustat["n_all"] - n_right
+        pairs = n_left * n_right
+        # the first-round rule (module docstring). The bound is in pairs,
+        # not the flop budget: the sweep's cost grows with pairs per
+        # task, so it sits near the break-even of a one-partition corpus
+        # (docs/SCALE.md, "kNN first round").
+        sweep_first = (
+            0 < n_left <= residual_bf_rows and pairs <= _SWEEP_FIRST_PAIRS
+        )
+        log.debug(
+            "sjoin_knn: first round %s (n_left=%d, n_right=%d, pairs=%d, "
+            "sweep bound %d pairs)",
+            "residual sweep" if sweep_first else "grid",
+            n_left, n_right, pairs, _SWEEP_FIRST_PAIRS,
+        )
+        if cell_size is None and not sweep_first:
             # the estimator returns the MEDIAN k-th-NN distance, but a row
             # only resolves in round 0 when its k-th candidate is within ONE
             # cell width — at cell = median, ~half the rows miss that bound
@@ -356,37 +390,35 @@ def sjoin_knn(
                 right_geom=right_geom,
                 n=n_right,
             )
-    if cell_size <= 0:
-        raise ValueError("cell_size must be positive")
+    if not sweep_first:
+        cutoff_lvl = None
+        if max_radius is not None:
+            # smallest level whose cell width covers the radius: at
+            # width >= max_radius the 3x3 neighborhood contains every
+            # point within max_radius, so searching wider proves nothing
+            cutoff_lvl = max(
+                0, math.ceil(math.log2(max(max_radius, 1e-300) / cell_size))
+            )
 
-    cutoff_lvl = None
-    if max_radius is not None:
-        # smallest level whose cell width covers the radius: at
-        # width >= max_radius the 3x3 neighborhood contains every point
-        # within max_radius, so searching wider proves nothing more
-        cutoff_lvl = max(
-            0, math.ceil(math.log2(max(max_radius, 1e-300) / cell_size))
+        if extent is None and cutoff_lvl == 0:
+            # the radius-covering level is 0: the loop can never expand,
+            # so a max_lvl fed by real bounds would already be pinned at 0
+            extent = cell_size
+        elif extent is None:
+            # the last level's 3x3 must cover the farthest possible
+            # (left, right) pair: the up-front union aggregation already
+            # spans both point sets (right-only when the left is empty)
+            extent = max(
+                ustat["x1"] - ustat["x0"], ustat["y1"] - ustat["y0"], cell_size
+            )
+
+        max_lvl = max(0, math.ceil(math.log2(extent / cell_size)) + 1)
+        if cutoff_lvl is not None:
+            max_lvl = min(max_lvl, cutoff_lvl)
+        log.debug(
+            "sjoin_knn: cell_size=%r (%s), max_lvl=%d, cutoff_lvl=%s",
+            cell_size, cell_source, max_lvl, cutoff_lvl,
         )
-
-    if extent is None and cutoff_lvl == 0:
-        # the radius-covering level is 0: the loop can never expand, so
-        # a max_lvl fed by real bounds would already be pinned at 0
-        extent = cell_size
-    elif extent is None:
-        # the last level's 3x3 must cover the farthest possible (left,
-        # right) pair: the up-front union aggregation already spans
-        # both point sets (right-only when the left side is empty)
-        extent = max(
-            ustat["x1"] - ustat["x0"], ustat["y1"] - ustat["y0"], cell_size
-        )
-
-    max_lvl = max(0, math.ceil(math.log2(extent / cell_size)) + 1)
-    if cutoff_lvl is not None:
-        max_lvl = min(max_lvl, cutoff_lvl)
-    log.debug(
-        "sjoin_knn: cell_size=%r (%s), max_lvl=%d, cutoff_lvl=%s",
-        cell_size, cell_source, max_lvl, cutoff_lvl,
-    )
 
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     # every row carries its OWN grid level. Round 0 runs everyone at
@@ -402,8 +434,10 @@ def sjoin_knn(
     results = []
     rounds = 0
     active = [0]
-    n_residual = 0
-    while True:
+    # the rows the residual sweep takes: every left row under the
+    # first-round rule, else what a round hands over (None: no sweep)
+    residual = l0 if sweep_first else None
+    while residual is None:
         rounds += 1
         # every row of a round at level >= max_lvl resolves (or, with an
         # empty neighborhood at the radius-covering level, is dropped), so
@@ -551,44 +585,46 @@ def sjoin_knn(
                 n_right = r0.count()
             degenerate = cell_size * (2 ** min(active)) >= extent / 4
             if cnt * n_right <= residual_bf_budget or degenerate:
-                res_rows = unresolved.collect()
-                r_sweep = r0
-                if max_radius is not None:
-                    # radius-bounded residual: only corpus points inside
-                    # some residual query's 3x3 at cell width =
-                    # max_radius can be within the radius — semi-join
-                    # the corpus to that (tiny, broadcast) cell set so
-                    # the Arrow sweep scans the pruned corpus, not all
-                    # of it. Post-sweep d2 <= r^2 filtering is
-                    # unchanged, so results are identical.
-                    w = float(max_radius)
-                    cells = sorted(
-                        {
-                            (
-                                math.floor(r["__lx"] / w) + dx,
-                                math.floor(r["__ly"] / w) + dy,
-                            )
-                            for r in res_rows
-                            for dx in (-1, 0, 1)
-                            for dy in (-1, 0, 1)
-                        }
+                residual = unresolved
+
+    n_residual = 0
+    if residual is not None:
+        res_rows = residual.select("__lid", "__lx", "__ly").collect()
+        r_sweep = r0
+        if max_radius is not None:
+            # radius-bounded residual: only corpus points inside some
+            # residual query's 3x3 at cell width = max_radius can be
+            # within the radius — semi-join the corpus to that (tiny,
+            # broadcast) cell set so the Arrow sweep scans the pruned
+            # corpus, not all of it. Post-sweep d2 <= r^2 filtering is
+            # unchanged, so results are identical.
+            w = float(max_radius)
+            cells = sorted(
+                {
+                    (
+                        math.floor(r["__lx"] / w) + dx,
+                        math.floor(r["__ly"] / w) + dy,
                     )
-                    cdf = r0.sparkSession.createDataFrame(
-                        cells, "__ccx long, __ccy long"
-                    )
-                    r_sweep = r0.join(
-                        F.broadcast(cdf),
-                        (F.floor(F.col("__rx") / F.lit(w)) == F.col("__ccx"))
-                        & (F.floor(F.col("__ry") / F.lit(w)) == F.col("__ccy")),
-                        "leftsemi",
-                    )
-                results.append(
-                    _residual_bruteforce(
-                        r_sweep, res_rows, k, unresolved.schema["__lid"].dataType
-                    )
-                )
-                n_residual = len(res_rows)
-                break
+                    for r in res_rows
+                    for dx in (-1, 0, 1)
+                    for dy in (-1, 0, 1)
+                }
+            )
+            cdf = r0.sparkSession.createDataFrame(
+                cells, "__ccx long, __ccy long"
+            )
+            r_sweep = r0.join(
+                F.broadcast(cdf),
+                (F.floor(F.col("__rx") / F.lit(w)) == F.col("__ccx"))
+                & (F.floor(F.col("__ry") / F.lit(w)) == F.col("__ccy")),
+                "leftsemi",
+            )
+        results.append(
+            _residual_bruteforce(
+                r_sweep, res_rows, k, residual.schema["__lid"].dataType
+            )
+        )
+        n_residual = len(res_rows)
     log.debug(
         "sjoin_knn: %d rounds, residual sweep %s", rounds,
         f"on {n_residual} rows" if n_residual else "not run",

@@ -232,7 +232,7 @@ SHARED = [
 ]
 
 
-@pytest.mark.parametrize(
+CALLS = pytest.mark.parametrize(
     "call",
     [
         lambda d, b: ngram_overlap(d, b, n=3),
@@ -243,8 +243,29 @@ SHARED = [
     ids=["ngram_overlap", "ngram_overlap_bloom", "decontaminate",
          "decontaminate-bloom"],
 )
+
+
+@CALLS
 def test_shared_id_raises_naming_it(spark, call):
     docs = spark.createDataFrame(SHARED, "doc_id long, text string")
     bench = spark.createDataFrame(BENCH, "doc_id long, text string")
     with pytest.raises(Exception, match="requires a unique doc_id: 1 names"):
+        call(docs, bench).collect()
+
+
+# unchecked, decontaminate kept all three rows, the fully contaminated
+# first one included (no null id matches its anti-join), and
+# ngram_overlap scored both null-id rows as one document
+NULL_ID = [
+    (None, "alpha beta gamma delta epsilon zeta"),
+    (None, "totally different words here none shared at all"),
+    (2, "short doc"),
+]
+
+
+@CALLS
+def test_null_id_raises(spark, call):
+    docs = spark.createDataFrame(NULL_ID, "doc_id long, text string")
+    bench = spark.createDataFrame(BENCH, "doc_id long, text string")
+    with pytest.raises(Exception, match="requires a non-null doc_id"):
         call(docs, bench).collect()

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spatialpandas_spark import st_point
+from spatialpandas_spark.operators import knn as knnmod
 from spatialpandas_spark.operators.knn import sjoin_knn, sjoin_nearest
 
 KNN_LOG = "spatialpandas_spark.operators.knn"
@@ -81,6 +82,14 @@ def _rounds(caplog):
     return out
 
 
+def _both_paths(monkeypatch):
+    """Yield once with kNN's first-round rule off (the grid runs round 0)
+    and once with it at its default (a small query side sweeps first)."""
+    for bound in (0, knnmod._SWEEP_FIRST_PAIRS):
+        monkeypatch.setattr(knnmod, "_SWEEP_FIRST_PAIRS", bound)
+        yield
+
+
 def _got(df):
     out = {}
     for r in df.collect():
@@ -91,7 +100,8 @@ def _got(df):
 
 
 @pytest.mark.parametrize("cell", [0.5, 2.0, 1000.0])
-def test_knn_matches_brute_force_random(spark, cell):
+def test_knn_matches_brute_force_random(spark, monkeypatch, cell):
+    monkeypatch.setattr(knnmod, "_SWEEP_FIRST_PAIRS", 0)  # the grid rounds
     rng = np.random.default_rng(17)
     lpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 100, (40, 2)))]
     rpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 100, (200, 2)))]
@@ -99,20 +109,22 @@ def test_knn_matches_brute_force_random(spark, cell):
     assert got == _oracle(lpts, rpts, 5)
 
 
-def test_knn_sparse_neighborhoods_escalate(spark):
+def test_knn_sparse_neighborhoods_escalate(spark, monkeypatch):
     # clustered rights far from some lefts: round 0 cannot resolve them
+    monkeypatch.setattr(knnmod, "_SWEEP_FIRST_PAIRS", 0)
     lpts = [(0, 0.0, 0.0), (1, 500.0, 500.0)]
     rpts = [(i, 500.0 + i * 0.1, 500.0) for i in range(10)]
     got = _got(sjoin_knn(_mk(spark, lpts, "lid"), _mk(spark, rpts, "rid"), k=3, cell_size=1.0))
     assert got == _oracle(lpts, rpts, 3)
 
 
-def test_knn_k_larger_than_right(spark):
+def test_knn_k_larger_than_right(spark, monkeypatch):
     lpts = [(0, 0.0, 0.0)]
     rpts = [(0, 1.0, 0.0), (1, 2.0, 0.0)]
-    got = _got(sjoin_knn(_mk(spark, lpts, "lid"), _mk(spark, rpts, "rid"), k=5, cell_size=1.0))
-    assert got == _oracle(lpts, rpts, 5)
-    assert len(got[0]) == 2
+    for _ in _both_paths(monkeypatch):
+        got = _got(sjoin_knn(_mk(spark, lpts, "lid"), _mk(spark, rpts, "rid"), k=5, cell_size=1.0))
+        assert got == _oracle(lpts, rpts, 5)
+        assert len(got[0]) == 2
 
 
 def test_knn_empty_right(spark):
@@ -126,9 +138,11 @@ def test_knn_empty_right(spark):
     assert df.count() == 0
 
 
-def test_knn_auto_cell_size_matches_brute_force(spark):
+def test_knn_auto_cell_size_matches_brute_force(spark, monkeypatch):
     # omitted cell_size: estimated from a sampled k-th-NN distance, and
-    # the join stays exact regardless of the estimate's quality
+    # the join stays exact regardless of the estimate's quality (the
+    # first-round rule is off: a sweep-first call estimates nothing)
+    monkeypatch.setattr(knnmod, "_SWEEP_FIRST_PAIRS", 0)
     rng = np.random.default_rng(23)
     lpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 50, (30, 2)))]
     rpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 50, (300, 2)))]
@@ -146,11 +160,12 @@ def test_estimate_cell_size_near_kth_nn_distance(spark):
     assert 0.3 <= est <= 3.0
 
 
-def test_knn_tie_break_by_rid(spark):
+def test_knn_tie_break_by_rid(spark, monkeypatch):
     lpts = [(0, 0.0, 0.0)]
     rpts = [(5, 1.0, 0.0), (2, -1.0, 0.0), (9, 0.0, 1.0)]  # all dist2 = 1
-    got = _got(sjoin_knn(_mk(spark, lpts, "lid"), _mk(spark, rpts, "rid"), k=2, cell_size=1.0))
-    assert got[0] == [(2, 1.0), (5, 1.0)]
+    for _ in _both_paths(monkeypatch):
+        got = _got(sjoin_knn(_mk(spark, lpts, "lid"), _mk(spark, rpts, "rid"), k=2, cell_size=1.0))
+        assert got[0] == [(2, 1.0), (5, 1.0)]
 
 
 def test_sjoin_nearest_matches_bruteforce_oracle(spark):
@@ -309,31 +324,44 @@ def test_sjoin_dwithin_boundary_and_validation(spark):
 
 
 @pytest.mark.parametrize(
-    "kwargs, rounds",
+    "kwargs, bound, rounds, sweep",
     [
         # grid only: round 2 runs a jump (level 1) beside the quad-step
         # (level 2); the isolated queries quad-step through empty
         # neighborhoods (4, 6), then jump once they have k candidates (8)
         (
-            {"residual_bf_rows": 0},
+            {"residual_bf_rows": 0}, None,
             [([0], 18), ([1, 2], 5), ([4], 2), ([6], 2), ([8], 0)],
+            "not run",
         ),
         # the radius-covering level is 5: the last round pins nothing,
         # and the isolated queries, still empty there, are dropped
         (
-            {"residual_bf_rows": 0, "max_radius": 8.0},
+            {"residual_bf_rows": 0, "max_radius": 8.0}, None,
             [([0], 18), ([1, 2], 5), ([4], 2), ([5], None)],
+            "not run",
         ),
-        # default threshold: the residual sweep takes all 18 after round 1
-        ({}, [([0], 18)]),
+        # 23 queries are more than the sweep takes: round 0 runs on the
+        # grid, then the residual sweep takes all 18 after round 1
+        ({"residual_bf_rows": 20}, None, [([0], 18)], "on 18 rows"),
+        # default arguments: 23 x 120 pairs is a small sweep, so every
+        # query goes to the residual sweep and no grid round runs
+        ({}, None, [], "on 23 rows"),
+        # one pair above the first-round bound: the grid runs round 0
+        ({}, 23 * 120 - 1, [([0], 18)], "on 18 rows"),
     ],
-    ids=["grid", "radius-cutoff", "residual"],
+    ids=["grid", "radius-cutoff", "residual", "sweep-first", "above-bound"],
 )
-def test_knn_fused_rounds_match_brute_force(spark, caplog, kwargs, rounds):
+def test_knn_fused_rounds_match_brute_force(
+    spark, caplog, monkeypatch, kwargs, bound, rounds, sweep
+):
     """Every round is one pinned, ranked frame carrying the resolve verdict
     and the next level, with a placeholder row for lids whose
     neighborhood is empty. Exercised here: level jumps, quad-steps, empty
-    neighborhoods, the max_radius cutoff drop and the residual sweep."""
+    neighborhoods, the max_radius cutoff drop, the residual sweep after a
+    round and, for a small whole query side, before any round."""
+    if bound is not None:
+        monkeypatch.setattr(knnmod, "_SWEEP_FIRST_PAIRS", bound)
     caplog.set_level(logging.DEBUG, logger=KNN_LOG)
     lpts, rpts = multi_round_points()
     got = _got(
@@ -343,14 +371,18 @@ def test_knn_fused_rounds_match_brute_force(spark, caplog, kwargs, rounds):
         )
     )
     assert _rounds(caplog) == rounds
+    assert caplog.records[-1].getMessage() == (
+        f"sjoin_knn: {len(rounds)} rounds, residual sweep {sweep}"
+    )
     assert got == _oracle(lpts, rpts, 3, kwargs.get("max_radius"))
     if "max_radius" in kwargs:
         assert len(got) == len(lpts) - 2  # both isolated queries dropped
 
 
 def test_knn_logs_rounds_and_residual_switch(spark, caplog):
-    """DEBUG records name the cell size and its source, the level bounds,
-    every round's levels and unresolved count, and the residual switch."""
+    """DEBUG records name the first-round choice with its inputs, the cell
+    size and its source, the level bounds, every round's levels and
+    unresolved count, and the residual switch."""
     caplog.set_level(logging.DEBUG, logger=KNN_LOG)
     lpts, rpts = multi_round_points()
     got = _got(
@@ -362,6 +394,8 @@ def test_knn_logs_rounds_and_residual_switch(spark, caplog):
     assert got == _oracle(lpts, rpts, 3)
     msgs = [r.getMessage() for r in caplog.records if r.name == KNN_LOG]
     assert msgs == [
+        "sjoin_knn: first round grid (n_left=23, n_right=120, pairs=2760, "
+        "sweep bound 33554432 pairs)",
         "sjoin_knn: cell_size=0.25 (given), max_lvl=10, cutoff_lvl=None",
         "sjoin_knn round 1: levels [0], 18 unresolved",
         "sjoin_knn round 2: levels [1, 2], 5 unresolved",
@@ -403,9 +437,13 @@ def test_radius_covering_calls_run_no_spark_job(spark):
         ("string", lambda i: f"q{i}"),
     ],
 )
-def test_knn_keeps_left_id_type_through_residual_sweep(spark, caplog, id_type, make_id):
+def test_knn_keeps_left_id_type_through_residual_sweep(
+    spark, caplog, monkeypatch, id_type, make_id
+):
     """The residual sweep declares the left id type of its input: the
-    output id type equals the caller's, whichever path resolves a row."""
+    output id type equals the caller's, whichever path resolves a row —
+    a grid round then the sweep (the output unions both), or the sweep
+    alone under the first-round rule."""
     caplog.set_level(logging.DEBUG, logger=KNN_LOG)
     rng = np.random.default_rng(31)
     rpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 20, (60, 2)))]
@@ -413,7 +451,8 @@ def test_knn_keeps_left_id_type_through_residual_sweep(spark, caplog, id_type, m
     qs = [*rng.uniform(0, 20, (12, 2)), (500.0, 500.0)]
     lpts = [(make_id(i), float(x), float(y)) for i, (x, y) in enumerate(qs)]
     left = _mk(spark, lpts, "lid", id_type)
-    out = sjoin_knn(left, _mk(spark, rpts, "rid"), k=3, cell_size=4.0)
-    assert out.schema["lid"].dataType == left.schema["lid"].dataType
-    assert _got(out) == _oracle(lpts, rpts, 3)
-    assert "residual sweep on" in caplog.records[-1].getMessage()
+    for _ in _both_paths(monkeypatch):
+        out = sjoin_knn(left, _mk(spark, rpts, "rid"), k=3, cell_size=4.0)
+        assert out.schema["lid"].dataType == left.schema["lid"].dataType
+        assert _got(out) == _oracle(lpts, rpts, 3)
+        assert "residual sweep on" in caplog.records[-1].getMessage()
